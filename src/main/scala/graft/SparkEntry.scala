@@ -1889,29 +1889,26 @@ object Queries {
     * plane (P = p^k + k·p^(k−1)(1−p), p = 1 − θ/π); each qualifying
     * pair meets on exactly one key, so no distinct is needed. The
     * DuckDB oracle applies the identical bucket + hamming-≤1 rule.
+    * Returns a lazy plan (no Spark job at call time): both join legs
+    * read the one embeddings scan, and the bucket kernel is a cheap
+    * per-row projection, so nothing is cached.
     */
-  def embedNearDup(s: SparkSession, dir: String, threshold: Double,
-      materialize: Boolean = true): DataFrame = {
+  def embedNearDup(s: SparkSession, dir: String, threshold: Double): DataFrame = {
     import graft.rag.{AnnLsh, Similarity, VectorExprs}
     val bucketMask = (1 << NeardupPlanes) - 1
     val base = SparkEntry.embeddings(s, dir).select(col("vec_id"),
       VectorExprs.l2Normalize(col("embedding").cast("array<double>")).as("v"),
       AnnLsh.bucketCol(col("embedding").cast("array<double>"))
         .bitwiseAND(lit(bucketMask)).as("bucket"))
-    if (materialize) { base.persist(); base.count() } // sketch once, not per leg
     val probes = array((col("bucket") +:
       (0 until NeardupPlanes).map(p => col("bucket").bitwiseXOR(lit(1 << p)))): _*)
     val e = base.select(col("vec_id").as("a_id"), col("v").as("va"),
       explode(probes).as("key"))
     val f = base.select(col("vec_id").as("b_id"), col("v").as("vb"),
       col("bucket").as("key"))
-    val pairs = e.join(f, Seq("key")).filter(col("a_id") < col("b_id"))
+    e.join(f, Seq("key")).filter(col("a_id") < col("b_id"))
       .filter(Similarity.dot(col("va"), col("vb")) >= threshold)
       .select("a_id", "b_id")
-    if (!materialize) return pairs // lazy plan, for shape audits
-    val out = pairs.localCheckpoint()
-    base.unpersist()
-    out
   }
 
   /** the EXACT all-pairs near-dup — the recall baseline the blocked

@@ -55,7 +55,7 @@ object BenchExtra {
       turns.foreach(t => sink += graft.extract.ExtractPipeline.extract(t).length)
     }
     (0 until 3).foreach { rep =>
-      var tParse, tHead, tOrder, tEmit, tLint = 0L
+      var tParse, tHead, tOrder, tEmit = 0L
       var t0 = 0L
       turns.foreach { t =>
         t0 = System.nanoTime()
@@ -69,17 +69,15 @@ object BenchExtra {
           val ordered = graft.extract.ReadingOrder.order(blocks)
           tOrder += System.nanoTime() - t0
           t0 = System.nanoTime()
-          // fused emit+lint+join — the pipeline's real path (tLint
-          // stays 0; the two-step form lives on only in emit()'s
-          // element consumers)
+          // fused emit+lint+join — the pipeline's real path
           sink += graft.extract.MarkdownEmitter.emitNormalized(ordered, hm).length
           tEmit += System.nanoTime() - t0
         }
       }
-      val tot = (tParse + tHead + tOrder + tEmit + tLint) / 1e9
+      val tot = (tParse + tHead + tOrder + tEmit) / 1e9
       println(f"rep $rep: total ${tot}%6.3f s (${turns.length / tot}%.0f turns/s/core) " +
         f"parse ${tParse / 1e9}%5.3f head ${tHead / 1e9}%5.3f order ${tOrder / 1e9}%5.3f " +
-        f"emit ${tEmit / 1e9}%5.3f lint ${tLint / 1e9}%5.3f")
+        f"emit ${tEmit / 1e9}%5.3f")
     }
     println(s"sink $sink")
   }
@@ -110,235 +108,12 @@ object BenchExtra {
     val m = new Metrics
     spark.sparkContext.addSparkListener(m)
 
-    // ad-hoc lazy/variant shapes for same-window A/B comparison (the
-    // registered queries materialize, hiding the internal plan)
-    import org.apache.spark.sql.functions.col
-    val variants: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-      "decon_bloom_lazy" -> ((s, dir) => {
-        val d = s.read.parquet(s"$dir/documents.parquet")
-        graft.text.Corpus.decontaminateBloom(
-          d.filter(col("doc_id") % 20 =!= 0), d.filter(col("doc_id") % 20 === 0),
-          "doc_id", "text", n = 4, materialize = false)
-      }),
-      "ngram_nopersist" -> ((s, dir) =>
-        graft.text.Dedup.ngramJaccard(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-          threshold = 0.5, materialize = false).localCheckpoint()),
-      "ngram_lazy" -> ((s, dir) =>
-        graft.text.Dedup.ngramJaccard(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-          threshold = 0.5, materialize = false)),
-      "minhash_nopersist" -> ((s, dir) =>
-        graft.text.Dedup.minhashPairs(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-          materialize = false).localCheckpoint()),
-      "simhash_nopersist" -> ((s, dir) =>
-        graft.text.Dedup.simhashPairs(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-          maxHamming = 3, materialize = false).localCheckpoint()),
-      "banded_nopersist" -> ((s, dir) =>
-        graft.text.Dedup.ngramJaccardBanded(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-          threshold = 0.5, materialize = false).localCheckpoint()),
-      "dupspans_nopersist" -> ((s, dir) =>
-        graft.text.Dedup.dupSpans(
-          s.read.parquet(s"$dir/documents.parquet")
-            .select(col("doc_id"), col("text")), "doc_id", "text",
-          materialize = false).localCheckpoint()),
-      // dup_spans_incremental sub-plans, isolating where CPU goes
-      "spansinc_batchonly" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val d = s.read.parquet(s"$dir/documents.parquet")
-        val b0 = d.filter(col("doc_id") % 10 === 3)
-          .select(col("doc_id"),
-            concat_ws(" ", lit("newa newb newc"),
-              concat_ws(" ", slice(graft.text.Dedup.wordsCol(col("text")), 1, 12)),
-              lit("trail1 trail2")).as("text"))
-        val batch = b0.select(col("doc_id"),
-          when(col("doc_id") % 20 === 3,
-            concat_ws(" ", col("text"), lit("shared batch boilerplate sentence repeated across half of this ingest batch")))
-            .otherwise(col("text")).as("text"))
-        graft.util.Staged.posexplodeOnce(
-          batch.repartition(32).select(col("doc_id").cast("long").as("doc_id"),
-            graft.text.TextExprs.shingleHashes(col("text"),
-              distinct = false, n = 8).as("gs")),
-          Seq(col("doc_id")), col("gs"), "pos", "g").localCheckpoint()
-      }),
-      "probe_lcp_agg" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val occ = graft.util.Staged.posexplodeOnce(
-          s.range(0, 5000, 1, 32).select(col("id").as("doc_id"),
-            graft.text.TextExprs.shingleHashes(
-              concat_ws(" ", lit("a b c d e f g h i j k l m n o p q r"),
-                col("id").cast("string")), distinct = false, n = 8).as("gs")),
-          Seq(col("doc_id")), col("gs"), "pos", "g").localCheckpoint()
-        occ.groupBy("g").agg(count(lit(1)).as("c")).filter(col("c") > 100)
-      }),
-      "probe_nolcp_agg" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val occ = graft.util.Staged.posexplodeOnce(
-          s.range(0, 5000, 1, 32).select(col("id").as("doc_id"),
-            graft.text.TextExprs.shingleHashes(
-              concat_ws(" ", lit("a b c d e f g h i j k l m n o p q r"),
-                col("id").cast("string")), distinct = false, n = 8).as("gs")),
-          Seq(col("doc_id")), col("gs"), "pos", "g")
-        occ.groupBy("g").agg(count(lit(1)).as("c")).filter(col("c") > 100)
-      }),
-      "probe_lcp_proj" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val occ = graft.util.Staged.posexplodeOnce(
-          s.range(0, 5000, 1, 32).select(col("id").as("doc_id"),
-            graft.text.TextExprs.shingleHashes(
-              concat_ws(" ", lit("a b c d e f g h i j k l m n o p q r"),
-                col("id").cast("string")), distinct = false, n = 8).as("gs")),
-          Seq(col("doc_id")), col("gs"), "pos", "g").localCheckpoint()
-        occ.filter(col("g") =!= 0).select("doc_id")
-      }),
-      "probe_struct_agg" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val occ = graft.util.Staged.posexplodeOnce(
-          s.range(0, 5000, 1, 32).select(col("id").as("doc_id"),
-            graft.text.TextExprs.shingleHashes(
-              concat_ws(" ", lit("a b c d e f g h i j k l m n o p q r"),
-                col("id").cast("string")), distinct = false, n = 8).as("gs")),
-          Seq(col("doc_id")), col("gs"), "pos", "g").localCheckpoint()
-        val w = occ.groupBy("g")
-          .agg(min(struct(col("doc_id"), col("pos"))).as("w"),
-            count(lit(1)).as("cnt"))
-        occ.join(w, Seq("g"))
-          .filter(col("cnt") >= 2 &&
-            struct(col("doc_id"), col("pos")) =!= col("w"))
-          .select("doc_id", "pos")
-      }),
-      "spansinc_occjoin" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val d = s.read.parquet(s"$dir/documents.parquet")
-        val b0 = d.filter(col("doc_id") % 10 === 3)
-          .select(col("doc_id"),
-            concat_ws(" ", lit("newa newb newc"),
-              concat_ws(" ", slice(graft.text.Dedup.wordsCol(col("text")), 1, 12)),
-              lit("trail1 trail2")).as("text"))
-        val occ = graft.util.Staged.posexplodeOnce(
-          b0.repartition(32).select(col("doc_id").cast("long").as("doc_id"),
-            graft.text.TextExprs.shingleHashes(col("text"),
-              distinct = false, n = 8).as("gs")),
-          Seq(col("doc_id")), col("gs"), "pos", "g").localCheckpoint()
-        val w = occ.groupBy("g")
-          .agg(min(struct(col("doc_id"), col("pos"))).as("w"),
-            count(lit(1)).as("cnt"))
-        occ.join(w, Seq("g"))
-          .filter(col("cnt") >= 2 &&
-            struct(col("doc_id"), col("pos")) =!= col("w"))
-          .select("doc_id", "pos").localCheckpoint()
-      }),
-      "spansinc_corpusonly" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val d = s.read.parquet(s"$dir/documents.parquet")
-        graft.util.Staged.explodeOnce(
-          d.repartition(32).select(
-            graft.text.TextExprs.shingleHashes(col("text"),
-              distinct = false, n = 8).as("gs")),
-          Seq.empty, col("gs"), "g")
-          .groupBy("g").agg(count(lit(1)).as("c"))
-          .filter(col("c") > 1000000)
-      }),
-      // lazy shapes of the MATERIALIZING operators, dumped so the
-      // plan files show the shape that executes inside the
-      // localCheckpoint (the registered queries return Scan
-      // ExistingRDD). Same inputs as the registered queries.
-      "ngram_jaccard_lazy" -> ((s, dir) =>
-        graft.text.Dedup.ngramJaccard(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-          threshold = 0.5, materialize = false)),
-      "dedup_minhash_lazy" -> ((s, dir) =>
-        graft.text.Dedup.minhashPairs(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-          materialize = false)),
-      "simhash_pairs_lazy" -> ((s, dir) =>
-        graft.text.Dedup.simhashPairs(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-          maxHamming = 3, materialize = false)),
-      "ngram_jaccard_banded_lazy" -> ((s, dir) =>
-        graft.text.Dedup.ngramJaccardBanded(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-          threshold = 0.5, materialize = false)),
-      "dup_spans_lazy" -> ((s, dir) =>
-        // raw docs in place of the registered query's span fixture —
-        // identical plan shape (the fixture is a projection)
-        graft.text.Dedup.dupSpans(
-          s.read.parquet(s"$dir/documents.parquet")
-            .select(col("doc_id"), col("text")),
-          "doc_id", "text", materialize = false)),
-      // the claim-relevant part of dupSpansIncremental (occ election +
-      // flipped corpus semi-join), lazily, minus the final per-doc
-      // window merge — the operator itself materializes eagerly
-      "dup_spans_incremental_lazy" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val d = s.read.parquet(s"$dir/documents.parquet")
-        val batch = d.filter(col("doc_id") % 10 === 3)
-          .select(col("doc_id"), col("text"))
-        val occ = graft.util.Staged.posexplodeOnce(
-          batch.repartition(32).select(col("doc_id").cast("long").as("doc_id"),
-            graft.text.TextExprs.shingleHashes(col("text"),
-              distinct = false, n = 8).as("gs")),
-          Seq(col("doc_id")), col("gs"), "pos", "g")
-        val batchGramSet = occ.select("g").distinct()
-        val corpusHits = graft.util.Staged.explodeOnce(
-          d.repartition(32).select(
-            graft.text.TextExprs.shingleHashes(col("text"),
-              distinct = false, n = 8).as("gs")),
-          Seq.empty, col("gs"), "g")
-          .join(broadcast(batchGramSet), Seq("g"), "left_semi")
-          .distinct()
-          .withColumn("in_corpus", lit(true))
-        val batchWinners = occ.groupBy("g")
-          .agg(min(struct(col("doc_id"), col("pos"))).as("w"),
-            count(lit(1)).as("cnt"))
-        occ.join(batchWinners, Seq("g"))
-          .join(corpusHits, Seq("g"), "left")
-          .filter(coalesce(col("in_corpus"), lit(false)) ||
-            (col("cnt") >= 2 &&
-              struct(col("doc_id"), col("pos")) =!= col("w")))
-          .select("doc_id", "pos")
-      }),
-      "decontaminate_bloom_lazy" -> ((s, dir) => {
-        val d = s.read.parquet(s"$dir/documents.parquet")
-        graft.text.Corpus.decontaminateBloom(
-          d.filter(col("doc_id") % 20 =!= 0), d.filter(col("doc_id") % 20 === 0),
-          "doc_id", "text", n = 4, materialize = false)
-      }),
-      "dupspans_persist" -> ((s, dir) =>
-        graft.text.Dedup.dupSpans(
-          s.read.parquet(s"$dir/documents.parquet")
-            .select(col("doc_id"), col("text")), "doc_id", "text")),
-      // approximates dupSpans with occ localCheckpoint'd instead of
-      // persisted (no mergeWindows — private; the window is small)
-      "dupspans_lcp" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val k = 8
-        val occ = graft.util.Staged.posexplodeOnce(
-          s.read.parquet(s"$dir/documents.parquet")
-            .repartition(32)
-            .select(col("doc_id").cast("long").as("doc_id"),
-              graft.text.TextExprs.shingleHashes(col("text"),
-                distinct = false, n = k).as("gs")),
-          Seq(col("doc_id")), col("gs"), "pos", "g").localCheckpoint()
-        val winners = occ.groupBy("g")
-          .agg(min(struct(col("doc_id"), col("pos"))).as("w"),
-            count(lit(1)).as("cnt"))
-          .filter(col("cnt") >= 2).select("g", "w")
-        occ.join(winners, Seq("g"))
-          .filter(struct(col("doc_id"), col("pos")) =!= col("w"))
-          .select("doc_id", "pos").localCheckpoint()
-      }))
-    def lookup(name: String) =
-      variants.getOrElse(name, graft.SparkEntry.queries(name))
     val names =
       if (args.nonEmpty) args.toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
     println(f"${"query"}%-24s ${"sec"}%8s ${"jobs"}%5s ${"stages"}%7s ${"taskSec"}%8s ${"shufRdMB"}%9s ${"shufWrMB"}%9s")
     names.foreach { name =>
-      val fn = lookup(name)
+      val fn = graft.SparkEntry.queries(name)
       spark.sparkContext.setJobDescription(s"bench-extra: $name")
       explainDir.foreach { dir =>
         val df = fn(spark, sfDir)

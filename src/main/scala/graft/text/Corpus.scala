@@ -40,13 +40,16 @@ object Corpus {
     * or prescreen with a bloom filter of the benchmark set.
     */
   /** the benchmark's distinct n-gram hash set — ONE definition shared
-    * by the batch op and the streaming twin (a copy already let their
+    * by the batch ops and the streaming twin (a copy already let their
     * gram widths drift once)
     */
   def benchmarkGrams(bench: DataFrame, textCol: String, n: Int): DataFrame =
+    benchmarkGramRows(bench, textCol, n).distinct()
+
+  /** one row per (benchmark document, distinct n-gram hash) */
+  private def benchmarkGramRows(bench: DataFrame, textCol: String, n: Int): DataFrame =
     graft.util.Staged.explodeOnce(bench, Seq.empty,
       TextExprs.shingleHashes(col(textCol), distinct = true, n), "g")
-      .distinct()
 
   def decontaminate(train: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, n: Int = 5): DataFrame = {
@@ -98,12 +101,13 @@ object Corpus {
     * ADVICE flagged (nothing to unpersist; the task binary's
     * lifecycle is Spark's).
     *
-    * The benchmark gram set is persisted for the call's duration (three
-    * consumers: sizing count, bloom build, exact verify) and released
-    * before returning — the result is localCheckpoint-materialized
-    * first, so no lazily-returned frame ever depends on the cache (the
-    * decontaminateStream persist leak was exactly that trap;
-    * materialize=false restores the fully-lazy recompute shape).
+    * Calling it runs the two jobs that produce plan INPUTS — the
+    * sizing count (skipped when `expectedGrams` > 0) and the bloom
+    * build, whose bits become a plan literal — and returns the lazy
+    * verify plan; the caller's action runs the prescreen, the exact
+    * semi-join and the per-doc aggregate. The benchmark gram set is
+    * persisted only around those two input jobs and released before
+    * returning, so the returned plan never depends on a cache.
     *
     * @param expectedGrams caller's estimate of the benchmark's
     *   distinct gram count, sizing the filter without a counting
@@ -113,59 +117,37 @@ object Corpus {
     */
   def decontaminateBloom(train: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, n: Int = 5, fpp: Double = 0.01,
-      expectedGrams: Long = 0L, materialize: Boolean = true): DataFrame = {
+      expectedGrams: Long = 0L): DataFrame = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
     import org.apache.spark.sql.GraftExprBridge.{toColumn, toExpression}
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    // the benchmark gram set has THREE consumers (sizing count, bloom
-    // build, exact verify) — persist it for the call's duration so the
-    // benchmark-side kernel runs once instead of three times. The cache
-    // is benchmark-sized (MBs by definition) and is RELEASED before
-    // returning: the contamination result — one narrow row per
-    // contaminated doc — is materialized via localCheckpoint first (the
-    // dedup-family pattern), which also spares every caller's action a
-    // recompute of the whole two-phase plan. materialize=false returns
-    // the lazy plan for shape audits, re-deriving the benchmark per
-    // consumer like the pre-r6 shape did.
-    val benchGrams = benchmarkGrams(bench, textCol, n)
-    if (!materialize)
-      return decontaminateBloomBody(train, benchGrams, idCol, textCol, n,
-        fpp, expectedGrams)
+    val gramRows = benchmarkGramRows(bench, textCol, n)
+    val benchGrams = gramRows.distinct()
+    // the sizing count and the bloom build share the benchmark-side
+    // kernel — cache it for those two jobs only; unpersist in finally
+    // so a failing job cannot pin it for a resident engine's lifetime
     benchGrams.persist()
-    // unpersist in finally: a failing eager action (count, bloom head,
-    // result checkpoint) must not leave the cache pinned for the
-    // session lifetime in a resident engine
-    try {
-      val out = decontaminateBloomBody(train, benchGrams, idCol, textCol,
-        n, fpp, expectedGrams).localCheckpoint()
-      out
+    val bfBytes = try {
+      val expected0 =
+        if (expectedGrams > 0) expectedGrams else math.max(benchGrams.count(), 1L)
+      // BloomFilterAggregate hard-errors above the session's runtime-
+      // bloom ceilings; clamp instead — an undersized filter only
+      // degrades fpp (more exact-verify work), never correctness
+      val conf = train.sparkSession.conf
+      val expected = math.min(expected0,
+        conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumItems").toLong)
+      val numBits = math.min(
+        org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(expected, fpp),
+        conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits").toLong)
+      // one distributed pass; the aggregate's TypedImperativeAggregate
+      // state is the filter itself, merged combine-style — the returned
+      // row is the serialized bits (bounded: numBits/8 bytes)
+      benchGrams.agg(toColumn(
+          new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
+            toExpression(col("g")), Literal(expected), Literal(numBits))
+            .toAggregateExpression()).as("bf"))
+        .head().getAs[Array[Byte]](0)
     } finally benchGrams.unpersist()
-  }
-
-  private def decontaminateBloomBody(train: DataFrame, benchGrams: DataFrame,
-      idCol: String, textCol: String, n: Int, fpp: Double,
-      expectedGrams: Long): DataFrame = {
-    import org.apache.spark.sql.GraftExprBridge.{toColumn, toExpression}
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    val expected0 =
-      if (expectedGrams > 0) expectedGrams else math.max(benchGrams.count(), 1L)
-    // BloomFilterAggregate hard-errors above the session's runtime-
-    // bloom ceilings; clamp instead — an undersized filter only
-    // degrades fpp (more exact-verify work), never correctness
-    val conf = train.sparkSession.conf
-    val expected = math.min(expected0,
-      conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumItems").toLong)
-    val numBits = math.min(
-      org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(expected, fpp),
-      conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits").toLong)
-    // one distributed pass; the aggregate's TypedImperativeAggregate
-    // state is the filter itself, merged combine-style — the returned
-    // row is the serialized bits (bounded: numBits/8 bytes)
-    val bfBytes = benchGrams.agg(toColumn(
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          toExpression(col("g")), Literal(expected), Literal(numBits))
-          .toAggregateExpression()).as("bf"))
-      .head().getAs[Array[Byte]](0)
     val prescreen = toColumn(BloomFilterMightContain(
       Literal(bfBytes, org.apache.spark.sql.types.BinaryType),
       toExpression(col("g"))))
@@ -174,7 +156,9 @@ object Corpus {
     graft.util.Staged.explodeOnce(staged,
       Seq(col("doc_id"), size(col("gs")).as("n_grams")), col("gs"), "g")
       .filter(prescreen)
-      .join(benchGrams, Seq("g"), "left_semi")
+      // a semi-join needs no distinct build side: joining the gram rows
+      // saves the distinct's reduce stage
+      .join(gramRows, Seq("g"), "left_semi")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_hits"), min("n_grams").as("n_grams"))
       .select(col("doc_id"), col("n_hits"), col("n_grams"),

@@ -177,25 +177,13 @@ object Dedup {
     * reassembly exchange, whose state is bounded by the document's own
     * size (the C10 rule).
     *
-    * @param materialize eagerly materialize the paragraph decisions so
-    *   the text-free digest cache can be released before returning
-    *   (false forfeits the double-evaluation guard: the split+sha
-    *   pipeline inlines into both winner-join legs)
-    * @param reliable checkpoint the decisions to the session's
-    *   checkpoint dir (durable storage) instead of localCheckpoint —
-    *   survives executor loss / dynamic-allocation scale-down; the
-    *   right setting on a real cluster with non-static executors
+    * Returns a lazy plan: calling it runs no Spark job, and the
+    * caller's action runs the whole decision + reassembly pipeline
+    * with full lineage (an executor loss recomputes, it never fails).
     */
   def dedupParagraphs(docs: DataFrame, idCol: String, textCol: String,
-      minChars: Int = 50, materialize: Boolean = true,
-      reliable: Boolean = false): DataFrame = {
+      minChars: Int = 50): DataFrame = {
     require(minChars >= 1, s"minChars must be >= 1, got $minChars")
-    require(!reliable || materialize,
-      "reliable=true requires materialize=true (nothing to checkpoint otherwise)")
-    require(!reliable ||
-      docs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliable=true requires spark.sparkContext.setCheckpointDir — " +
-        "point it at cluster-durable storage (HDFS/object store)")
     val paras = filter(split(col(textCol), "\\n{2,}"), p => trim(p) =!= "")
     val ex = graft.util.Staged.posexplodeOnce(
       docs.select(col(idCol).as("doc_id"), paras.as("ps")),
@@ -214,30 +202,13 @@ object Dedup {
     val winners = hashed.filter(!col("short"))
       .groupBy("h")
       .agg(min(struct(col("doc_id"), col("idx"))).as("winner"))
-    val decisions0 = hashed
+    val decisions = hashed
       .join(winners, Seq("h"), "left")
       // a short paragraph's winner is null (excluded above) — the
       // `short ||` short-circuits it to kept either way
       .select(col("doc_id"), col("idx"),
         (col("short") ||
           struct(col("doc_id"), col("idx")) === col("winner")).as("keep"))
-    // decisions are 3 narrow fields per paragraph — materialize them
-    // so the reassembly plan (and every caller action on it) replays
-    // materialized decisions instead of re-running the winner
-    // election. Two materialization grades:
-    //   - localCheckpoint (default): blocks live on executors; lineage
-    //     is TRUNCATED, so an executor loss (or dynamic-allocation
-    //     scale-down) between here and the caller's action fails the
-    //     job instead of recomputing. Fine single-JVM / static clusters.
-    //   - reliable=true: rdd.checkpoint() to the session's checkpoint
-    //     dir — decisions survive any executor loss (they're on
-    //     durable storage, re-read not recomputed). Costs one write +
-    //     read of the 3-narrow-column frame; the 100 TB default when
-    //     running with dynamic allocation or spot executors.
-    val decisions =
-      if (materialize) {
-        if (reliable) decisions0.checkpoint() else decisions0.localCheckpoint()
-      } else decisions0
     ex.join(decisions, Seq("doc_id", "idx"))
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("long").as("n_paras"),
@@ -274,13 +245,12 @@ object Dedup {
 
   /** candidate pairs: same (band, band_key) bucket for any band.
     *
-    * The band table is materialized (persist + eager count) before the
-    * self-join — the production shape (signatures are a persisted
-    * sketch table), and it stops Catalyst from inlining the full
-    * sha256 signature pipeline into BOTH join legs.
+    * Returns a lazy plan (no Spark job at call time). The self-join's
+    * two legs plan identical exchanges on (band, key), which
+    * ReusedExchange dedups, so the sha256 signature kernel runs once
+    * per document inside the caller's action.
     */
-  def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
-      materialize: Boolean = true): DataFrame = {
+  def minhashPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // signatures via the native per-document kernel (TextKernels
     // .minhashSig): one pass over the text — tokenize, sha256 each
     // shingle once, fold the 16 mixed minima — entirely map-side. The
@@ -304,9 +274,7 @@ object Dedup {
     // the exchange output (and on a real cluster shuffle files are
     // served by the shuffle machinery, with none of the cross-executor
     // cold-fill races a lazily-filled cache has).
-    val raw = bandCandidates(bands)
-    if (!materialize) return raw // lazy plan, for shape audits
-    raw.localCheckpoint() // materialize the (small) result
+    bandCandidates(bands)
   }
 
   /** (id, sig) → exploded (id, band, key) band table. An empty
@@ -383,9 +351,10 @@ object Dedup {
     * J=0.9) — near-exact duplicates are caught, borderline pairs
     * sampled; ngramJaccard is the exhaustive (capped) path, and
     * ScaleShapeSpec measures the subset/recall relation between them.
+    * Returns a lazy plan (no Spark job at call time).
     */
   def ngramJaccardBanded(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double, materialize: Boolean = true): DataFrame = {
+      threshold: Double): DataFrame = {
     // no sketch persist: the band legs share one reused exchange; the
     // sa/sb attach legs each re-run the kernel map-side — measured
     // cheaper than the columnar cache round-trip it replaced (the
@@ -395,7 +364,7 @@ object Dedup {
       TextExprs.shingleHashes(col(textCol), distinct = true).as("sh"))
       .filter(size(col("sig")) > 0)
     val cand = bandCandidates(bandsOf(base.select(col("id"), col("sig"))))
-    val pairs = cand
+    cand
       .join(base.select(col("id").as("a_id"), col("sh").as("sa")), "a_id")
       .join(base.select(col("id").as("b_id"), col("sh").as("sb")), "b_id")
       .withColumn("common", size(array_intersect(col("sa"), col("sb"))))
@@ -404,8 +373,6 @@ object Dedup {
           .cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
-    if (!materialize) return pairs // lazy plan, for shape audits
-    pairs.localCheckpoint()
   }
 
   // ---- simhash ----
@@ -442,10 +409,11 @@ object Dedup {
     * block — equi-join on (block, block_value), verify full Hamming
     * inside the bucket. Output is identical to the all-pairs θ-join
     * (the blocking is exact, not approximate), but the join is an
-    * Exchange on a 15-bit key instead of an O(n²) cartesian.
+    * Exchange on a 15-bit key instead of an O(n²) cartesian. Returns a
+    * lazy plan (no Spark job at call time).
     */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int, materialize: Boolean = true): DataFrame = {
+      maxHamming: Int): DataFrame = {
     val nBlocks = maxHamming + 1
     require(maxHamming >= 0 && maxHamming < SimBits,
       s"maxHamming must be in [0, ${SimBits - 1}]")
@@ -470,13 +438,11 @@ object Dedup {
       col("blk"), col("key"))
     val b = blocks.select(col("id").as("b_id"), col("sim").as("sb"),
       col("blk"), col("key"))
-    val pairs = a.join(b, Seq("blk", "key")).filter(col("a_id") < col("b_id"))
+    a.join(b, Seq("blk", "key")).filter(col("a_id") < col("b_id"))
       .withColumn("hamming", bit_count(col("sa").bitwiseXOR(col("sb"))))
       .filter(col("hamming") <= maxHamming)
       .select("a_id", "b_id", "hamming")
       .distinct() // a pair can agree on several blocks
-    if (!materialize) return pairs // lazy plan, for shape audits
-    pairs.localCheckpoint()
   }
 
   // ---- near-dup clustering: connected components over pairs ----
@@ -528,6 +494,9 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, aCol: String = "a_id",
       bCol: String = "b_id", maxIters: Int = 25,
       driverMaxEdges: Long = 100000L): DataFrame = {
+    // the fast path's collect limit is an Int of DOUBLED edges
+    require(driverMaxEdges >= 0 && driverMaxEdges < Int.MaxValue / 2,
+      s"driverMaxEdges must be in [0, ${Int.MaxValue / 2 - 1}], got $driverMaxEdges")
     val caller = pairs.sparkSession
     val sc = caller.sparkContext
     // the iteration runs in a CHILD session (shared SparkContext, own
@@ -561,38 +530,38 @@ object Dedup {
         col(bCol).cast("long").as("v"))
       val edgesLazy =
         fwd.union(fwd.select(col("v").as("u"), col("u").as("v"))).distinct()
-      // size the per-round shuffles to the GRAPH, not the session: a
-      // near-dup edge set is usually orders of magnitude smaller than
-      // the corpus, and each join+agg+checkpoint round at corpus
-      // partitioning is pure task-scheduling overhead (measured 4.8s →
-      // ~1s at sf0.1); a 100 TB-corpus edge set raises `parts` back to
-      // full parallelism (Long math — an Int division would wrap
-      // negative around 10^14 edges and collapse to one partition)
-      val nEdges = edgesLazy.count()
-      if (nEdges == 0) // no pairs → no components; keep the contract total
+      // small-graph short circuit: near-dup graphs are usually MUCH
+      // smaller than the corpus (dup clusters, not a social graph) —
+      // at or below the threshold, collecting the edge list and
+      // running driver union-find replaces ~5 Spark jobs PER ROUND
+      // (measured 6.1 s → sub-second at sf0.1). ONE bounded collect
+      // both decides the path and fetches the edges, so a lazy `pairs`
+      // plan is evaluated once on this path (a count followed by a
+      // collect would run it twice). The bound is on what's collected:
+      // 100k undirected edges ≈ 3 MB of longs, always driver-safe;
+      // anything larger takes the distributed pointer-jumping path
+      // below. The limit counts the DOUBLED rows.
+      val maxRows = 2 * driverMaxEdges.toInt
+      val head = edgesLazy.limit(maxRows + 1).collect()
+      if (head.isEmpty) // no pairs → no components; keep the contract total
         return caller.createDataFrame(sc.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType.fromDDL(
             "id bigint, component bigint"))
-      // small-graph short circuit: near-dup graphs are usually MUCH
-      // smaller than the corpus (dup clusters, not a social graph) —
-      // below the threshold, collecting the edge list and running
-      // driver union-find replaces ~5 Spark jobs PER ROUND with one
-      // collect (measured 6.1 s → sub-second at sf0.1). The bound is
-      // on what's collected: 100k undirected edges ≈ 3 MB of longs,
-      // always driver-safe; anything larger takes the distributed
-      // pointer-jumping path below. nEdges counts the DOUBLED rows.
-      // The fast path never checkpoints: `pairs` is usually already
-      // materialized by its producer, so re-running the tiny
-      // union+distinct for the collect is cheaper than writing
-      // checkpoint blocks for it; only the iterative path (which
-      // reads the edges every round) materializes the edge list.
-      if (nEdges <= 2L * driverMaxEdges) {
-        val collected = edgesLazy.collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
-        val labels = unionFind(collected).toSeq
+      if (head.length <= maxRows) {
+        val labels = unionFind(head.map(r => (r.getLong(0), r.getLong(1)))).toSeq
         return caller.createDataFrame(labels).toDF("id", "component")
       }
+      // cluster-sized graph: the iterative path reads the edges every
+      // round, so it materializes them once (a second evaluation of the
+      // input, amortised over the rounds) and sizes the per-round
+      // shuffles to the GRAPH, not the session — each join+agg+
+      // checkpoint round at corpus partitioning is pure task-scheduling
+      // overhead (measured 4.8s → ~1s at sf0.1); a 100 TB-corpus edge
+      // set raises `parts` back to full parallelism (Long math — an Int
+      // division would wrap negative around 10^14 edges and collapse to
+      // one partition)
       val (edges0, edges0Key) = trackedCheckpoint(edgesLazy)
+      val nEdges = edges0.count()
       val parts = math.max(1L, math.min(
         sc.defaultParallelism.toLong, nEdges / 50000L + 1L)).toInt
       session.conf.set("spark.sql.shuffle.partitions", parts)
@@ -680,11 +649,11 @@ object Dedup {
     * sizes to the index rows costs a full extra exchange by id, which
     * at this join's layout outweighs the candidate rows it would
     * prune — the legs below reuse the capped index's single by-`sh`
-    * repartition with NO further exchange.)
+    * repartition with NO further exchange.) Returns a lazy plan (no
+    * Spark job at call time).
     */
   def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double, maxDf: Int = 100,
-      materialize: Boolean = true): DataFrame = {
+      threshold: Double, maxDf: Int = 100): DataFrame = {
     // the index key is the 60-bit shingle HASH, not the string: every
     // downstream shuffle (df count, inverted-index self-join, pair agg)
     // moves 8-byte longs instead of ~25-byte strings, and join equality
@@ -758,15 +727,13 @@ object Dedup {
     val b = sh.select(col("id").as("b_id"), col("sh"))
     val common = a.join(b, Seq("sh")).filter(col("a_id") < col("b_id"))
       .groupBy("a_id", "b_id").agg(count(lit(1)).as("common"))
-    val pairs = common
+    common
       .join(sizes.withColumnRenamed("id", "a_id").withColumnRenamed("n", "na"), "a_id")
       .join(sizes.withColumnRenamed("id", "b_id").withColumnRenamed("n", "nb"), "b_id")
       .withColumn("jaccard",
         col("common") / (col("na") + col("nb") - col("common")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
-    if (!materialize) return pairs // lazy plan, for shape audits
-    pairs.localCheckpoint()
   }
 
   // ---- span-level exact substring dedup ----
@@ -799,23 +766,11 @@ object Dedup {
     * shuffle-native one, at the cost of fixing a minimum match
     * length of k tokens.
     *
-    * @param materialize checkpoint the (small) span frame so callers'
-    *   actions replay materialized spans instead of re-running the
-    *   election — false returns the fully lazy plan (shape audits)
-    * @param reliable checkpoint spans to the session's checkpoint dir
-    *   instead of localCheckpoint (the dedupParagraphs trade: survives
-    *   executor loss under dynamic allocation)
+    * Returns a lazy plan (no Spark job at call time).
     */
   def dupSpans(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, materialize: Boolean = true,
-      reliable: Boolean = false): DataFrame = {
+      k: Int = 8): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
-    require(!reliable || materialize,
-      "reliable=true requires materialize=true (nothing to checkpoint otherwise)")
-    require(!reliable ||
-      docs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliable=true requires spark.sparkContext.setCheckpointDir — " +
-        "point it at cluster-durable storage (HDFS/object store)")
     // no occurrence-frame persist: the winner election and the mark
     // join each evaluate the gram kernel map-side — measured cheaper
     // at sf0.1 than filling and re-reading a columnar cache of the
@@ -833,11 +788,7 @@ object Dedup {
     val dups = occ.join(winners, Seq("g"))
       .filter(struct(col("doc_id"), col("pos")) =!= col("w"))
       .select("doc_id", "pos")
-    val spans0 = mergeWindows(dups, k)
-    if (!materialize) return spans0
-    // spans are 3 narrow fields per duplicated REGION (not per gram) —
-    // materialize them so callers' actions never re-run the election
-    if (reliable) spans0.checkpoint() else spans0.localCheckpoint()
+    mergeWindows(dups, k)
   }
 
   /** gaps-and-islands merge of marked FIXED-width k-token windows
@@ -937,11 +888,11 @@ object Dedup {
     * is the single-space-joined kept-token stream, not the raw string
     * with original whitespace (the raw-string variant needs character
     * offsets through the tokenizer, which [[WordRegex]] discards).
+    * Returns a lazy plan (no Spark job at call time).
     */
   def dedupSpans(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, materialize: Boolean = true,
-      reliable: Boolean = false): DataFrame = {
-    val spans = dupSpans(docs, idCol, textCol, k, materialize, reliable)
+      k: Int = 8): DataFrame = {
+    val spans = dupSpans(docs, idCol, textCol, k)
     val perDoc = spans.groupBy("doc_id").agg(
       count(lit(1)).cast("long").as("n_spans"),
       sum(col("span_end") - col("span_start")).cast("long").as("dup_tokens"),

@@ -244,31 +244,6 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException] {
       Dedup.dedupParagraphs(docs, "doc_id", "text", minChars = 0)
     }
-    // reliable materialization (checkpoint-dir-backed, the dynamic-
-    // allocation-safe path) must be value-identical to the default
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_ck").toString
-    val prior = spark.sparkContext.getCheckpointDir
-    try {
-      // reliable without a checkpoint dir is a hard error, not a
-      // silent localCheckpoint downgrade
-      if (prior.isEmpty) intercept[IllegalArgumentException] {
-        Dedup.dedupParagraphs(docs, "doc_id", "text", reliable = true)
-      }
-      spark.sparkContext.setCheckpointDir(ckDir)
-      val rel = Dedup.dedupParagraphs(docs, "doc_id", "text", reliable = true)
-        .as[(Long, Long, Long, String)].collect().sortBy(_._1).toList
-      assert(rel == got)
-    } finally {
-      prior.foreach(spark.sparkContext.setCheckpointDir)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(new java.io.File(ckDir))
-    }
-    intercept[IllegalArgumentException] {
-      Dedup.dedupParagraphs(docs, "doc_id", "text",
-        materialize = false, reliable = true)
-    }
   }
 
   test("normalizeText: NFC composes, control chars stripped, whitespace canonical") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.text.{Corpus, Dedup}
+import graft.text.Dedup
 
 /** Scale-shape audits: the physical plans the 100 TB story depends on
   * (broadcast dims, sort-merge facts, pushdown, NO cartesians in the
@@ -74,9 +74,9 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(i => (i.toLong, s"alpha beta gamma delta epsilon doc$i tail"))
       .toDF("doc_id", "text")
     val plans = Seq(
-      "minhash" -> plan(Dedup.minhashPairs(docs, "doc_id", "text", materialize = false)),
-      "simhash" -> plan(Dedup.simhashPairs(docs, "doc_id", "text", 3, materialize = false)),
-      "jaccard" -> plan(Dedup.ngramJaccard(docs, "doc_id", "text", 0.5, materialize = false)),
+      "minhash" -> plan(Dedup.minhashPairs(docs, "doc_id", "text")),
+      "simhash" -> plan(Dedup.simhashPairs(docs, "doc_id", "text", 3)),
+      "jaccard" -> plan(Dedup.ngramJaccard(docs, "doc_id", "text", 0.5)),
       "incremental" -> plan(Dedup.minhashPairsIncremental(
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text")),
@@ -110,7 +110,7 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("embed_neardup plans an equi-join on the LSH bucket, no cartesian") {
-    val p = plan(Queries.embedNearDup(spark, sf, 0.4, materialize = false))
+    val p = plan(Queries.embedNearDup(spark, sf, 0.4))
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
   }
@@ -308,6 +308,14 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gotDist = Dedup.connectedComponents(pairs, driverMaxEdges = 0L)
       .as[(Long, Long)].collect().toMap
     assert(gotDist == expected)
+    // the bounded collect's edge: the 7 undirected edges fit a ceiling
+    // of 7 (union-find) and overflow a ceiling of 6 (distributed)
+    for (ceiling <- Seq(6L, 7L))
+      assert(Dedup.connectedComponents(pairs, driverMaxEdges = ceiling)
+        .as[(Long, Long)].collect().toMap == expected)
+    intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(pairs, driverMaxEdges = -1L)
+    }
   }
 
   test("connected components of an empty pair set is the empty frame") {
@@ -423,21 +431,13 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val kernels = Seq("shinglehashes", "minhashsig", "hashembed",
       "simhash", "wordstats")
     val plans = Map(
-      "ngram_lazy" -> plan(Dedup.ngramJaccard(
-        spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text",
-        0.8, materialize = false)),
-      "minhash_lazy" -> plan(Dedup.minhashPairs(
-        spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text",
-        materialize = false)),
+      "ngram" -> plan(Dedup.ngramJaccard(
+        spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text", 0.8)),
+      "minhash" -> plan(Dedup.minhashPairs(
+        spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text")),
       "decontaminate" -> plan(SparkEntry.queries("decontaminate")(spark, sf)),
-      // the registered query materializes (localCheckpoint) — audit the
-      // LAZY shape, which is the plan that actually executes inside it
-      "decontaminate_bloom" -> plan {
-        val d = spark.read.parquet(s"$sf/documents.parquet")
-        Corpus.decontaminateBloom(
-          d.filter(col("doc_id") % 20 =!= 0), d.filter(col("doc_id") % 20 === 0),
-          "doc_id", "text", n = 4, materialize = false)
-      },
+      "decontaminate_bloom" -> plan(
+        SparkEntry.queries("decontaminate_bloom")(spark, sf)),
       "embed_docs" -> plan(SparkEntry.queries("embed_docs")(spark, sf)),
       "vocab_top" -> plan(SparkEntry.queries("vocab_top")(spark, sf)),
       "distinctive_terms" -> plan(SparkEntry.queries("distinctive_terms")(spark, sf)))
@@ -459,13 +459,7 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // plan, (b) the probe present as a Filter condition, (c) the
     // filter inside a WholeStageCodegen span (the formatted explain
     // marks codegen'd operators with a (codegen id)).
-    // the registered query materializes (localCheckpoint), returning a
-    // Scan ExistingRDD — audit the LAZY plan, which is what executes
-    // inside the materialization
-    val d0 = spark.read.parquet(s"$sf/documents.parquet")
-    val df = Corpus.decontaminateBloom(
-      d0.filter(col("doc_id") % 20 =!= 0), d0.filter(col("doc_id") % 20 === 0),
-      "doc_id", "text", n = 4, materialize = false)
+    val df = SparkEntry.queries("decontaminate_bloom")(spark, sf)
     val p = plan(df)
     assert(!p.toLowerCase.contains("batchevalpython") &&
       !p.contains("UDF") && !p.contains("ScalaUDF"), p)
@@ -610,9 +604,8 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val recall = if (exact.isEmpty) 1.0 else banded.size.toDouble / exact.size
     info(f"banded-jaccard recall at θ=0.5: $recall%.2f (${banded.size}/${exact.size})")
     assert(recall >= 0.4, s"recall $recall collapsed — banding misconfigured")
-    // plan audit: no cartesian anywhere in the lazy plan
-    val p = plan(Dedup.ngramJaccardBanded(docs, "doc_id", "text", 0.5,
-      materialize = false))
+    // plan audit: no cartesian anywhere in the plan
+    val p = plan(Dedup.ngramJaccardBanded(docs, "doc_id", "text", 0.5))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
   }
 

@@ -131,16 +131,4 @@ class SpanDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Dedup.dupSpansIncremental(corpus, batch, "doc_id", "text")
       .count() == 0)
   }
-
-  test("lazy plan (materialize=false) equals the checkpointed default") {
-    val d = df(
-      1L -> toks(0 until 12),
-      2L -> (s"u1 u2 u3 ${toks(0 until 12)} t1 t2 t3"),
-      3L -> (toks(0 until 12) + " " + toks(0 until 12)))
-    val eager = spans(d)
-    val lazySpans = Dedup.dupSpans(d, "doc_id", "text", 8,
-      materialize = false).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(eager == lazySpans)
-  }
 }
