@@ -2,6 +2,13 @@ package graft.rag
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.text.Dedup
 
 /** BM25 keyword retrieval (Robertson/Spärck Jones probabilistic
@@ -10,57 +17,67 @@ import graft.text.Dedup
   * [[TopK]]/[[AnnLsh]]/[[AnnIvf]]: production RAG runs both and fuses
   * (hybrid retrieval).
   *
-  * Determinism contract (the oracle hash-compares doubles): per-term
-  * contributions are isolated into conditional aggregates (adding the
-  * 0.0 `otherwise` branch is IEEE-exact) and combined in FIXED query
-  * order, so no float sum depends on row encounter order; all model
-  * constants are interpolated into the oracle SQL from the same Scala
-  * doubles (shortest-round-trip repr), and avgdl is derived as
-  * sum/count in double on both sides.
+  * Key contract: `idCol` is a row key — a ROW is the unit that gets
+  * scored (its tf and dl come from that row's text alone, and df counts
+  * rows). Two rows sharing an id are scored, and returned, as two rows.
   *
-  * Scale notes (100 TB): the exploded (doc_id, term, tf, dl) frame is
-  * the classic inverted index — at production scale it is built ONCE
-  * (write-time, bucketed by term so a query prunes to its terms'
-  * buckets) rather than per query; [[search]] composes the same plan
-  * from raw text for the bounded corpus here and pushes
-  * `term IN (query)` to the scan side of the aggregate, so only
-  * matching-term rows reach the shuffle. Scoring shuffles (doc_id,
-  * per-term contribs) — never text — and the final top-k is
-  * TakeOrderedAndProject (per-partition heap + driver merge of
-  * k·partitions rows, no global sort). The df/N/avgdl corpus stats
-  * are one bounded aggregate (|query|+2 scalars to the driver — the
-  * mixtureSample pattern).
+  * Determinism contract (the oracle hash-compares doubles): each row's
+  * score is computed by [[Bm25Score]] in FIXED query order — per term
+  * `idf * ((tf*(k1+1)) / (tf + k1*((1-b) + b*dl/avgdl)))`, 0.0 for an
+  * absent term, summed left to right — so no float sum depends on row
+  * encounter order; all model constants are interpolated into the
+  * oracle SQL from the same Scala doubles (shortest-round-trip repr),
+  * and avgdl is derived as sum/count in double on both sides.
+  *
+  * Scale notes (100 TB): the df/N/avgdl corpus stats are one bounded
+  * aggregate (|query|+2 scalars to the driver — the mixtureSample
+  * pattern). Scoring is then a map-only pass: one native per-row
+  * expression counts the query terms' tf in a single walk of the row's
+  * tokens, so nothing is exploded and no document row is shuffled, and
+  * the final top-k is TakeOrderedAndProject (per-partition heap, then
+  * one merge of the k·partitions heap rows, no global sort). At
+  * production scale the exploded (term, doc_id, tf, dl) inverted index
+  * would be built ONCE at write time, bucketed by term so a query reads
+  * only its terms' postings; here the bounded corpus is tokenized per
+  * query.
   */
 object Bm25 {
+  import org.apache.spark.sql.GraftExprBridge._
 
   /** lowercase word terms (DNS for text: BM25 matching is
     * case-insensitive; the oracle lowercases identically)
     */
   def termsCol(text: Column): Column = Dedup.wordsCol(lower(text))
 
-  /** Top-k documents by BM25 score for a bag-of-words query.
+  /** Top-k rows by BM25 score for a bag-of-words query.
     * Returns (doc_id, score, n_matched) ordered by (score desc,
-    * doc_id) — the doc_id tie-break keeps rankings deterministic.
+    * doc_id) — the doc_id tie-break keeps rankings deterministic. Only
+    * rows matching at least one query term are returned. Runs the
+    * stats aggregate when called; the returned plan is the scoring.
     */
   def search(docs: DataFrame, idCol: String, textCol: String,
       query: Seq[String], topK: Int = 10,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(query.nonEmpty, "query must have at least one term")
-    // ROOT-lowercase in the guard too: a default-locale lowercase here
-    // can disagree with the ROOT normalization applied to q below
+    // ROOT-lowercase in the guards too: a default-locale lowercase here
+    // can disagree with the ROOT normalization applied to q
     // (tr_TR dotless-i), letting colliding terms past the check
-    require(query.map(_.toLowerCase(java.util.Locale.ROOT)).distinct.size ==
-      query.size,
-      "query terms must be distinct (weights double-count otherwise)")
     val q = query.map(_.toLowerCase(java.util.Locale.ROOT))
+    require(q.distinct.size == q.size,
+      "query terms must be distinct (weights double-count otherwise)")
+    // termsCol only ever emits lowercased [A-Za-z0-9]+ runs: any other
+    // term could never match and would silently return no rows
+    val unmatchable = query.zip(q).collect {
+      case (t, l) if !l.matches("[a-z0-9]+") => s"'$t'"
+    }
+    require(unmatchable.isEmpty,
+      s"query terms must be [A-Za-z0-9]+ words, got ${unmatchable.mkString(", ")}")
     val base = docs.select(col(idCol).cast("long").as("doc_id"),
       termsCol(col(textCol)).as("ws"))
     // corpus stats in ONE bounded aggregate → 2 scalars + |q| dfs to
-    // the driver. df(t) = #docs whose term array contains t — counted
+    // the driver. df(t) = #rows whose term array contains t — counted
     // as per-term conditional aggregates in the SAME pass as N and the
-    // token mass, so the corpus is tokenized once for the stats instead
-    // of twice (the old shape ran a second explode→groupBy→collect job
-    // just for the dfs).
+    // token mass.
     val statsRow = base.agg(
       count(lit(1)),
       (sum(size(col("ws"))) +:
@@ -68,32 +85,23 @@ object Bm25 {
     val nDocs = statsRow.getLong(0)
     require(nDocs > 0, "empty corpus")
     val avgdl = statsRow.getLong(1).toDouble / nDocs.toDouble
-    val dfs: Map[String, Long] =
-      q.zipWithIndex.map { case (t, i) => t -> statsRow.getLong(2 + i) }.toMap
-    val terms = graft.util.Staged.explodeOnce(
-      base.select(col("doc_id"), size(col("ws")).cast("long").as("dl"),
-        col("ws")),
-      Seq(col("doc_id"), col("dl")), col("ws"), "term")
-      .filter(col("term").isin(q: _*))
-    val tf = terms.groupBy("doc_id", "dl", "term")
-      .agg(count(lit(1)).cast("double").as("tf"))
     // Lucene-variant idf, computed once per query term on the driver
-    def idf(term: String): Double = {
-      val df = dfs.getOrElse(term, 0L).toDouble
+    val idfs = q.indices.map { i =>
+      val df = statsRow.getLong(2 + i).toDouble
       math.log(1.0 + (nDocs.toDouble - df + 0.5) / (df + 0.5))
     }
-    val norm = col("tf") * lit(k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / lit(avgdl)))
-    // fixed-order combine: one conditional aggregate per query term
-    // (0.0 otherwise-branch additions are exact), then left-to-right
-    val contribs = q.map(t =>
-      sum(when(col("term") === t, lit(idf(t)) * norm).otherwise(lit(0.0))))
-    val score = contribs.reduce(_ + _)
-    tf.groupBy("doc_id")
-      .agg(score.as("score"),
-        count(lit(1)).cast("long").as("n_matched"))
+    val scored = toColumn(Bm25Score(toExpression(col("ws")), q, idfs, k1, b, avgdl))
+    // A row matching no query term scores null, and nulls sort last,
+    // so they are dropped after the top-k. Filtered before it, the
+    // predicate is pushed below the projection (FilterExec has no
+    // subexpression elimination — the Staged.explodeOnce problem), and
+    // every matching row would be tokenized and scored twice.
+    base.select(col("doc_id"), scored.as("m"))
+      .select(col("doc_id"), col("m.score").as("score"),
+        col("m.n_matched").as("n_matched"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(topK)
+      .filter(col("score").isNotNull)
   }
 
   /** the idf values and constants as a DuckDB-replayable SQL snippet
@@ -102,4 +110,107 @@ object Bm25 {
     * (glibc ln == Math.log bit-for-bit on this platform, asserted by
     * the oracle gate)
     */
+}
+
+/** One row's BM25 score: a native pass over the row's token array
+  * that counts tf for each of the |q| query terms, then combines
+  * `idf * ((tf*(k1+1)) / (tf + k1*((1-b) + b*dl/avgdl)))` per term in
+  * query order (0.0 for an absent term), summed left to right.
+  * Returns struct(score, n_matched), or null when no query term occurs
+  * (also for a null array; null elements count toward dl and match
+  * nothing). Cost is O(tokens · |q|).
+  *
+  * The per-query constants (terms, idfs, k1, b, avgdl) reach generated
+  * code as reference objects, never as literals: the generated source
+  * is then the same for every query of one arity, and one compiled
+  * class serves them all.
+  */
+case class Bm25Score(child: Expression, terms: Seq[String],
+    idfs: Seq[Double], k1: Double, b: Double, avgdl: Double)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) =>
+      if (terms.length != idfs.length)
+        TypeCheckResult.TypeCheckFailure(s"$prettyName needs one idf per term")
+      else TypeCheckResult.TypeCheckSuccess
+    case dt => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires ARRAY<STRING>, got ${dt.catalogString}")
+  }
+  override def dataType: DataType = StructType(Seq(
+    StructField("score", DoubleType, nullable = false),
+    StructField("n_matched", LongType, nullable = false)))
+  override def nullable: Boolean = true
+  override def nullIntolerant: Boolean = true
+
+  @transient private lazy val termArr: Array[UTF8String] =
+    terms.map(UTF8String.fromString).toArray
+  @transient private lazy val idfArr: Array[Double] = idfs.toArray
+  // k1 + 1 and 1 - b are formed once, as the oracle SQL writes them
+  @transient private lazy val params: Array[Double] =
+    Array(k1 + 1.0, k1, 1.0 - b, b, avgdl)
+
+  override def nullSafeEval(v: Any): Any =
+    Bm25Score.score(v.asInstanceOf[ArrayData], termArr, idfArr, params)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val termsRef = ctx.addReferenceObj("bm25Terms", termArr,
+      "org.apache.spark.unsafe.types.UTF8String[]")
+    val idfsRef = ctx.addReferenceObj("bm25Idfs", idfArr, "double[]")
+    val paramsRef = ctx.addReferenceObj("bm25Params", params, "double[]")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""
+         |${ev.value} = graft.rag.Bm25Score$$.MODULE$$.score($a, $termsRef, $idfsRef, $paramsRef);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+object Bm25Score {
+
+  /** static entry for generated code; `params` is
+    * (k1 + 1, k1, 1 - b, b, avgdl)
+    */
+  def score(ws: ArrayData, terms: Array[UTF8String], idfs: Array[Double],
+      params: Array[Double]): InternalRow = {
+    val nq = terms.length
+    val tf = new Array[Int](nq)
+    val n = ws.numElements()
+    var i = 0
+    while (i < n) {
+      if (!ws.isNullAt(i)) {
+        val w = ws.getUTF8String(i)
+        var j = 0
+        while (j < nq && !terms(j).equals(w)) j += 1
+        if (j < nq) tf(j) += 1
+      }
+      i += 1
+    }
+    val k1p1 = params(0)
+    val k1 = params(1)
+    val omb = params(2)
+    val b = params(3)
+    val avgdl = params(4)
+    val dl = n.toDouble
+    var matched = 0L
+    var acc = 0.0
+    var j = 0
+    while (j < nq) {
+      val contrib =
+        if (tf(j) == 0) 0.0
+        else {
+          matched += 1
+          val t = tf(j).toDouble
+          idfs(j) * ((t * k1p1) / (t + k1 * (omb + b * dl / avgdl)))
+        }
+      // left to right from the first term: the oracle's s1 + s2 + …
+      acc = if (j == 0) contrib else acc + contrib
+      j += 1
+    }
+    if (matched == 0L) null
+    else new GenericInternalRow(Array[Any](acc, matched))
+  }
 }

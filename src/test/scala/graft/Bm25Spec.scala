@@ -1,13 +1,20 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import graft.rag.Bm25
+import graft.rag.{Bm25, Bm25Score}
 
 /** BM25 retrieval: ranking sanity (tf saturation, idf down-weighting,
-  * length normalization), determinism of the fixed-order combine, and
-  * the match-only result contract.
+  * length normalization), determinism of the fixed-order combine, the
+  * match-only result contract, and bit-equality of the native per-row
+  * scorer with the explode/group-by plan it replaced.
   */
 class Bm25Spec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -76,6 +83,162 @@ class Bm25Spec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException] {
       Bm25.search(d, "doc_id", "text", Seq("a", "A"))
     }
+  }
+
+  test("query terms the tokenizer can never produce are rejected") {
+    val d = df(1L -> "hash join naive a b c")
+    for (q <- Seq(Seq("hash-join"), Seq(""), Seq("na\u00efve"), Seq("join", "a b"))) {
+      val e = intercept[IllegalArgumentException] {
+        Bm25.search(d, "doc_id", "text", q)
+      }
+      assert(e.getMessage.contains("[A-Za-z0-9]+"), q)
+    }
+  }
+
+  test("two rows sharing an id are scored as two rows") {
+    val d = df(1L -> "alpha beta", 1L -> "alpha alpha gamma delta",
+      2L -> "beta gamma")
+    val got = Bm25.search(d, "doc_id", "text", Seq("alpha")).collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
+    // N = 3 rows, df(alpha) = 2 rows, avgdl = 8/3
+    val idf = math.log(1.0 + (3.0 - 2.0 + 0.5) / (2.0 + 0.5))
+    def s(tf: Double, dl: Double): Double =
+      idf * ((tf * (1.2 + 1.0)) / (tf + 1.2 * ((1.0 - 0.75) + 0.75 * dl / (8.0 / 3.0))))
+    assert(got.toSet == Set((1L, s(1, 2), 1L), (1L, s(2, 4), 1L)))
+  }
+
+  // ---- the native scorer against the explode/group-by reference ----
+
+  /** The plan `search` ran before the per-row scorer: explode every
+    * token, tf per (doc_id, dl, term), then one fixed-order conditional
+    * sum per query term per doc_id. Kept as the cross-check only.
+    */
+  private def referenceSearch(docs: DataFrame, idCol: String, textCol: String,
+      query: Seq[String], topK: Int, k1: Double = 1.2,
+      b: Double = 0.75): DataFrame = {
+    val q = query.map(_.toLowerCase(java.util.Locale.ROOT))
+    val base = docs.select(col(idCol).cast("long").as("doc_id"),
+      Bm25.termsCol(col(textCol)).as("ws"))
+    val statsRow = base.agg(
+      count(lit(1)),
+      (sum(size(col("ws"))) +:
+        q.map(t => count(when(array_contains(col("ws"), t), 1)))): _*).head()
+    val nDocs = statsRow.getLong(0)
+    val avgdl = statsRow.getLong(1).toDouble / nDocs.toDouble
+    val dfs = q.zipWithIndex.map { case (t, i) => t -> statsRow.getLong(2 + i) }.toMap
+    val terms = graft.util.Staged.explodeOnce(
+      base.select(col("doc_id"), size(col("ws")).cast("long").as("dl"),
+        col("ws")),
+      Seq(col("doc_id"), col("dl")), col("ws"), "term")
+      .filter(col("term").isin(q: _*))
+    val tf = terms.groupBy("doc_id", "dl", "term")
+      .agg(count(lit(1)).cast("double").as("tf"))
+    def idf(term: String): Double = {
+      val df = dfs(term).toDouble
+      math.log(1.0 + (nDocs.toDouble - df + 0.5) / (df + 0.5))
+    }
+    val norm = col("tf") * lit(k1 + 1.0) /
+      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / lit(avgdl)))
+    val score = q.map(t =>
+      sum(when(col("term") === t, lit(idf(t)) * norm).otherwise(lit(0.0))))
+      .reduce(_ + _)
+    tf.groupBy("doc_id")
+      .agg(score.as("score"), count(lit(1)).cast("long").as("n_matched"))
+      .orderBy(col("score").desc, col("doc_id"))
+      .limit(topK)
+  }
+
+  /** (doc_id, raw score bits, n_matched) in result order */
+  private def bits(d: DataFrame): Seq[(Option[Long], Long, Long)] =
+    d.collect().toSeq.map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
+
+  test("property: rows, order, n_matched and score bits equal the explode/group-by plan") {
+    val rnd = new scala.util.Random(20261017L)
+    val vocab = (0 until 40).map(i => s"w$i") ++ Seq("hash", "join", "vector", "bm25")
+    def word(): String = {
+      // skewed: low vocabulary indices are common, so dfs and tfs vary
+      val w = vocab(math.min(vocab.size - 1, (rnd.nextDouble() * rnd.nextDouble() * vocab.size).toInt))
+      if (rnd.nextInt(5) == 0) w.toUpperCase else w
+    }
+    val seps = Seq(" ", "  ", ", ", "-", "\n", ". ")
+    val rows = (1L to 300L).map { i =>
+      val n = rnd.nextInt(30)
+      Row(java.lang.Long.valueOf(i),
+        (0 until n).map(_ => word()).mkString(seps(rnd.nextInt(seps.size))))
+    } ++ Seq(Row(java.lang.Long.valueOf(301L), ""), Row(java.lang.Long.valueOf(302L), null),
+      Row(null, "w0 w1 hash hash join"))
+    val schema = StructType(Seq(StructField("doc_id", LongType, nullable = true),
+      StructField("text", StringType, nullable = true)))
+    val corpus = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val spread = corpus.repartition(7)
+    val absent = Seq("absent", "nowhere", "zz9")
+    var compared = 0
+    for (qi <- 0 until 50) {
+      val nTerms = 1 + rnd.nextInt(4)
+      val q = rnd.shuffle(vocab ++ absent).take(nTerms)
+        .map(t => if (rnd.nextBoolean()) t.toUpperCase else t)
+      val k = Seq(1, 10, 200)(qi % 3)
+      for ((name, d) <- Seq("plain" -> corpus, "repartition(7)" -> spread)) {
+        val got = bits(Bm25.search(d, "doc_id", "text", q, k))
+        val want = bits(referenceSearch(d, "doc_id", "text", q, k))
+        assert(got == want, s"query $q k=$k on $name")
+        compared += got.size
+      }
+    }
+    assert(compared > 1000) // the queries do match, at every k
+  }
+
+  // ---- kernel totality and cost ----
+
+  private def kernel(tokens: Array[UTF8String], terms: Seq[String]): InternalRow =
+    Bm25Score.score(new GenericArrayData(tokens.asInstanceOf[Array[Any]]),
+      terms.map(UTF8String.fromString).toArray, Array.fill(terms.size)(1.5),
+      Array(2.2, 1.2, 0.25, 0.75, 3.0))
+
+  test("Bm25Score is total: null array, null elements, a 2^20-token row") {
+    import org.apache.spark.sql.GraftExprBridge._
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("ws", ArrayType(StringType, containsNull = true))))
+    val d = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, null), Row(2L, Seq("a", null, "b", null)), Row(3L, Seq(null, null)),
+      Row(4L, Seq.empty[String])), 2), schema)
+    val scoreCol = toColumn(Bm25Score(toExpression(col("ws")), Seq("a", "c"),
+      Seq(1.5, 2.5), 1.2, 0.75, 3.0))
+    val got = d.select(col("id"), scoreCol.as("m")).orderBy("id").collect()
+      .map(r => r.getLong(0) -> Option(r.getStruct(1)).map(s => (s.getDouble(0), s.getLong(1))))
+      .toSeq
+    // row 2: dl = 4 (null elements count), tf(a) = 1, c absent
+    val s2 = 1.5 * ((1.0 * (1.2 + 1.0)) / (1.0 + 1.2 * ((1.0 - 0.75) + 0.75 * 4.0 / 3.0))) + 0.0
+    assert(got == Seq(1L -> None, 2L -> Some((s2, 1L)), 3L -> None, 4L -> None))
+    // the interpreted path agrees with the generated one
+    def interpreted(ws: Seq[String]): Option[(Double, Long)] =
+      Option(Bm25Score(Literal.create(ws, ArrayType(StringType)), Seq("a", "c"),
+          Seq(1.5, 2.5), 1.2, 0.75, 3.0).eval(null).asInstanceOf[InternalRow])
+        .map(s => (s.getDouble(0), s.getLong(1)))
+    assert(Seq(null, Seq("a", null, "b", null), Seq(null, null), Seq.empty[String])
+      .map(interpreted) == got.map(_._2))
+    val big = Array.tabulate(1 << 20)(i => UTF8String.fromString(if (i % 3 == 0) "a" else "b"))
+    val r = kernel(big, Seq("a", "b", "c"))
+    assert(r.getLong(1) == 2L && r.getDouble(0) > 0.0)
+    // and end to end through search: one 2^20-word document
+    val huge = df(1L -> Array.fill(1 << 20)("a").mkString(" "), 2L -> "b a")
+    assert(ranked(huge, Seq("a")).toSet == Set(1L, 2L))
+  }
+
+  test("Bm25Score cost is linear in the row's tokens (n vs 4n)") {
+    val n = 1 << 17
+    val small = Array.tabulate(n)(i => UTF8String.fromString(s"t${i % 97}"))
+    val large = Array.tabulate(4 * n)(i => UTF8String.fromString(s"t${i % 97}"))
+    val terms = Seq("t1", "t50", "absent", "t96")
+    def best(a: Array[UTF8String]): Long =
+      (0 until 7).map { _ =>
+        val t0 = System.nanoTime(); kernel(a, terms); System.nanoTime() - t0
+      }.min
+    (0 until 5).foreach { _ => kernel(small, terms); kernel(large, terms) } // JIT
+    val ratio = best(large).toDouble / best(small).toDouble
+    // linear reads ~4; quadratic would read ~16
+    assert(ratio < 8.0, s"4n/n time ratio $ratio")
   }
 
   // ---- RRF fusion ----

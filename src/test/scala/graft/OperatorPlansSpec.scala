@@ -16,7 +16,8 @@ import graft.text.{Corpus, Dedup}
   * (`LogicalRDD`, printed as `Scan ExistingRDD`) — the plan is the
   * whole lineage. `decontaminateBloom` is the one exception by design:
   * it runs the jobs that produce its plan inputs (sizing count, bloom
-  * build) and nothing else.
+  * build) and nothing else, and `Bm25.search` runs only its corpus
+  * stats aggregate.
   */
 class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -35,7 +36,7 @@ class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
     })
 
   /** a data dir holding `embeddings.parquet`, the input embedNearDup
-    * reads itself
+    * reads itself (the BM25 test adds `docs.parquet`)
     */
   private lazy val embDir: java.nio.file.Path = {
     import spark.implicits._
@@ -126,6 +127,38 @@ class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(exact.nonEmpty)
       assert(sized.collect().toSet == exact)
       assert(given.collect().toSet == exact)
+    } finally conf.set("spark.sql.adaptive.enabled", saved)
+  }
+
+  test("Bm25.search runs only its stats job, plans no Generate/Exchange, compiles once per arity") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val conf = spark.conf
+    val saved = conf.get("spark.sql.adaptive.enabled")
+    try {
+      conf.set("spark.sql.adaptive.enabled", "false")
+      // from parquet: over a local relation the optimizer would score
+      // the rows on the driver, interpreted, and compile nothing
+      val path = s"$embDir/docs.parquet"
+      docs.write.parquet(path)
+      val scan = spark.read.parquet(path)
+      val (plan, n) = countingJobs(
+        graft.rag.Bm25.search(scan, "doc_id", "text", Seq("w1", "para"), 5))
+      assert(n == 1, s"expected the stats aggregate only, got $n job(s)")
+      assertNoCheckpoint("bm25", plan)
+      assert(plan.collect().nonEmpty)
+      val executed = plan.queryExecution.executedPlan
+      assert(executed.collect { case g: GenerateExec => g }.isEmpty, executed)
+      assert(executed.collect { case e: Exchange => e }.isEmpty, executed)
+      // other terms, same arity: the per-query constants are reference
+      // objects, so neither the stats nor the scoring compiles a class
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val again = graft.rag.Bm25.search(scan, "doc_id", "text", Seq("tail", "doc"), 5)
+        .collect()
+      assert(again.nonEmpty)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+        "a second query of the same arity compiled new classes")
     } finally conf.set("spark.sql.adaptive.enabled", saved)
   }
 }

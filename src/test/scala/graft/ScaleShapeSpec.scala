@@ -54,18 +54,14 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
-  test("bm25_search: top-k is a heap merge and the term filter precedes the tf aggregate") {
+  test("bm25_search: map-only scoring, scorer run once, top-k is a heap merge") {
     val p = plan(SparkEntry.queries("bm25_search")(spark, sf))
     assert(p.contains("TakeOrderedAndProject"), p) // no global sort
-    // the term IN (...) filter must sit below the first exchange so
-    // only matching-term rows shuffle
-    // the formatted detail sections number operators leaf-to-root, so
-    // the filter's detail preceding the exchange's proves it sits below
-    val filterAt = p.indexOf("IN (hash,join,vector)")
-    val exchangeAt = p.indexOf("hashpartitioning(doc_id")
-    assert(filterAt >= 0 && exchangeAt >= 0 && filterAt < exchangeAt, p)
-    // per-term contributions partial-aggregate map-side (hot docs combine)
-    assert(p.contains("partial_sum(CASE WHEN"), p)
+    // one native per-row scorer: no token explode, no group-by shuffle
+    assert(!p.contains("Generate") && !p.contains("Exchange"), p)
+    // the no-match filter sits above the top-k: pushed below the
+    // projection it would evaluate the scorer a second time
+    assert("bm25score\\(".r.findAllIn(p).size == 1, p)
   }
 
   test("pair-join dedup operators plan equi-joins, never cartesians") {
