@@ -1,6 +1,7 @@
 package graft.bench
 
 import java.io.{BufferedReader, InputStreamReader, PrintWriter}
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -32,15 +33,11 @@ object MultiProcBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // task CPU-time accumulator: if Σ executorCpuTime is invariant
-    // across layouts, the job does no extra/serial work with scale —
-    // wall-clock gaps are machine-level (bandwidth), not dataflow.
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
-      })
+    // task CPU time: if Σ executorCpuTime is invariant across layouts,
+    // the job does no extra/serial work with scale — wall-clock gaps
+    // are machine-level (bandwidth), not dataflow.
+    val metrics = new BenchExtra.Metrics
+    spark.sparkContext.addSparkListener(metrics)
     def run(): (Long, Double) = {
       val t0 = System.nanoTime()
       val df = spark.read.parquet(files.toIndexedSeq: _*)
@@ -54,11 +51,11 @@ object MultiProcBench {
     val in = new BufferedReader(new InputStreamReader(System.in))
     var cmd = in.readLine()
     while (cmd != null && cmd == "GO") { // repeated rounds until EXIT
-      cpuNs.set(0)
+      ListenerBusDrain.drain(spark.sparkContext)
+      metrics.reset()
       val (turns, secs) = run()
-      // listener events are queued async; give the bus a moment to drain
-      Thread.sleep(500)
-      println(s"DONE ${graft.util.Fmt.f3(secs)} $turns ${graft.util.Fmt.f3(cpuNs.get / 1e9)}")
+      ListenerBusDrain.drain(spark.sparkContext)
+      println(s"DONE ${graft.util.Fmt.f3(secs)} $turns ${graft.util.Fmt.f3(metrics.cpuNs / 1e9)}")
       Console.out.flush()
       cmd = in.readLine()
     }
@@ -131,7 +128,7 @@ object MultiProcBench {
         turns += parts(2).toLong
         cpuSec += parts(3).toDouble
       }
-      val wall = (System.nanoTime() - t0) / 1e9 - 0.5 // listener drain sleep
+      val wall = (System.nanoTime() - t0) / 1e9
       totalTurns = turns
       if (wall < bestWall) { bestWall = wall; bestCpu = cpuSec }
     }

@@ -110,7 +110,6 @@ object Manifest {
       manifestDir: String, numPartitions: Int,
       partitionsPerCommit: Int = Int.MaxValue,
       maxBatches: Int = Int.MaxValue): Int = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val withPid = transcripts.withColumn("partition_id", partitionId(numPartitions))
     var processed = 0
     var batches = 0
@@ -159,8 +158,11 @@ object Manifest {
 
       val extracted = ExtractPipeline.overTranscripts(
         batch.select("conv_id", "turn_idx", "partition_id", "text"))
-      // 2. data commit (idempotent: dynamic overwrite by partition)
+      // 2. data commit (idempotent: dynamic overwrite by partition).
+      // A write option, not the session conf: the caller's other
+      // partitioned overwrites keep their own mode
       extracted.write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("partition_id").parquet(outDir)
       // 3. manifest commit (lineage + metrics per partition). The row
       // domain is `todo`, NOT the written data — an EMPTY partition

@@ -90,21 +90,4 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       array(lit(0.9), lit(0.1)), cents)).head().getInt(0)
     assert(ok == 0)
   }
-
-  test("store trait: parquet realization round-trips + partition overwrite") {
-    import spark.implicits._
-    import graft.store.ParquetStore
-    val dir = java.nio.file.Files.createTempDirectory("store").toString + "/t"
-    val df = Seq((0, "a"), (1, "b")).toDF("partition_id", "v")
-    ParquetStore.overwritePartitions(df, dir, "partition_id")
-    assert(ParquetStore.read(spark, dir).count() == 2)
-    // overwrite only partition 0; partition 1 untouched
-    val df2 = Seq((0, "a2")).toDF("partition_id", "v")
-    ParquetStore.overwritePartitions(df2, dir, "partition_id")
-    val rows = ParquetStore.read(spark, dir)
-      .as[(String, Int)].collect().toSet // (v, partition_id) column order
-    assert(rows == Set(("a2", 0), ("b", 1)))
-    ParquetStore.truncate(spark, dir)
-    assert(ParquetStore.read(spark, dir).count() == 0)
-  }
 }

@@ -72,6 +72,25 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(out).count() == count1)
   }
 
+  test("runResumable leaves the session's partition overwrite mode alone") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    val before = spark.conf.get(key)
+    val transcripts = spark.range(0, 4)
+      .flatMap(i => TranscriptGen.genConv(42L, i)._1).toDF()
+    Manifest.runResumable(spark, transcripts, tmpDir() + "/out",
+      tmpDir() + "/manifest", 2)
+    assert(spark.conf.get(key) == before)
+    // a static partitioned overwrite still replaces the whole table
+    val t = tmpDir() + "/t"
+    Seq((0, "a"), (1, "b")).toDF("p", "v")
+      .write.mode("overwrite").partitionBy("p").parquet(t)
+    Seq((0, "a2")).toDF("p", "v")
+      .write.mode("overwrite").partitionBy("p").parquet(t)
+    assert(spark.read.parquet(t).as[(String, Int)].collect().toSet == Set(("a2", 0)))
+  }
+
   test("manifest snapshot: latest committed attempt as of ts, intents invisible") {
     import spark.implicits._
     val epochMs = 1767225600000L
