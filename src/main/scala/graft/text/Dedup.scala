@@ -832,20 +832,17 @@ object Dedup {
     * that is the corpus vocabulary, trillions of rows); the flipped
     * semi-join moves only grams the batch actually mentions, the
     * "decide with small rows" rule. Corpus text still never shuffles
-    * and is never re-scanned for spans.
+    * and is never re-scanned for spans. Returns a lazy plan (no Spark
+    * job at call time).
     */
   def dupSpansIncremental(corpus: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, k: Int = 8): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
-    // the batch occurrence frame has THREE consumers (winner election,
-    // mark join, broadcast probe-set build) — localCheckpoint it: one
-    // job, UnsafeRow blocks (no columnar cache encode/decode), batch-
-    // sized by contract; blocks are released before returning
     val occ = graft.util.Staged.posexplodeOnce(
       spread(batch).select(col(idCol).cast("long").as("doc_id"),
         TextExprs.shingleHashes(col(textCol), distinct = false, n = k)
           .as("gs")),
-      Seq(col("doc_id")), col("gs"), "pos", "g").localCheckpoint()
+      Seq(col("doc_id")), col("gs"), "pos", "g")
     // corpus grams that the BATCH mentions: the corpus side streams
     // map-side against the broadcast batch-gram set, so the corpus
     // contributes at most |batch grams| rows — never its vocabulary
@@ -872,13 +869,7 @@ object Dedup {
         (col("cnt") >= 2 &&
           struct(col("doc_id"), col("pos")) =!= col("w")))
       .select("doc_id", "pos")
-    // release the batch checkpoint blocks eagerly — in finally, so a
-    // failing merge job cannot strand them: a resident ingest engine
-    // calls this per batch, and a retried bad batch would otherwise
-    // accumulate leaked executor storage
-    try mergeWindows(dups, k).localCheckpoint()
-    finally org.apache.spark.sql.GraftExprBridge.checkpointedRdd(occ)
-      .foreach(_.unpersist(false))
+    mergeWindows(dups, k)
   }
 
   /** Per-document substring-dedup summary + cleaned text: token count,

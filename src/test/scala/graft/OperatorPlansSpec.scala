@@ -78,7 +78,7 @@ class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.toDF("doc_id", "text")
   }
 
-  test("the eight pure operators start no job when called and plan no checkpoint") {
+  test("the pure operators start no job when called and plan no checkpoint") {
     // embedNearDup reads its own input, and a parquet read infers the
     // schema with a job of its own — the operator may add none to it
     val dir = embDir.toString
@@ -92,6 +92,9 @@ class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("dupSpans", 0, () => Dedup.dupSpans(docs, "doc_id", "text")),
       ("dedupSpans", 0, () => Dedup.dedupSpans(docs, "doc_id", "text")),
       ("dedupParagraphs", 0, () => Dedup.dedupParagraphs(docs, "doc_id", "text")),
+      ("dupSpansIncremental", 0, () => Dedup.dupSpansIncremental(
+        docs.filter(col("doc_id") % 4 =!= 0), docs.filter(col("doc_id") % 4 === 0),
+        "doc_id", "text")),
       ("embedNearDup", readJobs, () => Queries.embedNearDup(spark, dir, 0.4)))
     for ((name, inputJobs, op) <- ops) {
       val (df, n) = countingJobs(op())
