@@ -552,13 +552,11 @@ object SparkEntry {
     // oracle-checked.
     new Op("ann_ivf_kmeans", (s, dir) => {
       val e = embeddings(s, dir)
+      // the centroids are cached per snapshot: searchKmeans reuses them
       val cents = AnnIvf.kmeansCentroids(e)
       val qv = Queries.queryVec(s, dir)
-      val probes = AnnIvf.probeCells(qv, cents)
-      Queries.lastKmeans = Some((cents, probes))
-      TopK.search(
-        e.filter(AnnIvf.cellCol(col("embedding"), cents).isin(probes: _*)),
-        qv, k = 10).select("vec_id", "score")
+      Queries.lastKmeans = Some((cents, AnnIvf.probeCells(qv, cents)))
+      AnnIvf.searchKmeans(e, qv, k = 10).select("vec_id", "score")
     },
       Queries.lastKmeans.map { case (cents, probes) => kmeansSql(cents, probes) }),
     // PQ codes per vector (AnnPq.M subspaces × AnnPq.Ks centroids),
@@ -1332,8 +1330,7 @@ object SparkEntry {
       "SELECT event_id, user_id, CAST(row_number() OVER " +
         "(PARTITION BY user_id ORDER BY ts, event_id) AS INT) AS turn_rank " +
         "FROM events"),
-    // event-time tumbling-window aggregate (batch analog of the
-    // streaming windowed agg). The value sum is carried in integer
+    // event-time tumbling-window aggregate. The value sum is carried in integer
     // micro-units so it is associative — float summation order would
     // otherwise differ between engines/layouts. Emitted as DOUBLE
     // (exact below 2^53): the driver's pandas bridge renders DuckDB's

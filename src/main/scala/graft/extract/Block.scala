@@ -34,7 +34,6 @@ final case class Block(
   def isTableRow: Boolean = (flags & Block.TableRow) != 0
   def linkDensity: Double =
     if (text.isEmpty) 0.0 else linkChars.toDouble / text.length
-  def tagDepth: Int = if (tagPath.isEmpty) 0 else tagPath.count(_ == '/') + 1
   def lastTag: String = {
     val i = tagPath.lastIndexOf('/')
     if (i < 0) tagPath else tagPath.substring(i + 1)

@@ -10,18 +10,12 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Conversion result carried per row (C12 error capture). Top-level so
-  * Catalyst codegen can construct/read it without reflection fallback.
-  */
-final case class ExtractOut(status: String, markdown: String, error: String)
-
 /** payload → struct(status, markdown, error) as a NATIVE expression —
-  * identical values to the former `udf(extractSafe)` wrapper, minus
-  * the per-row ScalaUDF machinery (closure dispatch, catalyst↔Scala
+  * no per-row ScalaUDF machinery (closure dispatch, catalyst↔Scala
   * converters, case-class encoder): the kernel result goes straight
   * into an InternalRow, with the constant status/error strings shared.
-  * NULL-TOTAL like the udf form: a null payload yields the ("err", "",
-  * "empty input") row, never a null struct (so it cannot use
+  * NULL-TOTAL: a null payload yields the ("err", "", "empty input")
+  * row, never a null struct (so it cannot use
   * nullSafeEval/defineCodeGen, which would short-circuit null inputs).
   */
 case class ExtractExpr(child: Expression) extends UnaryExpression {
@@ -79,21 +73,8 @@ object ExtractPipeline {
     val headerMap = Headers.identify(blocks)
     val ordered = ReadingOrder.order(blocks)
     // fused emit → lint → join: one output buffer, no element strings
-    // (byte-identical to normalizeJoin(emit(...)), property-pinned)
     MarkdownEmitter.emitNormalized(ordered, headerMap)
   }
-
-  /** C12 wrapper: (status, markdown-or-empty, error-or-empty). The
-    * null/empty guard runs BEFORE the kernel so an empty payload is
-    * reported as the intended "empty input", not as whatever exception
-    * the parser happens to raise on null.
-    */
-  def extractSafe(payload: String): (String, String, String) =
-    if (payload == null || payload.isEmpty) ("err", "", "empty input")
-    else try ("ok", extract(payload), "")
-    catch {
-      case e: Exception => ("err", "", String.valueOf(e.getMessage))
-    }
 
   // shared UTF8String constants: the status/error values are a tiny
   // closed set — one allocation per JVM, not one per turn
@@ -102,8 +83,11 @@ object ExtractPipeline {
   private val EmptyU = UTF8String.fromString("")
   private val EmptyInputU = UTF8String.fromString("empty input")
 
-  /** [[ExtractExpr]]'s kernel entry: payload → InternalRow(status,
-    * markdown, error), null-total (see extractSafe).
+  /** [[ExtractExpr]]'s kernel entry (C12 error capture): payload →
+    * InternalRow(status, markdown-or-empty, error-or-empty). The
+    * null/empty guard runs BEFORE the kernel so an empty payload is
+    * reported as the intended "empty input", not as whatever exception
+    * the parser happens to raise on null.
     */
   def extractRow(payload: UTF8String): InternalRow = {
     if (payload == null || payload.numBytes() == 0)

@@ -16,101 +16,104 @@ package graft.extract
   */
 object Headers {
 
-  /** fontSize → heading level lookup for one turn. At most six header
-    * sizes exist by construction, so the mapping is two tiny parallel
-    * arrays probed linearly with doubleToLongBits equality — exactly
-    * the boxed `Double.equals` identity the former `Map[Double, Int]`
-    * used (NaN self-equal, -0.0 distinct from 0.0), without boxing a
-    * Double per lookup on the emitter's per-block hot path.
+  /** fontSize → heading level lookup for one turn: the header sizes in
+    * ascending order, found by `java.util.Arrays.binarySearch`, whose
+    * equality is doubleToLongBits identity (-0.0 distinct from 0.0; NaN
+    * never enters the table). Every size above body is kept, so a turn
+    * may have any number d of them and a lookup costs O(log d). The
+    * largest size is level 1; levels are capped at 6.
     */
-  final class HeaderLevels private[Headers] (
-      private val bits: Array[Long], private val levels: Array[Int]) {
+  final class HeaderLevels private[Headers] (private val ascending: Array[Double]) {
     def level(b: Block): Int = {
       if (b.kind != BlockKind.Pdf || b.isTableRow) return 0
-      val k = java.lang.Double.doubleToLongBits(b.fontSize)
-      var i = 0
-      while (i < bits.length) {
-        if (bits(i) == k) return levels(i)
-        i += 1
-      }
-      0
+      val i = java.util.Arrays.binarySearch(ascending, b.fontSize)
+      if (i < 0) 0 else math.min(ascending.length - i, 6)
     }
-    /** Map form (specs / golden comparisons) */
+    /** Map form (specs / golden comparisons), built largest size first */
     def toMap: Map[Double, Int] =
-      bits.indices.map(i =>
-        java.lang.Double.longBitsToDouble(bits(i)) -> levels(i)).toMap
+      ascending.indices.reverse.map(i =>
+        ascending(i) -> math.min(ascending.length - i, 6)).toMap
   }
 
-  private val EmptyLevels =
-    new HeaderLevels(Array.emptyLongArray, Array.emptyIntArray)
+  private val EmptyLevels = new HeaderLevels(Array.emptyDoubleArray)
 
   /** fontSize → heading level (1..6); sizes not mapped are body.
     *
-    * Hot-path note: runs once per turn; a turn has a handful of
-    * distinct sizes, so the histogram lives in two small parallel
-    * arrays instead of a boxed-Double-keyed Map (which dominated this
-    * phase's time with boxing and tuple churn). Size identity is
-    * doubleToLongBits equality — exactly the boxed `Double.equals` the
-    * Map used (NaN self-equal, -0.0 distinct from 0.0).
+    * Runs once per turn in O(blocks) expected time plus a sort of the
+    * header sizes: the char-count histogram is keyed by
+    * doubleToLongBits (NaN self-equal, -0.0 distinct from 0.0) in a
+    * small open-addressed table of indices into dense size/count
+    * arrays, so a block's lookup does not grow with the number of
+    * distinct sizes and no Double is boxed.
     */
   def identify(blocks: Seq[Block]): HeaderLevels = {
     // char-count histogram over PDF spans, table rows excluded
     // (find_tables regions are removed from the text flow before
     // header identification in pymupdf4llm)
-    var sizes = new Array[Double](8)
+    var keys = new Array[Long](8) // distinct sizes' bits, first-seen order
     var counts = new Array[Long](8)
     var n = 0
+    var slots = new Array[Int](16) // 1 + index into keys; 0 = free
     blocks.foreach { b =>
       if (b.kind == BlockKind.Pdf && !b.isTableRow && b.text.nonEmpty) {
-        val fs = b.fontSize
-        val bits = java.lang.Double.doubleToLongBits(fs)
-        var i = 0
-        var found = false
-        while (i < n && !found) {
-          if (java.lang.Double.doubleToLongBits(sizes(i)) == bits) {
-            counts(i) += b.text.length
-            found = true
-          }
-          i += 1
-        }
-        if (!found) {
-          if (n == sizes.length) {
-            sizes = java.util.Arrays.copyOf(sizes, n * 2)
-            counts = java.util.Arrays.copyOf(counts, n * 2)
-          }
-          sizes(n) = fs
+        val k = java.lang.Double.doubleToLongBits(b.fontSize)
+        val mask = slots.length - 1
+        var s = slotOf(k, mask)
+        while (slots(s) != 0 && keys(slots(s) - 1) != k) s = (s + 1) & mask
+        if (slots(s) != 0) counts(slots(s) - 1) += b.text.length
+        else {
+          keys(n) = k
           counts(n) = b.text.length.toLong
           n += 1
+          slots(s) = n
+          if (n == keys.length) { // keep the table at most half full
+            keys = java.util.Arrays.copyOf(keys, n * 2)
+            counts = java.util.Arrays.copyOf(counts, n * 2)
+            slots = new Array[Int](n * 4)
+            val m = slots.length - 1
+            var i = 0
+            while (i < n) {
+              var t = slotOf(keys(i), m)
+              while (slots(t) != 0) t = (t + 1) & m
+              slots(t) = i + 1
+              i += 1
+            }
+          }
         }
       }
     }
     if (n == 0) return EmptyLevels
     // body = most frequent size; tie-break: smaller size (body text is
     // the smaller of two equally-frequent sizes in practice)
-    var body = sizes(0)
+    var body = java.lang.Double.longBitsToDouble(keys(0))
     var bodyCount = counts(0)
     var i = 1
     while (i < n) {
+      val size = java.lang.Double.longBitsToDouble(keys(i))
       if (counts(i) > bodyCount ||
-        (counts(i) == bodyCount &&
-          java.lang.Double.compare(sizes(i), body) < 0)) {
-        body = sizes(i)
+        (counts(i) == bodyCount && java.lang.Double.compare(size, body) < 0)) {
+        body = size
         bodyCount = counts(i)
       }
       i += 1
     }
-    val above = java.util.Arrays.copyOf(sizes, n).filter(_ > body)
-    if (above.isEmpty) return EmptyLevels
-    java.util.Arrays.sort(above)
-    // descending rank → level, capped at 6
-    val bits = new Array[Long](above.length)
-    val levels = new Array[Int](above.length)
+    val above = new Array[Double](n)
+    var m = 0
     i = 0
-    while (i < above.length) {
-      bits(i) = java.lang.Double.doubleToLongBits(above(above.length - 1 - i))
-      levels(i) = math.min(i + 1, 6)
+    while (i < n) {
+      val size = java.lang.Double.longBitsToDouble(keys(i))
+      if (size > body) { above(m) = size; m += 1 }
       i += 1
     }
-    new HeaderLevels(bits, levels)
+    if (m == 0) return EmptyLevels
+    val ascending = java.util.Arrays.copyOf(above, m)
+    java.util.Arrays.sort(ascending)
+    new HeaderLevels(ascending)
+  }
+
+  /** Fibonacci-hash slot of a size's bits in a power-of-two table */
+  private def slotOf(bits: Long, mask: Int): Int = {
+    val h = bits * 0x9e3779b97f4a7c15L
+    (h ^ (h >>> 32)).toInt & mask
   }
 }

@@ -69,43 +69,4 @@ object LintNormalize {
     def finish(): String =
       if (!wroteAny) "" else out.append('\n').toString
   }
-
-  /** Fused join("\n\n") + normalize: byte-identical to
-    * `normalize(elements.mkString("\n\n"))` without materializing and
-    * re-splitting the intermediate document (that join/re-split was
-    * ~half the whole kernel's time). One pass, one output buffer.
-    */
-  def normalizeJoin(elements: Seq[String]): String = {
-    val st = new State(new java.lang.StringBuilder(256))
-    var first = true
-    elements.foreach { el =>
-      // the joining blank line of mkString("\n\n"), routed through the
-      // same state machine so the equivalence is exact
-      if (!first) st.line("", 0, 0)
-      first = false
-      var start = 0
-      var nl = el.indexOf('\n')
-      while (nl >= 0) {
-        st.line(el, start, nl)
-        start = nl + 1
-        nl = el.indexOf('\n', start)
-      }
-      st.line(el, start, el.length)
-    }
-    st.finish()
-  }
-
-  def normalize(md: String): String = {
-    if (md == null || md.isEmpty) return ""
-    val st = new State(new java.lang.StringBuilder(md.length + 1))
-    var start = 0
-    var nl = md.indexOf('\n')
-    while (nl >= 0) {
-      st.line(md, start, nl)
-      start = nl + 1
-      nl = md.indexOf('\n', start)
-    }
-    st.line(md, start, md.length)
-    st.finish()
-  }
 }

@@ -21,15 +21,15 @@ package graft.extract
   * All rules are pure `Seq[Block] → Seq[String]`; Spark's job is only
   * distribution (ExtractPipeline).
   *
-  * One traversal serves two consumers through [[LineSink]]: the
-  * element-vector form ([[emit]], tests and chunkers) and the fused
-  * form ([[emitNormalized]]) that streams every markdown LINE straight
-  * into LintNormalize's state machine — the per-element strings, the
+  * The traversal writes into a [[LineSink]]. The kernel's sink
+  * ([[emitNormalized]]) streams every markdown LINE straight into
+  * LintNormalize's state machine — the per-element strings, the
   * `\n\n` join and the re-split the normalizer then did were one extra
-  * copy of the whole document on the kernel's hottest path. Equality
-  * of the two forms is property-pinned (ExtractGoldenSpec's
-  * fused-vs-element test) and the golden per-turn gate runs over the
-  * fused path.
+  * copy of the whole document on the kernel's hottest path. The
+  * element-vector form, kept in the test sources as the reference,
+  * is a second sink over the same traversal; ExtractGoldenSpec pins
+  * the two equal, and the golden per-turn gate runs over the fused
+  * path.
   */
 object MarkdownEmitter {
 
@@ -42,35 +42,9 @@ object MarkdownEmitter {
     def line(s: String): Unit
   }
 
-  /** builds the classic element vector: lines joined by '\n'. */
-  private final class ElementSink extends LineSink {
-    private val out = Vector.newBuilder[String]
-    private val cur = new java.lang.StringBuilder(64)
-    private var open = false
-    // an element's first line may itself be empty — count lines, don't
-    // infer from buffer length
-    private var linesInCur = 0
-    def startElement(): Unit = {
-      if (open) out += cur.toString
-      cur.setLength(0)
-      linesInCur = 0
-      open = true
-    }
-    def line(s: String): Unit = {
-      if (linesInCur > 0) cur.append('\n')
-      linesInCur += 1
-      cur.append(s)
-    }
-    def result(): Vector[String] = {
-      if (open) out += cur.toString
-      open = false
-      out.result()
-    }
-  }
-
   /** streams lines into LintNormalize's state machine, byte-identical
-    * to `LintNormalize.normalizeJoin(emit(...))`: the element break is
-    * the same empty line mkString("\n\n")'s join contributed.
+    * to normalizing the elements joined by "\n\n": the element break
+    * is the same empty line that join contributes.
     */
   private final class LintSink(st: LintNormalize.State) extends LineSink {
     private var first = true
@@ -105,18 +79,10 @@ object MarkdownEmitter {
     if (j == i + 1) null else (t.substring(0, i), t.substring(j))
   }
 
-  /** Emit markdown elements (each element = one or more lines) for
-    * blocks already in reading order, with headers identified.
-    */
-  def emit(blocks: Seq[Block], headerMap: Headers.HeaderLevels): Vector[String] = {
-    val sink = new ElementSink
-    emitTo(blocks, headerMap, sink)
-    sink.result()
-  }
-
-  /** Fused emit + C11 lint-normalize + join: byte-identical to
-    * `LintNormalize.normalizeJoin(emit(blocks, headerMap))` with one
-    * output buffer and no per-element strings.
+  /** Markdown for blocks already in reading order, with headers
+    * identified: emit + C11 lint-normalize + join in one pass, with
+    * one output buffer and no per-element strings. Byte-identical to
+    * normalizing the emitted elements joined by "\n\n".
     */
   def emitNormalized(blocks: Seq[Block], headerMap: Headers.HeaderLevels): String = {
     val st = new LintNormalize.State(new java.lang.StringBuilder(256))
@@ -124,7 +90,7 @@ object MarkdownEmitter {
     st.finish()
   }
 
-  private def emitTo(blocks: Seq[Block], headerMap: Headers.HeaderLevels,
+  private[extract] def emitTo(blocks: Seq[Block], headerMap: Headers.HeaderLevels,
       out: LineSink): Unit = {
     val kept = blocks.filterNot(Boilerplate.isBoilerplate)
     var i = 0

@@ -61,16 +61,6 @@ object ReadingOrder {
     out.result()
   }
 
-  /** Column clustering: merge overlapping [x0,x1] intervals into bins;
-    * a block belongs to the bin containing its x0. (Spec entry point —
-    * delegates to the in-place hot path.)
-    */
-  private[extract] def orderPage(blocks: Seq[Block]): Seq[Block] = {
-    val a = blocks.toArray
-    orderPageInPlace(a, 0, a.length)
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
-  }
-
   /** sort a(from until until) into (column, y0, x0, seq) order */
   private def orderPageInPlace(a: Array[Block], from: Int, until: Int): Unit = {
     if (until - from <= 1) return

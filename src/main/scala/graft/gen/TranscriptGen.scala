@@ -354,7 +354,7 @@ object TranscriptGen {
 
   /** Turn count for conversation i: Zipf-ish skew — 1 in 100
     * conversations gets ~50x the median (FIXTURES.md §1), exercising
-    * salting/AQE skew handling.
+    * AQE skew handling.
     */
   def turnCount(seed: Long, convIdx: Long): Int = {
     val rng = new Rng(mix(seed, convIdx * 31 + 7))

@@ -15,10 +15,9 @@ import graft.chunk.Tokenizer
   * is L2-normalized. The V1–V4 contract (fixed-dim float vector,
   * cosine geometry) is unchanged.
   *
-  * Implemented as pure Column expressions: token hash h = first 60
-  * bits of sha256(token); bucket = h mod dim; sign = (h >> 6) odd ?
-  * -1 : +1. Integer accumulation is exact, so the result is
-  * bit-reproducible across Spark and the DuckDB oracle.
+  * Token hash h = first 60 bits of sha256(token); bucket = h mod dim;
+  * sign = (h >> 6) odd ? -1 : +1. Integer accumulation is exact, so
+  * the result is bit-reproducible across Spark and the DuckDB oracle.
   */
 /** native one-pass feature-hashing embedding of a string column (the
   * JVM twin `HashEmbedder.embed` inside whole-stage codegen — same
@@ -58,47 +57,22 @@ object HashEmbedder {
 
   val Dim = 64
 
-  /** tokens(text) as an array column — same token basis as Tokenizer. */
-  def tokensCol(text: Column): Column =
-    regexp_extract_all(text, lit(Tokenizer.TokenRegex), lit(0))
-
   /** 60-bit token hash from sha256 hex (conv is exact below 2^63). */
   def tokenHash(tok: Column): Column =
     conv(substring(sha2(tok, 256), 1, 15), 16, 10).cast("long")
 
-  /** raw integer histogram: Σ ±1 per bucket. Single fold over tokens
-    * (each token sha256'd once) — the dims×tokens shape
-    * `transform(dims, d -> aggregate(tokens, ...))` would re-evaluate
-    * the token subtree per dimension after Catalyst inlines it.
-    */
-  def rawEmbedding(text: Column, dim: Int = Dim): Column = {
-    val zeros = typedLit(Seq.fill(dim)(0L))
-    val dims = typedLit((0L until dim.toLong).toSeq)
-    val hashed = transform(tokensCol(text), tokenHash _)
-    aggregate(hashed, zeros, (acc, h) =>
-      zip_with(acc, dims, (a, d) =>
-        a + when(pmod(h, lit(dim.toLong)) === d,
-          when(pmod(shiftright(h, 6), lit(2L)) === 0L, 1L).otherwise(-1L))
-          .otherwise(0L)))
-  }
-
   /** L2-normalized double vector; zero-norm stays all-zero. Native
     * one-pass expression (tokenize → hash → accumulate → normalize in
-    * one JVM kernel, inside whole-stage codegen). The HOF composition
-    * below computes the identical values — SparkOpsSpec asserts
-    * native == HOF == JVM twin — but `aggregate`/`zip_with` lambdas
-    * are interpreted (CodegenFallback), ~4× slower on the V1 carrier.
+    * one JVM kernel, inside whole-stage codegen). A composed-HOF form
+    * kept in the test sources computes the identical values —
+    * SparkOpsSpec asserts native == HOF == JVM twin — but its
+    * `aggregate`/`zip_with` lambdas are interpreted (CodegenFallback),
+    * ~4× slower on the V1 carrier.
     */
   def embedding(text: Column, dim: Int = Dim): Column = {
     import org.apache.spark.sql.GraftExprBridge._
     toColumn(HashEmbed(toExpression(text), dim))
   }
-
-  /** the same embedding as composed Column HOFs (kept as the
-    * readable specification + cross-check of the native kernel)
-    */
-  def embeddingHof(text: Column, dim: Int = Dim): Column =
-    VectorExprs.l2Normalize(rawEmbedding(text, dim).cast("array<double>"))
 
   // ---- pure JVM twin (kernel/tests, and query-vector embedding) ----
 

@@ -17,6 +17,11 @@ import org.apache.spark.sql.functions._
   */
 object Corpus {
 
+  /** one row per (benchmark document, distinct n-gram hash) */
+  private def benchmarkGramRows(bench: DataFrame, textCol: String, n: Int): DataFrame =
+    graft.util.Staged.explodeOnce(bench, Seq.empty,
+      TextExprs.shingleHashes(col(textCol), distinct = true, n), "g")
+
   /** Benchmark decontamination: flag training documents that share at
     * least one word n-gram with the benchmark/eval corpus — the
     * standard guard against test-set leakage into training data (the
@@ -39,21 +44,9 @@ object Corpus {
     * (it should not), drop the hint and let AQE pick a shuffle join,
     * or prescreen with a bloom filter of the benchmark set.
     */
-  /** the benchmark's distinct n-gram hash set — ONE definition shared
-    * by the batch ops and the streaming twin (a copy already let their
-    * gram widths drift once)
-    */
-  def benchmarkGrams(bench: DataFrame, textCol: String, n: Int): DataFrame =
-    benchmarkGramRows(bench, textCol, n).distinct()
-
-  /** one row per (benchmark document, distinct n-gram hash) */
-  private def benchmarkGramRows(bench: DataFrame, textCol: String, n: Int): DataFrame =
-    graft.util.Staged.explodeOnce(bench, Seq.empty,
-      TextExprs.shingleHashes(col(textCol), distinct = true, n), "g")
-
   def decontaminate(train: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, n: Int = 5): DataFrame = {
-    val benchGrams = benchmarkGrams(bench, textCol, n)
+    val benchGrams = benchmarkGramRows(bench, textCol, n).distinct()
     // gram array staged below the explode (the repetitionStats lesson:
     // size() selected beside explode would re-run the kernel per gram)
     val staged = train.select(col(idCol).as("doc_id"),
@@ -458,7 +451,7 @@ object Corpus {
     // in O(1). One whole-array UDF call per doc (not per line) keeps
     // the per-row overhead a single invocation; null text stays null,
     // matching the HOF semantics it replaces.
-    // Lifecycle (caller-managed, like the streaming benchGrams cache):
+    // Lifecycle (caller-managed):
     // the broadcast must outlive the RETURNED LAZY FRAME, not this
     // call — destroy() here would break the caller's action, and
     // unpersist() is soft (executors re-fetch on next use), so neither

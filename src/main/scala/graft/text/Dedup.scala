@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.rag.HashEmbedder
 
 /** Deduplication operators for a training-data pipeline — exact,
   * MinHash+LSH (Broder 1997 resemblance sketch; banding per the
@@ -28,14 +27,10 @@ object Dedup {
   val WordRegex = "[A-Za-z0-9]+"
 
   /** word tokens — native byte-run kernel; identical values to
-    * [[wordsColHof]] (the regex form it replaced, kept as the
-    * spec cross-check)
+    * `regexp_extract_all(text, WordRegex, 0)` (the regex form it
+    * replaced, kept in the test sources as the spec cross-check)
     */
   def wordsCol(text: Column): Column = TextExprs.asciiWords(text)
-
-  /** the same tokens via regexp_extract_all — readable spec form */
-  def wordsColHof(text: Column): Column =
-    regexp_extract_all(text, lit(WordRegex), lit(0))
 
   /** rebalance to full parallelism before a compute-heavy projection —
     * a small corpus arriving as one file would otherwise pin the whole
@@ -51,18 +46,6 @@ object Dedup {
     // does on every call
     if (df.queryExecution.toRdd.getNumPartitions >= target) df
     else df.repartition(target)
-  }
-
-  /** word 3-shingles, as strings (empty array below 3 words —
-    * `sequence` would DESCEND on a negative span, so guard explicitly)
-    */
-  def shinglesCol(text: Column): Column = {
-    val w = wordsCol(text)
-    when(size(w) >= 3,
-      transform(sequence(lit(0), size(w) - 3), i =>
-        concat_ws(" ", element_at(w, i + 1), element_at(w, i + 2),
-          element_at(w, i + 3))))
-      .otherwise(array().cast("array<string>"))
   }
 
   // ---- seeded hashing: ONE sha256 per shingle, seeds derived by
@@ -387,20 +370,6 @@ object Dedup {
     * never re-evaluates the token array per bit.
     */
   def simhashCol(text: Column): Column = TextExprs.simhash(text)
-
-  /** the same SimHash as composed Column HOFs (readable spec +
-    * cross-check of the native kernel; spec-asserted equal)
-    */
-  def simhashColHof(text: Column): Column = {
-    val masks = typedLit((0 until SimBits).map(b => 1L << b))
-    val zeros = typedLit(Seq.fill(SimBits)(0L))
-    val hashed = transform(wordsCol(text), w => HashEmbedder.tokenHash(w))
-    val votes = aggregate(hashed, zeros, (acc, h) =>
-      zip_with(acc, masks, (a, m) =>
-        a + when(h.bitwiseAND(m) =!= 0L, 1L).otherwise(-1L)))
-    aggregate(zip_with(votes, masks, (v, m) => when(v > 0L, m).otherwise(0L)),
-      lit(0L), (acc, x) => acc + x)
-  }
 
   /** near-dup pairs by Hamming distance on SimHash, blocked by the
     * pigeonhole decomposition of Manku et al. (WWW 2007, §3): split

@@ -373,7 +373,9 @@ object TextKernels {
     * coincide exactly with the regex's char runs and each word's
     * bytes ARE its UTF-8 encoding (see [[wordRuns]]). One buffer
     * fetch, then zero-copy UTF8String views per word — no regex
-    * machinery, no per-match char decoding.
+    * machinery, no per-match char decoding. The words are views into
+    * the document's byte buffer, so a word value held before the
+    * UnsafeRow copy pins the whole document in memory.
     */
   def asciiWords(text: UTF8String): ArrayData = {
     val r = wordRunsOf(text) // null-total like the sibling kernels
@@ -419,7 +421,8 @@ object TextKernels {
   * interpreted HOFs and dominated the score-consuming queries
   * (group_median/quality_filter ≈ 1.2 s at sf0.1, ~6× the pruned
   * projection). hits(i) counts LOWERCASED words contained in lists(i)
-  * — identical values to TextOps.hits.
+  * — identical values to the `filter`+`isInCollection` form kept in
+  * the test sources as its reference.
   */
 case class WordStats(
     child: org.apache.spark.sql.catalyst.expressions.Expression,

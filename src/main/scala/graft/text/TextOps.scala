@@ -21,17 +21,6 @@ object TextOps {
     "fr" -> Seq("le", "la", "les", "et", "est", "une", "dans"),
     "es" -> Seq("el", "los", "las", "y", "es", "una", "en"))
 
-  private def words(text: Column): Column =
-    transform(regexp_extract_all(text, lit(Dedup.WordRegex), lit(0)),
-      w => lower(w))
-
-  /** composed-HOF form, kept as the spec reference for the native
-    * kernel (TextExprsSpec asserts equality); hot paths use
-    * [[TextExprs.wordStats]]
-    */
-  def hits(text: Column, list: Seq[String]): Column =
-    size(filter(words(text), w => w.isInCollection(list)))
-
   /** argmax over stopword hits with fixed tie order. All four lists
     * are counted by ONE native kernel pass (the per-list HOF chain is
     * interpreted and scanned the words 4×).

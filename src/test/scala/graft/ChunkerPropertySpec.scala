@@ -113,14 +113,26 @@ class ChunkerPropertySpec extends AnyFunSuite {
       Gen.const("```\ncode  \n\n\nmore\n```"), Gen.const("```"),
       Gen.asciiPrintableStr))
     check(Prop.forAll(elemGen) { els =>
-      graft.extract.LintNormalize.normalizeJoin(els) ==
-        graft.extract.LintNormalize.normalize(els.mkString("\n\n"))
+      graft.extract.ExtractReference.normalizeJoin(els) ==
+        graft.extract.ExtractReference.normalize(els.mkString("\n\n"))
     })
   }
 
   test("extraction kernel: total on arbitrary garbage (never throws)") {
-    check(Prop.forAll(Gen.asciiPrintableStr) { s =>
-      graft.extract.ExtractPipeline.extractSafe(s)._1 != null
+    // printable garbage, plus garbage built from the block-stream
+    // syntax (tabs, newlines, P/H prefixes, coordinate characters) so
+    // the structured parse paths are reached too
+    val syntax = Gen.oneOf(Gen.asciiPrintableChar,
+      Gen.oneOf('\t', '\n', 'P', 'H', '0', '7', ',', '.', '-', 'e', '|', '`'))
+    val garbage = Gen.oneOf(
+      Gen.nonEmptyListOf(Gen.asciiPrintableChar),
+      Gen.nonEmptyListOf(syntax)).map(_.mkString)
+    check(Prop.forAll(garbage) { s =>
+      val r = graft.extract.ExtractPipeline.extractRow(
+        org.apache.spark.unsafe.types.UTF8String.fromString(s))
+      val status = r.getUTF8String(0).toString
+      (status == "ok" || status == "err") &&
+        (status == "ok" || r.getUTF8String(1).numBytes() == 0)
     })
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.extract._
 import graft.gen.TranscriptGen
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-turn text equality of the extraction kernel vs the golden
   * renderer (FIXTURES.md §3) — the inverse-check core of the
@@ -45,7 +46,7 @@ class ExtractGoldenSpec extends AnyFunSuite {
           val hm = Headers.identify(blocks)
           val ordered = ReadingOrder.order(blocks)
           val viaElements =
-            LintNormalize.normalizeJoin(MarkdownEmitter.emit(ordered, hm))
+            ExtractReference.normalizeJoin(ExtractReference.emit(ordered, hm))
           val fused = MarkdownEmitter.emitNormalized(ordered, hm)
           assert(fused == viaElements,
             s"fused/element divergence conv=${t.conv_id} turn=${t.turn_idx}")
@@ -76,23 +77,31 @@ class ExtractGoldenSpec extends AnyFunSuite {
     assert(ExtractPipeline.extract("") == "")
   }
 
+  /** the kernel's row as (status, markdown, error) */
+  private def row(payload: String): (String, String, String) = {
+    val r = ExtractPipeline.extractRow(
+      if (payload == null) null else UTF8String.fromString(payload))
+    (r.getUTF8String(0).toString, r.getUTF8String(1).toString,
+      r.getUTF8String(2).toString)
+  }
+
   test("error capture never throws") {
-    val (s, _, _) = ExtractPipeline.extractSafe(null)
+    val (s, _, _) = row(null)
     assert(s == "err")
   }
 
   test("null and empty payloads report the intended 'empty input' error") {
-    assert(ExtractPipeline.extractSafe(null) == ("err", "", "empty input"))
-    assert(ExtractPipeline.extractSafe("") == ("err", "", "empty input"))
+    assert(row(null) == ("err", "", "empty input"))
+    assert(row("") == ("err", "", "empty input"))
   }
 
   test("lint normalize collapses blank runs and trailing space") {
-    assert(LintNormalize.normalize("a  \n\n\n\nb\n\n") == "a\n\nb\n")
+    assert(ExtractReference.normalize("a  \n\n\n\nb\n\n") == "a\n\nb\n")
   }
 
   test("lint normalize leaves fenced code interiors verbatim (MD012/MD009 exemption)") {
     val md = "a\n\n```\ncode  \n\n\nmore\n```\n\nb"
-    assert(LintNormalize.normalize(md) == "a\n\n```\ncode  \n\n\nmore\n```\n\nb\n")
+    assert(ExtractReference.normalize(md) == "a\n\n```\ncode  \n\n\nmore\n```\n\nb\n")
   }
 
   test("mixed-kind turn: page separator closes the PDF page before trailing plain text") {
@@ -134,6 +143,80 @@ class ExtractGoldenSpec extends AnyFunSuite {
       Block(BlockKind.Pdf, 0, 0, 0, 0, 0, 14.0, 0, "", 0, "t2", 2))
     val m = Headers.identify(blocks)
     assert(m.toMap == Map(18.0 -> 1, 14.0 -> 2))
+  }
+
+  private def pdf(size: Double, text: String, seq: Int, flags: Int = 0) =
+    Block(BlockKind.Pdf, 0, 0, 0, 0, 0, size, flags, "", 0, text, seq)
+
+  /** identify's map and every block's level equal the linear-probe
+    * reference (level compared by exact size bits)
+    */
+  private def assertHeadersMatchReference(blocks: Seq[Block], what: String): Unit = {
+    val got = Headers.identify(blocks)
+    val ref = ExtractReference.headerLevels(blocks)
+    assert(got.toMap == ref.toMap, what)
+    blocks.foreach(b => assert(got.level(b) == ExtractReference.level(ref, b),
+      s"$what: level of size ${b.fontSize}"))
+  }
+
+  test("header identification equals the linear-probe reference on seeded and adversarial blocks") {
+    (0L until 100L).foreach { c =>
+      TranscriptGen.genConv(7L, c)._1.foreach { t =>
+        assertHeadersMatchReference(BlockParser.parse(t.text), s"conv $c turn ${t.turn_idx}")
+      }
+    }
+    // random lists over a palette of adversarial sizes; HTML blocks,
+    // table rows and empty text must stay out of the histogram
+    val palette = Array(Double.NaN, -0.0, 0.0, -1.0, 1.0, 10.0, 10.0 + 1e-9,
+      12.0, 14.0, 18.0, 1e300, Double.MinPositiveValue,
+      Double.PositiveInfinity, Double.NegativeInfinity)
+    val rng = new scala.util.Random(11)
+    (0 until 500).foreach { k =>
+      val bs = Vector.tabulate(rng.nextInt(40)) { i =>
+        val kind = if (rng.nextInt(10) == 0) BlockKind.Html else BlockKind.Pdf
+        val flags = if (rng.nextInt(8) == 0) Block.TableRow else 0
+        Block(kind, 0, 0, 0, 0, 0, palette(rng.nextInt(palette.length)), flags,
+          "", 0, "x" * rng.nextInt(4), i)
+      }
+      assertHeadersMatchReference(bs, s"random list $k")
+    }
+    // -0.0 and 0.0 are two sizes; NaN is one size, never a header
+    val zeros = Vector(pdf(-1.0, "body text", 0), pdf(-0.0, "a", 1),
+      pdf(0.0, "b", 2), pdf(Double.NaN, "cc", 3), pdf(Double.NaN, "cc", 4))
+    assert(Headers.identify(zeros).level(zeros(1)) == 2)
+    assert(Headers.identify(zeros).level(zeros(2)) == 1)
+    assertHeadersMatchReference(zeros, "signed zeros and NaN")
+    // equal counts: the smaller size is body
+    val tie = Vector(pdf(12.0, "aaaa", 0), pdf(10.0, "bbbb", 1), pdf(14.0, "c", 2))
+    assert(Headers.identify(tie).toMap == Map(14.0 -> 1, 12.0 -> 2))
+    assertHeadersMatchReference(tie, "tie")
+    // 10^4 distinct sizes: every size above body is a header, levels cap at 6
+    val many = Vector.tabulate(10000)(i =>
+      pdf(1.0 + i * 0.25, if (i == 0) "body text" else "h", i))
+    assert(Headers.identify(many).toMap.size == 9999)
+    assertHeadersMatchReference(many, "10^4 distinct sizes")
+  }
+
+  test("header identification cost is linear in distinct font sizes (n vs 4n)") {
+    def blocksOf(d: Int) = Vector.tabulate(d)(i =>
+      pdf(1.0 + i, if (i == 0) "body text" else "h", i))
+    val small = blocksOf(1 << 13)
+    val large = blocksOf(1 << 15)
+    // identify once, then one level lookup per block (the emitter's use)
+    def run(bs: Vector[Block]): Long = {
+      val h = Headers.identify(bs)
+      var acc = 0L
+      bs.foreach(b => acc += h.level(b))
+      acc
+    }
+    def best(bs: Vector[Block]): Long =
+      (0 until 7).map { _ =>
+        val t0 = System.nanoTime(); run(bs); System.nanoTime() - t0
+      }.min
+    (0 until 5).foreach { _ => run(small); run(large) } // JIT
+    val ratio = best(large).toDouble / best(small).toDouble
+    // linear reads ~4; quadratic would read ~16
+    assert(ratio < 8.0, s"4n/n time ratio $ratio")
   }
 
   test("reading order: two columns read left column first") {

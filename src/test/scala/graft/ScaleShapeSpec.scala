@@ -226,16 +226,16 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
       "naïve café touché 日本語42mix déjà-vu")
     val rows = texts.toDF("text").select(
       graft.text.TextExprs.shingleHashes(col("text"), distinct = false).as("n_all"),
-      transform(Dedup.shinglesCol(col("text")), s => Dedup.shingleHash(s)).as("h_all"),
+      transform(ReferenceForms.shinglesCol(col("text")), s => Dedup.shingleHash(s)).as("h_all"),
       graft.text.TextExprs.shingleHashes(col("text"), distinct = true).as("n_dst"),
-      transform(array_distinct(Dedup.shinglesCol(col("text"))),
+      transform(array_distinct(ReferenceForms.shinglesCol(col("text"))),
         s => Dedup.shingleHash(s)).as("h_dst"),
       graft.text.TextExprs.simhash(col("text")).as("n_sim"),
-      Dedup.simhashColHof(col("text")).as("h_sim"),
+      ReferenceForms.simhashColHof(col("text")).as("h_sim"),
       graft.text.TextExprs.minhashSig(col("text")).as("n_mh"),
       Dedup.signatureCol(col("text")).as("h_mh"),
       Dedup.wordsCol(col("text")).as("n_words"),
-      Dedup.wordsColHof(col("text")).as("h_words")).collect()
+      ReferenceForms.wordsColHof(col("text")).as("h_words")).collect()
     texts.zip(rows).foreach { case (t, r) =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"all-shingles: '$t'")
       assert(r.getSeq[Long](2) == r.getSeq[Long](3), s"distinct-shingles: '$t'")
@@ -264,7 +264,7 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
       aggregate(regexp_extract_all(col("text"), lit(Dedup.WordRegex), lit(0)),
         lit(0L), (acc, w) => acc + length(w)),
       st.getField("hits"),
-      array(lists.map(l => TextOps.hits(col("text"), l)): _*),
+      array(lists.map(l => ReferenceForms.hits(col("text"), l)): _*),
       st.getField("n_tokens"),
       regexp_count(col("text"), lit(graft.chunk.Tokenizer.TokenRegex)),
       st.getField("n_punct"),

@@ -7,10 +7,11 @@ import org.scalatest.BeforeAndAfterAll
 import graft.gen.TranscriptGen
 import graft.multimodal.Multimodal
 import graft.rag.{AnnLsh, HashEmbedder, Similarity, TopK}
+import graft.sources.Sources
 import graft.store.{Manifest, StoreOps}
 
 /** Distributed-path integration tests: the checkpoint/resume protocol,
-  * store semantics, and JVM↔Column twin consistency.
+  * store semantics, sources and sinks, and JVM↔Column twin consistency.
   */
 class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -151,7 +152,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "", "the the the", "one")
     val rows = texts.toDF("text")
       .select(HashEmbedder.embedding(col("text")).as("native"),
-        HashEmbedder.embeddingHof(col("text")).as("hof"))
+        ReferenceForms.embeddingHof(col("text")).as("hof"))
       .collect()
     texts.zip(rows).foreach { case (t, r) =>
       val native = r.getSeq[Double](0).toVector
@@ -257,5 +258,50 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // stable across runs
     val again = Multimodal.decodeMeta(df).collect().sortBy(_.doc_id)
     assert(metas.toSeq == again.toSeq)
+  }
+
+  test("sources: binaryFile scan, markdown sink, truncate, exit code") {
+    import spark.implicits._
+    // binaryFile scan over this repo's markdown docs
+    val bf = Sources.binaryFiles(spark, sys.props("user.dir"), glob = "*.md",
+      recursive = false)
+    assert(bf.count() > 0)
+    assert(bf.columns.contains("content") && bf.columns.contains("path"))
+    // markdown sink partitions by conv bucket
+    val extracted = graft.extract.ExtractPipeline.overTranscripts(
+      spark.range(0, 3).flatMap(i => graft.gen.TranscriptGen.genConv(42L, i)._1).toDF())
+    val out = java.nio.file.Files.createTempDirectory("mdsink").toString + "/md"
+    Sources.writeMarkdown(extracted, out, buckets = 4)
+    assert(spark.read.parquet(out).count() == extracted.count())
+    // truncate empties but preserves schema
+    Sources.truncate(spark, out)
+    val after = spark.read.parquet(out)
+    assert(after.count() == 0 && after.columns.contains("markdown"))
+    // exit code from summary
+    assert(Sources.exitCode(
+      graft.extract.ExtractPipeline.summary(extracted)) == 0)
+  }
+
+  test("nearest_centroid fails loudly on dim mismatch and null elements") {
+    val cents = Seq(Array(1.0, 0.0), Array(0.0, 1.0))
+    def msgOf(t: Throwable): String = {
+      val sb = new StringBuilder
+      var c: Throwable = t
+      while (c != null) { sb ++= " " + String.valueOf(c.getMessage); c = c.getCause }
+      sb.toString
+    }
+    val mismatch = intercept[Throwable] {
+      spark.range(1).select(graft.rag.VectorExprs.nearestCentroid(
+        array(lit(1.0), lit(2.0), lit(3.0)), cents)).collect()
+    }
+    assert(msgOf(mismatch).contains("dim"))
+    val nul = intercept[Throwable] {
+      spark.range(1).select(graft.rag.VectorExprs.nearestCentroid(
+        array(lit(1.0), lit(null).cast("double")), cents)).collect()
+    }
+    assert(msgOf(nul).contains("null element"))
+    val ok = spark.range(1).select(graft.rag.VectorExprs.nearestCentroid(
+      array(lit(0.9), lit(0.1)), cents)).head().getInt(0)
+    assert(ok == 0)
   }
 }
