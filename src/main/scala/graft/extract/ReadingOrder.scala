@@ -64,20 +64,25 @@ object ReadingOrder {
   /** sort a(from until until) into (column, y0, x0, seq) order */
   private def orderPageInPlace(a: Array[Block], from: Int, until: Int): Unit = {
     if (until - from <= 1) return
-    val intervals = mergeIntervals(
-      (from until until).map(k => (a(k).x0, a(k).x1)))
-    val nIv = intervals.length
+    val (los, his) = mergeIntervals((from until until).map(k => (a(k).x0, a(k).x1)))
+    val nIv = los.length
+    // the first interval containing x0, else nIv. The starts ascend
+    // (NaN last) and each start exceeds every earlier interval's end,
+    // so only the last interval starting at or before x0 can hold it:
+    // binary-search for it, then check its end (a NaN end holds nothing)
     def colOf(b: Block): Int = {
-      var i = 0
-      while (i < nIv) {
-        if (b.x0 >= intervals(i)._1 && b.x0 <= intervals(i)._2) return i
-        i += 1
+      val x = b.x0
+      var lo = 0
+      var hi = nIv
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (los(mid) <= x) lo = mid + 1 else hi = mid
       }
-      nIv
+      if (lo > 0 && x <= his(lo - 1)) lo - 1 else nIv
     }
-    // colOf inside the comparator: pages are a handful of blocks over
-    // 1-3 merged intervals, so recomputing the linear probe per
-    // comparison beats any per-block key materialization
+    // colOf inside the comparator: no per-block key array to allocate
+    // on the common 1-3-interval page, and O(log intervals) per
+    // comparison on a page of many columns
     java.util.Arrays.sort(a, from, until, (p: Block, q: Block) => {
       var c = Integer.compare(colOf(p), colOf(q))
       if (c == 0) c = java.lang.Double.compare(p.y0, q.y0)
@@ -87,16 +92,19 @@ object ReadingOrder {
     })
   }
 
-  private def mergeIntervals(ivs: Seq[(Double, Double)]): Vector[(Double, Double)] = {
-    if (ivs.isEmpty) return Vector.empty
+  /** x-intervals merged by overlap: (starts, ends), starts ascending */
+  private[extract] def mergeIntervals(ivs: Seq[(Double, Double)]): (Array[Double], Array[Double]) = {
+    if (ivs.isEmpty) return (Array.emptyDoubleArray, Array.emptyDoubleArray)
     val sorted = ivs.sorted
-    val out = Vector.newBuilder[(Double, Double)]
+    val los = Array.newBuilder[Double]
+    val his = Array.newBuilder[Double]
     var (lo, hi) = sorted.head
     sorted.tail.foreach { case (a, b) =>
       if (a <= hi) { if (b > hi) hi = b }
-      else { out += ((lo, hi)); lo = a; hi = b }
+      else { los += lo; his += hi; lo = a; hi = b }
     }
-    out += ((lo, hi))
-    out.result()
+    los += lo
+    his += hi
+    (los.result(), his.result())
   }
 }

@@ -38,10 +38,11 @@ object AnnIvf {
   private val centroidCache =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  /** generic per-corpus-snapshot training-artifact cache — shared by
-    * the IVF centroid tables and the PQ codebooks (AnnPq).
+  /** generic per-corpus-snapshot artifact cache — shared by the IVF
+    * centroid tables, the PQ codebooks (AnnPq) and the retrieval
+    * queries' query vector (`Queries.queryVec`).
     */
-  private[rag] def cachedArtifact[T <: AnyRef](emb: DataFrame, params: String)(
+  private[graft] def cachedArtifact[T <: AnyRef](emb: DataFrame, params: String)(
       train: => T): T = {
     if (centroidCache.size > 64) centroidCache.clear()
     // 256-bit digest of the resolved file list — a 32-bit hash could

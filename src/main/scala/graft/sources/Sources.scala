@@ -33,7 +33,7 @@ object Sources {
     * schema (vector_store.py:266-282).
     */
   def truncate(spark: SparkSession, tableDir: String): Unit = {
-    val schema = spark.read.parquet(tableDir).schema
+    val schema = graft.store.Parquet.schema(spark, tableDir)
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
       .write.mode(SaveMode.Overwrite).parquet(tableDir)
   }

@@ -157,13 +157,13 @@ object Compaction {
             // rewrite (one file listing + schema resolve per
             // partition, not two), and runs before the write so the
             // guard reflects exactly the files the rewrite read.
-            val data = spark.read.parquet(live.getAbsolutePath)
+            val data = Parquet.read(spark, live.getAbsolutePath)
             val rowsBefore = data.count()
             data.coalesce(p.targetFiles(targetBytes))
               .write.mode(SaveMode.Overwrite).parquet(staged.getAbsolutePath)
             // multiset guard before anything destructive: parquet
             // footer counts (metadata-only scans) must agree
-            val rowsAfter = spark.read.parquet(staged.getAbsolutePath).count()
+            val rowsAfter = Parquet.read(spark, staged.getAbsolutePath).count()
             require(rowsBefore == rowsAfter,
               s"compaction would change ${p.name}: $rowsBefore -> $rowsAfter rows")
             // swap (each step atomic; recover() completes/rolls back

@@ -43,7 +43,7 @@ object Manifest {
   def load(spark: SparkSession, manifestDir: String): DataFrame = {
     val p = new java.io.File(manifestDir)
     if (p.exists() && p.listFiles() != null && p.listFiles().nonEmpty)
-      spark.read.parquet(manifestDir)
+      Parquet.read(spark, manifestDir)
     else
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -98,7 +98,7 @@ object Manifest {
     */
   def readSnapshot(spark: SparkSession, outDir: String, manifest: DataFrame,
       asOf: Column): DataFrame =
-    spark.read.parquet(outDir).join(
+    Parquet.read(spark, outDir).join(
       broadcast(snapshotAsOf(manifest, asOf).select("partition_id")),
       Seq("partition_id"), "left_semi")
 
@@ -168,7 +168,7 @@ object Manifest {
       // domain is `todo`, NOT the written data — an EMPTY partition
       // must still be marked done or resume would retry it forever.
       val finished = new java.sql.Timestamp(System.currentTimeMillis())
-      val outStats = scala.util.Try(spark.read.parquet(outDir))
+      val outStats = scala.util.Try(Parquet.read(spark, outDir))
         .map(_.filter(col("partition_id").isin(todo.toIndexedSeq: _*))
           .groupBy("partition_id").agg(
             count(lit(1)).as("rows_out"),

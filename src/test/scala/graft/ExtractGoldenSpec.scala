@@ -228,6 +228,65 @@ class ExtractGoldenSpec extends AnyFunSuite {
     assert(ordered == Vector("L1", "L2", "R1", "R2"))
   }
 
+  private def assertOrderMatchesReference(blocks: Seq[Block], what: String): Unit = {
+    val got = ReadingOrder.order(blocks)
+    val ref = ExtractReference.readingOrder(blocks)
+    assert(got.length == ref.length && got.zip(ref).forall { case (g, r) => g eq r },
+      s"$what:\n${got.map(_.seq)}\n${ref.map(_.seq)}")
+  }
+
+  test("reading order equals the linear-probe reference on seeded and adversarial pages") {
+    (0L until 100L).foreach { c =>
+      TranscriptGen.genConv(7L, c)._1.foreach { t =>
+        assertOrderMatchesReference(BlockParser.parse(t.text), s"conv $c turn ${t.turn_idx}")
+      }
+    }
+    // x coordinates from a palette with NaN, signed zeros, infinities
+    // and values that make touching (x1 == next x0) and inverted
+    // (x1 < x0) intervals; repeated seqs, y0 ties, several pages and
+    // non-PDF blocks mixed in
+    val xs = Array(Double.NaN, -0.0, 0.0, -1.0, 1.0, 2.0, 3.0, 5.0, 5.0 + 1e-9,
+      100.0, Double.PositiveInfinity, Double.NegativeInfinity)
+    val rng = new scala.util.Random(13)
+    (0 until 2000).foreach { k =>
+      val bs = Vector.tabulate(rng.nextInt(30)) { i =>
+        val kind = if (rng.nextInt(10) == 0) BlockKind.Html else BlockKind.Pdf
+        Block(kind, rng.nextInt(3), xs(rng.nextInt(xs.length)), rng.nextInt(4).toDouble,
+          xs(rng.nextInt(xs.length)), 0, 10.0, 0, "", 0, "t", rng.nextInt(25))
+      }
+      assertOrderMatchesReference(bs, s"random page $k")
+    }
+    // many disjoint columns, one block each, plus blocks between them
+    val cols = Vector.tabulate(300)(i =>
+      Block(BlockKind.Pdf, 0, 3.0 * i, (i * 7919 % 300).toDouble, 3.0 * i + 1, 0,
+        10.0, 0, "", 0, "c", i) )
+    val gaps = Vector.tabulate(50)(i =>
+      Block(BlockKind.Pdf, 0, 3.0 * i + 2, 0, 3.0 * i + 2, 0, 10.0, 0, "", 0, "g", 300 + i))
+    assertOrderMatchesReference(cols ++ gaps, "300 columns")
+  }
+
+  test("reading order cost is linear-logarithmic in the columns of a page (n vs 4n)") {
+    // n blocks in n disjoint x ranges on one page, seq shuffled
+    def pageOf(n: Int) = {
+      val seqs = new scala.util.Random(17).shuffle((0 until n).toVector)
+      Vector.tabulate(n)(i => Block(BlockKind.Pdf, 0, 3.0 * seqs(i), (i % 11).toDouble,
+        3.0 * seqs(i) + 1, 0, 10.0, 0, "", 0, "c", i))
+    }
+    val small = pageOf(1 << 12)
+    val large = pageOf(1 << 14)
+    def time(bs: Vector[Block]): Long = {
+      val t0 = System.nanoTime(); ReadingOrder.order(bs); System.nanoTime() - t0
+    }
+    (0 until 5).foreach { _ => time(small); time(large) } // JIT
+    // best of 7, the two sizes interleaved so a burst of host load
+    // lands on both
+    val (ts, tl) = (0 until 7).map(_ => (time(small), time(large))).unzip
+    val ratio = tl.min.toDouble / ts.min.toDouble
+    // n log² n (a binary search per comparison) reads ~5.4; the linear
+    // probe (n² log n) read 19
+    assert(ratio < 8.0, s"4n/n time ratio $ratio")
+  }
+
   test("boilerplate: nav/footer and link-dense blocks are dropped") {
     def h(path: String, lc: Int, t: String) =
       Block(BlockKind.Html, 0, 0, 0, 0, 0, 0, 0, path, lc, t, 0)

@@ -1,8 +1,9 @@
 package graft.extract
 
-/** The forms the extraction kernel's fused and hashed paths replaced,
-  * kept as the specs' references: the element-vector emitter, the
-  * two-step join + normalize, and the linear-probe header histogram.
+/** The forms the extraction kernel's fused, hashed and binary-search
+  * paths replaced, kept as the specs' references: the element-vector
+  * emitter, the two-step join + normalize, the linear-probe header
+  * histogram and the linear-probe reading-order column.
   */
 object ExtractReference {
 
@@ -115,4 +116,34 @@ object ExtractReference {
       case (s, l) if java.lang.Double.doubleToLongBits(s) ==
         java.lang.Double.doubleToLongBits(b.fontSize) => l
     }.getOrElse(0)
+
+  /** `ReadingOrder.order` with a block's column found by a linear
+    * probe over the merged x-intervals (O(columns) per comparison):
+    * PDF pages ascending, each by (column, y0, x0, seq), then the
+    * other blocks by seq.
+    */
+  def readingOrder(blocks: Seq[Block]): Vector[Block] = {
+    val (pdf, rest) = blocks.partition(_.kind == BlockKind.Pdf)
+    val pages = pdf.sortBy(b => (b.page, b.seq)).groupBy(_.page).toVector.sortBy(_._1)
+    pages.flatMap { case (_, page) =>
+      val (los, his) = ReadingOrder.mergeIntervals(page.map(b => (b.x0, b.x1)))
+      def colOf(b: Block): Int = {
+        var i = 0
+        while (i < los.length) {
+          if (b.x0 >= los(i) && b.x0 <= his(i)) return i
+          i += 1
+        }
+        los.length
+      }
+      page.sorted(new Ordering[Block] {
+        def compare(p: Block, q: Block): Int = {
+          var c = Integer.compare(colOf(p), colOf(q))
+          if (c == 0) c = java.lang.Double.compare(p.y0, q.y0)
+          if (c == 0) c = java.lang.Double.compare(p.x0, q.x0)
+          if (c == 0) c = Integer.compare(p.seq, q.seq)
+          c
+        }
+      })
+    } ++ rest.sortBy(_.seq)
+  }
 }
