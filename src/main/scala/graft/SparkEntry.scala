@@ -1765,14 +1765,16 @@ object Queries {
     * embeds the query text; here the query arrives pre-embedded —
     * vector_store.py:151-179 search_with_embedding). Cached per
     * corpus snapshot like the IVF centroids, so only the first call on
-    * a set of files runs a job.
+    * a set of files runs a job — exactly one: the filter keeps one row,
+    * so `collect` scans every file in one job where `head` may scan
+    * partition by partition.
     */
   def queryVec(s: SparkSession, dir: String): Array[Double] = {
     val emb = SparkEntry.embeddings(s, dir)
     AnnIvf.cachedArtifact[Array[Double]](emb, "queryVec")(
       emb.filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray).clone()
+        .collect().head.getSeq[Double](0).toArray).clone()
   }
 
   /** V10 — retrieval half of the query pipeline + deterministic

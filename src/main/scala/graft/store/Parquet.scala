@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.FileListing
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
@@ -16,8 +17,11 @@ import org.apache.spark.sql.types.StructType
   * with Spark's own converter, so the schema is the one inference
   * would produce, and it cannot drift from the file. Partition columns
   * are still discovered from the directory names when the relation is
-  * resolved (a driver-side listing, as before). At cluster scale this
-  * is one small footer GET instead of a scheduled job.
+  * resolved (a driver-side listing, as before). The driver-side cost
+  * is one getFileStatus on the path, one listStatus per directory
+  * level down to the first data file and one footer read, in place of
+  * a scheduled job; Spark still lists the whole tree when it resolves
+  * the relation, as it did before.
   */
 object Parquet {
 
@@ -31,7 +35,8 @@ object Parquet {
   private def footerSchema(spark: SparkSession, path: String): StructType = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
-    val file = firstDataFile(root.getFileSystem(conf), root).getOrElse(
+    val fs = root.getFileSystem(conf)
+    val file = firstDataFile(fs, fs.getFileStatus(root)).getOrElse(
       throw new java.io.FileNotFoundException(s"no parquet data file under $path"))
     val footer = ParquetFooterReader.readFooter(
       HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
@@ -39,21 +44,17 @@ object Parquet {
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
-  /** the path itself, or its first non-empty, non-hidden leaf file in
-    * name order (partition directories included)
+  /** the path itself, or its first non-empty leaf file in name order
+    * (partition directories included) among the names Spark's file
+    * index lists; the summary files it also lists hold no rows and are
+    * skipped (nothing here writes them, and Spark writes none by default)
     */
-  private def firstDataFile(fs: FileSystem, p: Path): Option[FileStatus] = {
-    val st = fs.getFileStatus(p)
+  private def firstDataFile(fs: FileSystem, st: FileStatus): Option[FileStatus] =
     if (!st.isDirectory) Some(st).filter(_.getLen > 0)
-    else fs.listStatus(p).filterNot(s => hidden(s.getPath.getName))
+    else fs.listStatus(st.getPath).filterNot(s => skipped(s.getPath.getName))
       .sortBy(_.getPath.getName).iterator
-      .flatMap(s => firstDataFile(fs, s.getPath)).nextOption()
-  }
+      .flatMap(firstDataFile(fs, _)).nextOption()
 
-  /** the names Spark's file listing skips: `_SUCCESS`, `.crc`, staging
-    * dirs and files still being copied
-    */
-  private def hidden(name: String): Boolean =
-    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
-      name.endsWith("._COPYING_")
+  private def skipped(name: String): Boolean =
+    FileListing.skipped(name) || name == "_metadata" || name == "_common_metadata"
 }
