@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 /** C1 — page/block tokenization (SURVEY.md §2.2).
   *
   * The reference delegates span extraction to PyMuPDF
@@ -16,78 +18,127 @@ package graft.extract
   * blocks (mirrors the reference's per-document error tolerance,
   * converter.py:234-242, at line granularity).
   *
-  * Lines are parsed IN PLACE over the payload (field scans carry
-  * [from,to) bounds): the only substrings taken are the ones that
-  * outlive the parse — the block's content (and an HTML block's tag
-  * path). The former per-line `substring(start, end)` copied every
-  * structured line once more than needed; content dominates line
-  * length, so that was nearly half the parser's character traffic.
+  * Lines are parsed IN PLACE over the payload's UTF-8 bytes: a block
+  * records the offsets of its text and tag path, and its numeric
+  * fields are read without decoding. Every separator of the grammar
+  * is ASCII, and no byte of a multi-byte UTF-8 sequence is ASCII, so
+  * byte offsets split the text exactly where the decoded String would.
+  * The line scan also validates the UTF-8, eight ASCII bytes per step;
+  * a block's UTF-16 length is its byte length unless its line holds a
+  * non-ASCII byte, and only then is it counted.
   */
 object BlockParser {
 
-  def parse(payload: String): Vector[Block] = {
-    if (payload == null || payload.isEmpty) return Vector.empty
-    val out = Vector.newBuilder[Block]
+  /** Blocks of a String payload (its UTF-8 encoding, a fresh instance). */
+  def parse(payload: String): Blocks = {
+    val out = new Blocks
+    if (payload != null) {
+      val b = payload.getBytes(UTF_8)
+      parseInto(out, b, 0, b.length)
+    }
+    out
+  }
+
+  /** Parse `bytes[from, to)` into `out` (cleared first). Returns false,
+    * leaving `out` unspecified, when the bytes are not well-formed
+    * UTF-8: the caller re-encodes the decoded payload (malformed
+    * sequences become U+FFFD, as `UTF8String.toString` makes them) and
+    * parses that.
+    */
+  def parseInto(out: Blocks, bytes: Array[Byte], from: Int, to: Int): Boolean = {
+    out.clear(bytes)
+    val words = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     var seq = 0
-    var start = 0
-    val n = payload.length
-    while (start <= n - 1) {
-      var end = payload.indexOf('\n', start)
-      if (end < 0) end = n
-      if (end > start) {
-        out += parseLine(payload, start, end, seq)
+    var start = from
+    while (start < to) {
+      // to the line end: eight ASCII bytes at a time while no '\n' is
+      // among them, else one character, validating non-ASCII ones
+      var i = start
+      var ascii = true
+      var atEnd = false
+      while (!atEnd) {
+        while (i + 8 <= to && {
+          val w = words.getLong(i)
+          val x = w ^ Newlines
+          ((w | ((x - Ones) & ~x)) & High) == 0 // all ASCII, no zero byte in x
+        }) i += 8
+        if (i >= to || bytes(i) == '\n') atEnd = true
+        else if (bytes(i) >= 0) i += 1
+        else {
+          val n = sequenceLength(bytes, i, to)
+          if (n == 0) return false
+          ascii = false
+          i += n
+        }
+      }
+      if (i > start) {
+        parseLine(out, bytes, start, i, ascii, seq)
         seq += 1
       }
-      start = end + 1
+      start = i + 1
     }
-    out.result()
+    true
   }
 
-  private def parseLine(s: String, from: Int, to: Int, seq: Int): Block = {
-    if (to - from >= 2 && s.charAt(from) == 'P' && hasTab(s, from + 1, to)) {
-      val b = parsePdf(s, from, to, seq)
-      if (b != null) b else plain(s.substring(from, to), seq)
-    } else if (to - from >= 2 && s.charAt(from) == 'H' &&
-      s.charAt(from + 1) == '\t') {
-      val b = parseHtml(s, from, to, seq)
-      if (b != null) b else plain(s.substring(from, to), seq)
-    } else {
-      plain(s.substring(from, to), seq)
-    }
+  private final val High = 0x8080808080808080L
+  private final val Ones = 0x0101010101010101L
+  private final val Newlines = 0x0a0a0a0a0a0a0a0aL
+
+  /** byte length of the well-formed UTF-8 sequence at `i` whose lead
+    * byte is not ASCII (Unicode Table 3-7: no overlong forms, no
+    * surrogates, nothing above U+10FFFF); 0 when it is malformed
+    */
+  private def sequenceLength(s: Array[Byte], i: Int, to: Int): Int = {
+    val b0 = s(i) & 0xff
+    @inline def cont(k: Int, lo: Int, hi: Int): Boolean =
+      i + k < to && { val c = s(i + k) & 0xff; c >= lo && c <= hi }
+    if (b0 >= 0xc2 && b0 <= 0xdf) { if (cont(1, 0x80, 0xbf)) 2 else 0 }
+    else if (b0 >= 0xe0 && b0 <= 0xef) {
+      val lo = if (b0 == 0xe0) 0xa0 else 0x80
+      val hi = if (b0 == 0xed) 0x9f else 0xbf
+      if (cont(1, lo, hi) && cont(2, 0x80, 0xbf)) 3 else 0
+    } else if (b0 >= 0xf0 && b0 <= 0xf4) {
+      val lo = if (b0 == 0xf0) 0x90 else 0x80
+      val hi = if (b0 == 0xf4) 0x8f else 0xbf
+      if (cont(1, lo, hi) && cont(2, 0x80, 0xbf) && cont(3, 0x80, 0xbf)) 4 else 0
+    } else 0
   }
 
-  private def plain(text: String, seq: Int): Block =
-    Block(BlockKind.Plain, 0, 0, 0, 0, 0, 0.0, 0, "", 0, text, seq)
-
-  // field scans are BOUNDED manual loops, never String.indexOf with a
-  // post-check: indexOf has no end bound (pre-JDK-21), so a missing
-  // separator would scan to the END OF THE PAYLOAD — O(payload) per
-  // 'P'-prefixed tab-free line, O(n²) on adversarial plain prose
-
-  @inline private def hasTab(s: String, from: Int, to: Int): Boolean = {
+  /** UTF-16 length of well-formed UTF-8 `s[from, to)` */
+  private def chars(s: Array[Byte], from: Int, to: Int): Int = {
+    var n = 0
     var i = from
     while (i < to) {
-      if (s.charAt(i) == '\t') return true
+      val b = s(i)
+      if ((b & 0xc0) != 0x80) n += 1
+      if ((b & 0xf8) == 0xf0) n += 1
       i += 1
     }
-    false
+    n
   }
 
-  /** next field boundary within [from,to); -1 when missing */
-  @inline private def tab(s: String, from: Int, to: Int): Int = {
-    var i = from
-    while (i < to) {
-      if (s.charAt(i) == '\t') return i
-      i += 1
-    }
-    -1
+  /** the line `s[from, to)`, all ASCII or not */
+  private def parseLine(out: Blocks, s: Array[Byte], from: Int, to: Int,
+      ascii: Boolean, seq: Int): Unit = {
+    val parsed =
+      if (s(from) == 'P') parsePdf(out, s, from, to, ascii, seq)
+      else if (to - from >= 2 && s(from) == 'H' && s(from + 1) == '\t')
+        parseHtml(out, s, from, to, ascii, seq)
+      else false
+    if (!parsed)
+      out.add(Blocks.Plain, 0, 0, 0, 0, 0, 0.0, 0, from, 0, 0,
+        from, to - from, if (ascii) to - from else chars(s, from, to), seq)
   }
 
-  /** next ',' within [from,to); -1 when missing */
-  @inline private def comma(s: String, from: Int, to: Int): Int = {
+  // field scans are BOUNDED manual loops over the line: a missing
+  // separator must not scan to the end of the payload (O(n²) on
+  // adversarial 'P'-prefixed prose)
+
+  /** next `c` within [from,to); -1 when missing */
+  @inline private def next(s: Array[Byte], c: Int, from: Int, to: Int): Int = {
     var i = from
     while (i < to) {
-      if (s.charAt(i) == ',') return i
+      if (s(i) == c) return i
       i += 1
     }
     -1
@@ -96,27 +147,27 @@ object BlockParser {
   private val Pow10: Array[Double] =
     Array.tabulate(16)(i => math.pow(10, i)) // 10^0..10^15, all exact
 
-  /** Double.parseDouble of line[from,to) with an allocation-free fast
+  /** Double.parseDouble of s[from,to) with an allocation-free fast
     * path for the dominant coordinate shape `-?d+(.d+)?` at ≤ 15
     * digits: both the mantissa integer and 10^frac are exactly
     * representable, so ONE correctly-rounded division yields the same
     * bits parseDouble's general algorithm produces (the classic
     * Clinger fast path). Anything else — signs, exponents, hex
-    * floats, NaN/Infinity, whitespace, > 15 digits — falls back to
-    * parseDouble on a substring, preserving exact JDK semantics
+    * floats, NaN/Infinity, whitespace, > 15 digits — decodes the
+    * field and calls parseDouble, preserving exact JDK semantics
     * including its NumberFormatException.
     */
-  private def parseDoubleField(line: String, from: Int, to: Int): Double = {
+  private def parseDoubleField(s: Array[Byte], from: Int, to: Int): Double = {
     var i = from
     var neg = false
-    if (i < to && line.charAt(i) == '-') { neg = true; i += 1 }
+    if (i < to && s(i) == '-') { neg = true; i += 1 }
     var m = 0L
     var digits = 0
     var frac = 0
     var seenDot = false
     var simple = i < to
     while (simple && i < to) {
-      val c = line.charAt(i)
+      val c = s(i)
       if (c >= '0' && c <= '9') {
         m = m * 10 + (c - '0')
         digits += 1
@@ -128,45 +179,72 @@ object BlockParser {
       } else simple = false
     }
     if (!simple || digits == 0 || digits > 15 || (seenDot && frac == 0))
-      return java.lang.Double.parseDouble(line.substring(from, to))
+      return java.lang.Double.parseDouble(new String(s, from, to - from, UTF_8))
     val v = if (frac == 0) m.toDouble else m.toDouble / Pow10(frac)
     if (neg) -v else v
   }
 
-  /** `P<page>\t<x0>,<y0>,<x1>,<y1>\t<fontSize>\t<flags>\t<content>`
-    * parsed in [from,to); null on any malformed field (caller degrades
-    * the line to Plain — same totality as the substring-based parse).
+  /** Integer.parseInt of s[from,to): ASCII digit runs of ≤ 9 digits in
+    * place; anything else (signs, Unicode digits, overflow, empty)
+    * decodes the field and calls parseInt, which throws on malformed.
     */
-  private def parsePdf(s: String, from: Int, to: Int, seq: Int): Block = {
-    val t1 = tab(s, from, to); if (t1 < 0) return null
-    val t2 = tab(s, t1 + 1, to); if (t2 < 0) return null
-    val t3 = tab(s, t2 + 1, to); if (t3 < 0) return null
-    val t4 = tab(s, t3 + 1, to); if (t4 < 0) return null
+  private def parseIntField(s: Array[Byte], from: Int, to: Int): Int = {
+    var v = 0
+    var i = from
+    while (i < to && i - from < 9 && s(i) >= '0' && s(i) <= '9') {
+      v = v * 10 + (s(i) - '0')
+      i += 1
+    }
+    if (i == to && to > from) v
+    else Integer.parseInt(new String(s, from, to - from, UTF_8))
+  }
+
+  /** `P<page>\t<x0>,<y0>,<x1>,<y1>\t<fontSize>\t<flags>\t<content>`
+    * parsed in [from,to); false on any malformed field (the caller
+    * degrades the line to Plain). One pass finds the first four tabs
+    * and the first three commas between the first two, then each field
+    * is parsed alone.
+    */
+  private def parsePdf(out: Blocks, s: Array[Byte], from: Int, to: Int,
+      ascii: Boolean, seq: Int): Boolean = {
+    var t1, t2, t3, t4 = -1
+    var c1, c2, c3 = -1
+    var i = from + 1
+    while (t4 < 0 && i < to) {
+      val c = s(i)
+      if (c == '\t') {
+        if (t1 < 0) t1 = i else if (t2 < 0) t2 = i else if (t3 < 0) t3 = i else t4 = i
+      } else if (c == ',' && t1 >= 0 && t2 < 0) {
+        if (c1 < 0) c1 = i else if (c2 < 0) c2 = i else if (c3 < 0) c3 = i
+      }
+      i += 1
+    }
+    if (t4 < 0 || c3 < 0) return false
     try {
-      val page = Integer.parseInt(s, from + 1, t1, 10)
-      val c1 = comma(s, t1 + 1, t2); if (c1 < 0) return null
-      val c2 = comma(s, c1 + 1, t2); if (c2 < 0) return null
-      val c3 = comma(s, c2 + 1, t2); if (c3 < 0) return null
+      val page = parseIntField(s, from + 1, t1)
       val x0 = parseDoubleField(s, t1 + 1, c1)
       val y0 = parseDoubleField(s, c1 + 1, c2)
       val x1 = parseDoubleField(s, c2 + 1, c3)
       val y1 = parseDoubleField(s, c3 + 1, t2)
       val fontSize = parseDoubleField(s, t2 + 1, t3)
-      val flags = Integer.parseInt(s, t3 + 1, t4, 10)
-      Block(BlockKind.Pdf, page, x0, y0, x1, y1, fontSize, flags,
-        "", 0, s.substring(t4 + 1, to), seq)
-    } catch { case _: NumberFormatException => null }
+      val flags = parseIntField(s, t3 + 1, t4)
+      out.add(Blocks.Pdf, page, x0, y0, x1, y1, fontSize, flags, from, 0, 0,
+        t4 + 1, to - t4 - 1, if (ascii) to - t4 - 1 else chars(s, t4 + 1, to), seq)
+      true
+    } catch { case _: NumberFormatException => false }
   }
 
   /** `H\t<tagPath>\t<linkChars>\t<content>` parsed in [from,to). */
-  private def parseHtml(s: String, from: Int, to: Int, seq: Int): Block = {
+  private def parseHtml(out: Blocks, s: Array[Byte], from: Int, to: Int,
+      ascii: Boolean, seq: Int): Boolean = {
     val t1 = from + 1 // line starts with "H\t"
-    val t2 = tab(s, t1 + 1, to); if (t2 < 0) return null
-    val t3 = tab(s, t2 + 1, to); if (t3 < 0) return null
+    val t2 = next(s, '\t', t1 + 1, to); if (t2 < 0) return false
+    val t3 = next(s, '\t', t2 + 1, to); if (t3 < 0) return false
     try {
-      val linkChars = Integer.parseInt(s, t2 + 1, t3, 10)
-      Block(BlockKind.Html, 0, 0, 0, 0, 0, 0.0, 0,
-        s.substring(t1 + 1, t2), linkChars, s.substring(t3 + 1, to), seq)
-    } catch { case _: NumberFormatException => null }
+      val linkChars = parseIntField(s, t2 + 1, t3)
+      out.add(Blocks.Html, 0, 0, 0, 0, 0, 0.0, 0, t1 + 1, t2 - t1 - 1, linkChars,
+        t3 + 1, to - t3 - 1, if (ascii) to - t3 - 1 else chars(s, t3 + 1, to), seq)
+      true
+    } catch { case _: NumberFormatException => false }
   }
 }

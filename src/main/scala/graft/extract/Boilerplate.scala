@@ -18,38 +18,47 @@ object Boilerplate {
   /** chrome tags, matched per path segment: nav, footer, header,
     * aside, menu, script, style, form, button. The check runs once
     * per block inside the extraction kernel, so segments are matched
-    * in place (length dispatch + regionMatches) instead of
-    * split("/") + Set probing, which allocated an array and
-    * substrings per block.
+    * in place on the payload's bytes (length dispatch, then a byte
+    * compare): one scan of the tag path.
     */
-  def isBoilerplate(b: Block): Boolean =
-    b.kind == BlockKind.Html && (
-      hasChromeTag(b.tagPath) ||
-      b.linkDensity > 0.5 ||
-      (b.text.length < 10 && b.linkDensity > 0.25))
+  def isBoilerplate(bs: Blocks, i: Int): Boolean =
+    bs.isHtml(i) && (
+      hasChromeTag(bs.bytes, bs.tagOff(i), bs.tagOff(i) + bs.tagLen(i)) ||
+      bs.linkDensity(i) > 0.5 ||
+      (bs.textChars(i) < 10 && bs.linkDensity(i) > 0.25))
 
-  private def hasChromeTag(path: String): Boolean = {
-    val n = path.length
-    var start = 0
-    while (start < n) {
-      var end = path.indexOf('/', start)
-      if (end < 0) end = n
-      if (isChrome(path, start, end)) return true
+  private def hasChromeTag(p: Array[Byte], from: Int, to: Int): Boolean = {
+    var start = from
+    while (start < to) {
+      var end = start
+      while (end < to && p(end) != '/') end += 1
+      if (isChrome(p, start, end)) return true
       start = end + 1
     }
     false
   }
 
-  private def isChrome(p: String, s: Int, e: Int): Boolean = (e - s) match {
-    case 3 => p.regionMatches(s, "nav", 0, 3)
-    case 4 => p.regionMatches(s, "menu", 0, 4) ||
-      p.regionMatches(s, "form", 0, 4)
-    case 5 => p.regionMatches(s, "aside", 0, 5) ||
-      p.regionMatches(s, "style", 0, 5)
-    case 6 => p.regionMatches(s, "header", 0, 6) ||
-      p.regionMatches(s, "footer", 0, 6) ||
-      p.regionMatches(s, "script", 0, 6) ||
-      p.regionMatches(s, "button", 0, 6)
-    case _ => false
+  private val Chrome: Array[Array[Array[Byte]]] = {
+    val names = Seq("nav", "menu", "form", "aside", "style", "header", "footer",
+      "script", "button").map(_.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+    Array.tabulate(7)(len => names.filter(_.length == len).toArray)
+  }
+
+  private def isChrome(p: Array[Byte], s: Int, e: Int): Boolean = {
+    if (e - s >= Chrome.length) return false
+    val names = Chrome(e - s)
+    var k = 0
+    while (k < names.length) {
+      if (regionIs(p, s, names(k))) return true
+      k += 1
+    }
+    false
+  }
+
+  /** p[s, s + name.length) == name */
+  private[extract] def regionIs(p: Array[Byte], s: Int, name: Array[Byte]): Boolean = {
+    var k = 0
+    while (k < name.length && p(s + k) == name(k)) k += 1
+    k == name.length
   }
 }

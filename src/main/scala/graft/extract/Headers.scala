@@ -24,10 +24,11 @@ object Headers {
     * largest size is level 1; levels are capped at 6.
     */
   final class HeaderLevels private[Headers] (private val ascending: Array[Double]) {
-    def level(b: Block): Int = {
-      if (b.kind != BlockKind.Pdf || b.isTableRow) return 0
-      val i = java.util.Arrays.binarySearch(ascending, b.fontSize)
-      if (i < 0) 0 else math.min(ascending.length - i, 6)
+    /** heading level of block `i` of `bs`; 0 for body text */
+    def level(bs: Blocks, i: Int): Int = {
+      if (!bs.isPdf(i) || bs.isTableRow(i)) return 0
+      val k = java.util.Arrays.binarySearch(ascending, bs.fontSize(i))
+      if (k < 0) 0 else math.min(ascending.length - k, 6)
     }
     /** Map form (specs / golden comparisons), built largest size first */
     def toMap: Map[Double, Int] =
@@ -44,26 +45,28 @@ object Headers {
     * doubleToLongBits (NaN self-equal, -0.0 distinct from 0.0) in a
     * small open-addressed table of indices into dense size/count
     * arrays, so a block's lookup does not grow with the number of
-    * distinct sizes and no Double is boxed.
+    * distinct sizes and no Double is boxed. The table is scratch of
+    * `bs`, reused by the next turn.
     */
-  def identify(blocks: Seq[Block]): HeaderLevels = {
+  def identify(bs: Blocks): HeaderLevels = {
     // char-count histogram over PDF spans, table rows excluded
     // (find_tables regions are removed from the text flow before
     // header identification in pymupdf4llm)
-    var keys = new Array[Long](8) // distinct sizes' bits, first-seen order
-    var counts = new Array[Long](8)
+    var keys = bs.histKeys // distinct sizes' bits, first-seen order
+    var counts = bs.histCounts
+    var slots = bs.histSlots // 1 + index into keys; 0 = free, as left
     var n = 0
-    var slots = new Array[Int](16) // 1 + index into keys; 0 = free
-    blocks.foreach { b =>
-      if (b.kind == BlockKind.Pdf && !b.isTableRow && b.text.nonEmpty) {
-        val k = java.lang.Double.doubleToLongBits(b.fontSize)
+    var b = 0
+    while (b < bs.size) {
+      if (bs.isPdf(b) && !bs.isTableRow(b) && bs.textLen(b) > 0) {
+        val k = java.lang.Double.doubleToLongBits(bs.fontSize(b))
         val mask = slots.length - 1
         var s = slotOf(k, mask)
         while (slots(s) != 0 && keys(slots(s) - 1) != k) s = (s + 1) & mask
-        if (slots(s) != 0) counts(slots(s) - 1) += b.text.length
+        if (slots(s) != 0) counts(slots(s) - 1) += bs.textChars(b)
         else {
           keys(n) = k
-          counts(n) = b.text.length.toLong
+          counts(n) = bs.textChars(b).toLong
           n += 1
           slots(s) = n
           if (n == keys.length) { // keep the table at most half full
@@ -78,9 +81,11 @@ object Headers {
               slots(t) = i + 1
               i += 1
             }
+            bs.histKeys = keys; bs.histCounts = counts; bs.histSlots = slots
           }
         }
       }
+      b += 1
     }
     if (n == 0) return EmptyLevels
     // body = most frequent size; tie-break: smaller size (body text is
@@ -97,16 +102,25 @@ object Headers {
       }
       i += 1
     }
-    val above = new Array[Double](n)
     var m = 0
     i = 0
-    while (i < n) {
+    while (i < n) { if (java.lang.Double.longBitsToDouble(keys(i)) > body) m += 1; i += 1 }
+    val ascending = if (m == 0) Array.emptyDoubleArray else new Array[Double](m)
+    m = 0
+    // one pass collects the header sizes and frees the table for the
+    // next turn: newest key first, so each probe chain is still intact
+    // when its key is looked up
+    i = n - 1
+    while (i >= 0) {
       val size = java.lang.Double.longBitsToDouble(keys(i))
-      if (size > body) { above(m) = size; m += 1 }
-      i += 1
+      if (size > body) { ascending(m) = size; m += 1 }
+      val mask = slots.length - 1
+      var s = slotOf(keys(i), mask)
+      while (slots(s) != i + 1) s = (s + 1) & mask
+      slots(s) = 0
+      i -= 1
     }
     if (m == 0) return EmptyLevels
-    val ascending = java.util.Arrays.copyOf(above, m)
     java.util.Arrays.sort(ascending)
     new HeaderLevels(ascending)
   }

@@ -34,39 +34,94 @@ package graft.extract
   */
 object LintNormalize {
 
-  private[extract] final class State(val out: java.lang.StringBuilder) {
-    var blanks = 0
-    var wroteAny = false
-    var inFence = false
+  /** The markdown output buffer, with the rules above applied as each
+    * line is completed. A line is written in place: [[beginLine]]
+    * writes the separator the previous lines call for, the caller
+    * appends the line's bytes, and [[endLine]] strips its trailing
+    * whitespace, or takes the whole line back when it is blank (a
+    * blank line only counts towards the next separator).
+    *
+    * The separator can be written before the line is known: outside a
+    * fence it is '\n', plus a second '\n' after blank lines; inside a
+    * fence no blank line is ever counted (every fence line is
+    * verbatim, and the opening line reset the count), so the same
+    * rule gives the verbatim '\n'.
+    */
+  final class Out {
+    private var buf = new Array[Byte](256)
+    private var pos = 0
+    private var blanks = 0
+    private var wroteAny = false
+    private var inFence = false
+    private var firstElement = true
+    private var lineMark = 0
+    private var lineStart = 0
 
-    def line(s: String, from: Int, to: Int): Unit = {
-      val opensOrCloses = to - from >= 3 &&
-        s.charAt(from) == '`' && s.charAt(from + 1) == '`' &&
-        s.charAt(from + 2) == '`'
-      if (inFence && !opensOrCloses) {
-        // verbatim inside the fence: no blank collapsing, no trailing
-        // whitespace strip
-        if (wroteAny) out.append('\n')
-        wroteAny = true
-        out.append(s, from, to)
-      } else {
-        var e = to
-        while (e > from && (s.charAt(e - 1) == ' ' || s.charAt(e - 1) == '\t')) e -= 1
-        if (e == from) blanks += 1
-        else {
-          if (wroteAny) {
-            out.append('\n')
-            if (blanks > 0) out.append('\n')
-          }
-          blanks = 0
-          wroteAny = true
-          out.append(s, from, e)
-        }
+    def reset(): Unit = {
+      pos = 0; blanks = 0
+      wroteAny = false; inFence = false; firstElement = true
+    }
+
+    /** the blank line that joins two elements (the "\n\n" join) */
+    def startElement(): Unit = {
+      if (!firstElement) { beginLine(); endLine() }
+      firstElement = false
+    }
+
+    def beginLine(): Unit = {
+      lineMark = pos
+      if (wroteAny) {
+        put('\n')
+        if (blanks > 0) put('\n')
+      }
+      lineStart = pos
+    }
+
+    def endLine(): Unit = {
+      val opensOrCloses = pos - lineStart >= 3 &&
+        buf(lineStart) == '`' && buf(lineStart + 1) == '`' && buf(lineStart + 2) == '`'
+      // verbatim inside the fence: no blank collapsing, no trailing
+      // whitespace strip
+      if (inFence && !opensOrCloses) wroteAny = true
+      else {
+        var e = pos
+        while (e > lineStart && (buf(e - 1) == ' ' || buf(e - 1) == '\t')) e -= 1
+        if (e == lineStart) { blanks += 1; pos = lineMark }
+        else { blanks = 0; wroteAny = true; pos = e }
         if (opensOrCloses) inFence = !inFence
       }
     }
 
-    def finish(): String =
-      if (!wroteAny) "" else out.append('\n').toString
+    def put(b: Int): Unit = {
+      if (pos == buf.length) buf = java.util.Arrays.copyOf(buf, pos * 2)
+      buf(pos) = b.toByte
+      pos += 1
+    }
+
+    def put(src: Array[Byte], from: Int, to: Int): Unit = {
+      val n = to - from
+      if (pos + n > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(pos + n, buf.length * 2))
+      System.arraycopy(src, from, buf, pos, n)
+      pos += n
+    }
+
+    def put(src: Array[Byte]): Unit = put(src, 0, src.length)
+
+    /** the document: a copy of the buffer plus the final newline
+      * (MD047), or no bytes for a document with no content line
+      */
+    def result(): Array[Byte] = {
+      if (!wroteAny) return Array.emptyByteArray
+      put('\n')
+      val md = java.util.Arrays.copyOf(buf, pos)
+      if (buf.length > Out.MaxRetained) buf = new Array[Byte](256)
+      md
+    }
+  }
+
+  private object Out {
+    /** a thread keeps at most this much buffer between documents */
+    val MaxRetained = 1 << 20
   }
 }

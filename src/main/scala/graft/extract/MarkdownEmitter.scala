@@ -18,217 +18,317 @@ package graft.extract
   *    blockquote, paragraph) after boilerplate stripping
   *  - C10 reassembly: elements joined by one blank line
   *
-  * All rules are pure `Seq[Block] → Seq[String]`; Spark's job is only
-  * distribution (ExtractPipeline).
+  * All rules are pure functions of the ordered blocks; Spark's job is
+  * only distribution (ExtractPipeline).
   *
-  * The traversal writes into a [[LineSink]]. The kernel's sink
-  * ([[emitNormalized]]) streams every markdown LINE straight into
-  * LintNormalize's state machine — the per-element strings, the
-  * `\n\n` join and the re-split the normalizer then did were one extra
-  * copy of the whole document on the kernel's hottest path. The
-  * element-vector form, kept in the test sources as the reference,
-  * is a second sink over the same traversal; ExtractGoldenSpec pins
-  * the two equal, and the golden per-turn gate runs over the fused
-  * path.
+  * The traversal writes every markdown LINE straight into
+  * [[LintNormalize.Out]], one reused byte buffer per thread: text is
+  * copied from the payload's bytes, and the markup around it is ASCII,
+  * so no String is made per block or per line. The String form of
+  * these rules (element strings joined by "\n\n", then normalized) is
+  * kept in the test sources as the reference; the specs pin the two
+  * byte-equal.
   */
 object MarkdownEmitter {
 
-  /** Consumer of the emitted markdown: elements arrive as one
-    * startElement() followed by one line(...) per markdown line (block
-    * text never contains '\n' — BlockParser splits on it).
+  private val outs = ThreadLocal.withInitial[LintNormalize.Out](() => new LintNormalize.Out)
+
+  private def ascii(s: String) = s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private val PageSep = ascii("-----")
+  private val Fence = ascii("```")
+  private val Dash = ascii("- ")
+  private val NumSep = ascii(". ")
+  private val Quote = ascii("> ")
+  private val CellSep = ascii("---|")
+
+  /** Markdown bytes (UTF-8) for blocks already put in reading order by
+    * [[ReadingOrder.order]], with headers identified: emit + C11
+    * lint-normalize + join in one pass over one buffer.
     */
-  private[extract] trait LineSink {
-    def startElement(): Unit
-    def line(s: String): Unit
+  def emitNormalized(bs: Blocks, levels: Headers.HeaderLevels): Array[Byte] = {
+    val out = outs.get()
+    out.reset()
+    emitTo(bs, levels, out)
+    out.result()
   }
 
-  /** streams lines into LintNormalize's state machine, byte-identical
-    * to normalizing the elements joined by "\n\n": the element break
-    * is the same empty line that join contributes.
-    */
-  private final class LintSink(st: LintNormalize.State) extends LineSink {
-    private var first = true
-    def startElement(): Unit = {
-      if (!first) st.line("", 0, 0)
-      first = false
+  private def emitTo(bs: Blocks, levels: Headers.HeaderLevels,
+      out: LintNormalize.Out): Unit = {
+    bs.ints1 = Blocks.atLeast(bs.ints1, bs.size)
+    val kept = bs.ints1
+    var m = 0
+    var k = 0
+    while (k < bs.size) {
+      val b = bs.order(k)
+      if (!Boilerplate.isBoilerplate(bs, b)) { kept(m) = b; m += 1 }
+      k += 1
     }
-    def line(s: String): Unit = st.line(s, 0, s.length)
-  }
-
-  // list-item recognition is on the per-block hot path (called several
-  // times per block) — char checks, no regex/Matcher allocation
-  private def bulletRest(t: String): String = {
-    // "^[-•*]\s+(.*)$"
-    if (t.length < 2) return null
-    val c = t.charAt(0)
-    if (c != '-' && c != '•' && c != '*') return null
-    var i = 1
-    while (i < t.length && Character.isWhitespace(t.charAt(i))) i += 1
-    if (i == 1) null else t.substring(i)
-  }
-
-  private def numberedParts(t: String): (String, String) = {
-    // "^(\d+)[.)]\s+(.*)$"
-    var i = 0
-    while (i < t.length && t.charAt(i) >= '0' && t.charAt(i) <= '9') i += 1
-    if (i == 0 || i >= t.length) return null
-    val sep = t.charAt(i)
-    if (sep != '.' && sep != ')') return null
-    var j = i + 1
-    while (j < t.length && Character.isWhitespace(t.charAt(j))) j += 1
-    if (j == i + 1) null else (t.substring(0, i), t.substring(j))
-  }
-
-  /** Markdown for blocks already in reading order, with headers
-    * identified: emit + C11 lint-normalize + join in one pass, with
-    * one output buffer and no per-element strings. Byte-identical to
-    * normalizing the emitted elements joined by "\n\n".
-    */
-  def emitNormalized(blocks: Seq[Block], headerMap: Headers.HeaderLevels): String = {
-    val st = new LintNormalize.State(new java.lang.StringBuilder(256))
-    emitTo(blocks, headerMap, new LintSink(st))
-    st.finish()
-  }
-
-  private[extract] def emitTo(blocks: Seq[Block], headerMap: Headers.HeaderLevels,
-      out: LineSink): Unit = {
-    val kept = blocks.filterNot(Boilerplate.isBoilerplate)
     var i = 0
     var lastPdfPage = -1
     var pdfClosed = false
-    while (i < kept.length) {
+    while (i < m) {
       val b = kept(i)
       // close a PDF page with its separator when the page changes, or
       // when the flow leaves PDF blocks entirely (mixed-kind turns:
       // the separator belongs to the page it closes, not to trailing
       // HTML/plain content)
-      if (b.kind == BlockKind.Pdf && lastPdfPage >= 0 && b.page != lastPdfPage) {
-        out.startElement(); out.line("-----")
+      if (bs.isPdf(b) && lastPdfPage >= 0 && bs.page(b) != lastPdfPage) {
+        out.startElement(); line(out, PageSep)
       }
-      if (b.kind != BlockKind.Pdf && lastPdfPage >= 0 && !pdfClosed) {
-        out.startElement(); out.line("-----")
+      if (!bs.isPdf(b) && lastPdfPage >= 0 && !pdfClosed) {
+        out.startElement(); line(out, PageSep)
         pdfClosed = true
       }
-      if (b.kind == BlockKind.Pdf) lastPdfPage = b.page
+      if (bs.isPdf(b)) lastPdfPage = bs.page(b)
 
-      b match {
-        case t if t.kind == BlockKind.Pdf && t.isTableRow =>
-          var j = i
-          out.startElement()
-          pipeHeader(kept(j).text, out)
-          j += 1
-          while (j < kept.length && kept(j).kind == BlockKind.Pdf &&
-            kept(j).isTableRow && kept(j).page == t.page) {
-            pipeRow(kept(j).text, out); j += 1
-          }
-          i = j
-
-        case m if m.kind == BlockKind.Pdf && m.isMono =>
-          out.startElement()
-          out.line("```")
-          var j = i
-          while (j < kept.length && kept(j).kind == BlockKind.Pdf &&
-            kept(j).isMono && !kept(j).isTableRow && kept(j).page == m.page) {
-            out.line(kept(j).text); j += 1
-          }
-          out.line("```")
-          i = j
-
-        case h if headerMap.level(h) > 0 =>
-          out.startElement()
-          out.line("#" * headerMap.level(h) + " " + h.text.trim)
-          i += 1
-
-        case _ if isListItem(b) =>
-          out.startElement()
-          var j = i
-          while (j < kept.length && sameFlow(kept(j), b) && isListItem(kept(j)) &&
-            headerMap.level(kept(j)) == 0) {
-            out.line(listLine(kept(j).text)); j += 1
-          }
-          i = j
-
-        case pre if pre.kind == BlockKind.Html &&
-          (pre.lastTag == "pre" || pre.lastTag == "code") =>
-          // consecutive pre/code blocks fold into one fence (same rule
-          // as C6 mono spans)
-          out.startElement()
-          out.line("```")
-          var j = i
-          while (j < kept.length && kept(j).kind == BlockKind.Html &&
-            (kept(j).lastTag == "pre" || kept(j).lastTag == "code")) {
-            out.line(kept(j).text); j += 1
-          }
-          out.line("```")
-          i = j
-
-        case html if html.kind == BlockKind.Html =>
-          htmlElement(html, out)
-          i += 1
-
-        case _ =>
-          out.startElement()
-          out.line(styled(b))
-          i += 1
+      if (bs.isPdf(b) && bs.isTableRow(b)) {
+        out.startElement()
+        val cells = pipeRow(bs, b, out)
+        out.beginLine()
+        out.put('|')
+        var c = 0
+        while (c < cells) { out.put(CellSep); c += 1 }
+        out.endLine()
+        var j = i + 1
+        while (j < m && bs.isPdf(kept(j)) && bs.isTableRow(kept(j)) &&
+          bs.page(kept(j)) == bs.page(b)) {
+          pipeRow(bs, kept(j), out); j += 1
+        }
+        i = j
+      } else if (bs.isPdf(b) && bs.isMono(b)) {
+        out.startElement()
+        line(out, Fence)
+        var j = i
+        while (j < m && bs.isPdf(kept(j)) && bs.isMono(kept(j)) &&
+          !bs.isTableRow(kept(j)) && bs.page(kept(j)) == bs.page(b)) {
+          textLine(bs, kept(j), out); j += 1
+        }
+        line(out, Fence)
+        i = j
+      } else if (levels.level(bs, b) > 0) {
+        out.startElement()
+        heading(bs, b, levels.level(bs, b), out)
+        i += 1
+      } else if (isListItem(bs, b)) {
+        out.startElement()
+        var j = i
+        while (j < m && sameFlow(bs, kept(j), b) && isListItem(bs, kept(j)) &&
+          levels.level(bs, kept(j)) == 0) {
+          listLine(bs, kept(j), out); j += 1
+        }
+        i = j
+      } else if (bs.isHtml(b) && isPreOrCode(bs, b)) {
+        // consecutive pre/code blocks fold into one fence (same rule
+        // as C6 mono spans)
+        out.startElement()
+        line(out, Fence)
+        var j = i
+        while (j < m && bs.isHtml(kept(j)) && isPreOrCode(bs, kept(j))) {
+          textLine(bs, kept(j), out); j += 1
+        }
+        line(out, Fence)
+        i = j
+      } else {
+        // C9 — HTML tag → markdown element; C7 styling otherwise
+        out.startElement()
+        val tag = if (bs.isHtml(b)) tagOf(bs, b) else TagOther
+        if (tag >= TagH1) heading(bs, b, tag - TagH1 + 1, out)
+        else if (tag == TagQuote) {
+          out.beginLine(); out.put(Quote); putTrimmed(bs, b, out); out.endLine()
+        } else styled(bs, b, out)
+        i += 1
       }
     }
     // terminate the final PDF page (unless already closed at the
     // PDF→non-PDF transition)
-    if (lastPdfPage >= 0 && !pdfClosed) { out.startElement(); out.line("-----") }
+    if (lastPdfPage >= 0 && !pdfClosed) { out.startElement(); line(out, PageSep) }
   }
 
-  private def isListItem(b: Block): Boolean =
-    if (bulletRest(b.text) != null)
-      b.kind != BlockKind.Html || b.lastTag != "pre"
-    else if (numberedParts(b.text) != null) true
-    else b.kind == BlockKind.Html && b.lastTag == "li"
+  private def line(out: LintNormalize.Out, s: Array[Byte]): Unit = {
+    out.beginLine(); out.put(s); out.endLine()
+  }
 
-  private def sameFlow(a: Block, b: Block): Boolean =
-    a.kind == b.kind && (a.kind != BlockKind.Pdf || a.page == b.page) &&
-      !a.isMono && !a.isTableRow
+  private def textLine(bs: Blocks, b: Int, out: LintNormalize.Out): Unit = {
+    out.beginLine(); out.put(bs.bytes, bs.textOff(b), bs.textEnd(b)); out.endLine()
+  }
 
-  private def listLine(text: String): String = {
-    val b = bulletRest(text)
-    if (b != null) return "- " + b
-    val n = numberedParts(text)
-    if (n != null) n._1 + ". " + n._2
-    else "- " + text.trim
+  /** `String.trim` is ASCII-only (it drops chars ≤ U+0020), and no
+    * byte of a multi-byte sequence is ≤ 0x20: a byte trim is exact
+    */
+  @inline private def isTrimmed(c: Byte): Boolean = c >= 0 && c <= ' '
+
+  private def putTrimmed(p: Array[Byte], from: Int, to: Int, out: LintNormalize.Out): Unit = {
+    var s = from
+    var e = to
+    while (s < e && isTrimmed(p(s))) s += 1
+    while (e > s && isTrimmed(p(e - 1))) e -= 1
+    out.put(p, s, e)
+  }
+
+  private def putTrimmed(bs: Blocks, b: Int, out: LintNormalize.Out): Unit =
+    putTrimmed(bs.bytes, bs.textOff(b), bs.textEnd(b), out)
+
+  private def heading(bs: Blocks, b: Int, level: Int, out: LintNormalize.Out): Unit = {
+    out.beginLine()
+    var k = 0
+    while (k < level) { out.put('#'); k += 1 }
+    out.put(' ')
+    putTrimmed(bs, b, out)
+    out.endLine()
+  }
+
+  // list-item recognition is on the per-block hot path (called several
+  // times per block) — byte checks, no regex/Matcher allocation
+
+  /** position after the whitespace code points from `from`: the
+    * decoded code point decides (`Character.isWhitespace`: U+2003 is
+    * whitespace, U+00A0 is not; no supplementary code point is)
+    */
+  private def skipSpace(p: Array[Byte], from: Int, to: Int): Int = {
+    var i = from
+    while (i < to) {
+      val c = p(i)
+      if (c >= 0) {
+        if (!Character.isWhitespace(c.toInt)) return i
+        i += 1
+      } else if ((c & 0xe0) == 0xc0) {
+        if (!Character.isWhitespace(((c & 0x1f) << 6) | (p(i + 1) & 0x3f))) return i
+        i += 2
+      } else if ((c & 0xf0) == 0xe0) {
+        if (!Character.isWhitespace(
+          ((c & 0x0f) << 12) | ((p(i + 1) & 0x3f) << 6) | (p(i + 2) & 0x3f))) return i
+        i += 3
+      } else return i
+    }
+    i
+  }
+
+  /** "^[-•*]\s+(.*)$": the start of the item text, or -1 */
+  private def bulletRest(bs: Blocks, b: Int): Int = {
+    val p = bs.bytes
+    val off = bs.textOff(b)
+    val end = bs.textEnd(b)
+    if (off >= end) return -1
+    val after =
+      if (p(off) == '-' || p(off) == '*') off + 1
+      else if (end - off >= 3 && p(off) == 0xe2.toByte && p(off + 1) == 0x80.toByte &&
+        p(off + 2) == 0xa2.toByte) off + 3 // U+2022 •
+      else return -1
+    val r = skipSpace(p, after, end)
+    if (r == after) -1 else r
+  }
+
+  /** "^(\d+)[.)]\s+(.*)$": the position of the `.`/`)`, or -1 */
+  private def numberedSep(bs: Blocks, b: Int): Int = {
+    val p = bs.bytes
+    val off = bs.textOff(b)
+    val end = bs.textEnd(b)
+    var i = off
+    while (i < end && p(i) >= '0' && p(i) <= '9') i += 1
+    if (i == off || i >= end || (p(i) != '.' && p(i) != ')')) return -1
+    if (skipSpace(p, i + 1, end) == i + 1) -1 else i
+  }
+
+  private def isListItem(bs: Blocks, b: Int): Boolean =
+    if (bulletRest(bs, b) >= 0) !bs.isHtml(b) || tagOf(bs, b) != TagPre
+    else if (numberedSep(bs, b) >= 0) true
+    else bs.isHtml(b) && tagOf(bs, b) == TagLi
+
+  private def sameFlow(bs: Blocks, a: Int, b: Int): Boolean =
+    bs.kind(a) == bs.kind(b) && (!bs.isPdf(a) || bs.page(a) == bs.page(b)) &&
+      !bs.isMono(a) && !bs.isTableRow(a)
+
+  private def listLine(bs: Blocks, b: Int, out: LintNormalize.Out): Unit = {
+    val p = bs.bytes
+    val end = bs.textEnd(b)
+    out.beginLine()
+    val r = bulletRest(bs, b)
+    if (r >= 0) { out.put(Dash); out.put(p, r, end) }
+    else {
+      val sep = numberedSep(bs, b)
+      if (sep >= 0) {
+        out.put(p, bs.textOff(b), sep)
+        out.put(NumSep)
+        out.put(p, skipSpace(p, sep + 1, end), end)
+      } else { out.put(Dash); putTrimmed(bs, b, out) }
+    }
+    out.endLine()
   }
 
   /** C7 — inline styling from span flags (headings/lists exempt). */
-  private def styled(b: Block): String = {
-    val t = b.text
-    if (b.kind != BlockKind.Pdf || t.trim.isEmpty) t
-    else if (b.isBold && b.isItalic) s"***$t***"
-    else if (b.isBold) s"**$t**"
-    else if (b.isItalic) s"*$t*"
-    else t
+  private def styled(bs: Blocks, b: Int, out: LintNormalize.Out): Unit = {
+    val p = bs.bytes
+    val off = bs.textOff(b)
+    val end = bs.textEnd(b)
+    var blank = true
+    var k = off
+    while (blank && k < end) { blank = isTrimmed(p(k)); k += 1 }
+    val stars =
+      if (!bs.isPdf(b) || blank) 0
+      else (if (bs.isBold(b)) 2 else 0) + (if (bs.isItalic(b)) 1 else 0)
+    out.beginLine()
+    k = 0
+    while (k < stars) { out.put('*'); k += 1 }
+    out.put(p, off, end)
+    k = 0
+    while (k < stars) { out.put('*'); k += 1 }
+    out.endLine()
   }
 
-  /** C4 — pipe table; cells arrive `|`-joined in the row's text. The
-    * header row also emits the `|---|` separator sized to its cells.
+  /** C4 — one pipe-table line from a row whose cells arrive `|`-joined
+    * (`split("\\|", -1)` then trim per cell); returns the cell count,
+    * which sizes the header row's `|---|` separator.
     */
-  private def pipeHeader(text: String, out: LineSink): Unit = {
-    val header = text.split("\\|", -1).map(_.trim)
-    out.line(header.mkString("|", "|", "|"))
-    out.line(header.map(_ => "---").mkString("|", "|", "|"))
+  private def pipeRow(bs: Blocks, b: Int, out: LintNormalize.Out): Int = {
+    val p = bs.bytes
+    val end = bs.textEnd(b)
+    out.beginLine()
+    out.put('|')
+    var cells = 0
+    var s = bs.textOff(b)
+    var more = true
+    while (more) {
+      var e = s
+      while (e < end && p(e) != '|') e += 1
+      putTrimmed(p, s, e, out)
+      out.put('|')
+      cells += 1
+      more = e < end
+      s = e + 1
+    }
+    out.endLine()
+    cells
   }
 
-  private def pipeRow(text: String, out: LineSink): Unit =
-    out.line(text.split("\\|", -1).map(_.trim).mkString("|", "|", "|"))
+  // the last segment of an HTML block's tag path, as a code
+  private final val TagOther = 0
+  private final val TagPre = 1
+  private final val TagCode = 2
+  private final val TagLi = 3
+  private final val TagQuote = 4
+  private final val TagH1 = 11 // h1..h6 = TagH1 .. TagH1 + 5
 
-  /** C9 — HTML tag → markdown element (post boilerplate filter). */
-  private def htmlElement(b: Block, out: LineSink): Unit = b.lastTag match {
-    case "h1" => out.startElement(); out.line("# " + b.text.trim)
-    case "h2" => out.startElement(); out.line("## " + b.text.trim)
-    case "h3" => out.startElement(); out.line("### " + b.text.trim)
-    case "h4" => out.startElement(); out.line("#### " + b.text.trim)
-    case "h5" => out.startElement(); out.line("##### " + b.text.trim)
-    case "h6" => out.startElement(); out.line("###### " + b.text.trim)
-    case "pre" | "code" =>
-      out.startElement(); out.line("```"); out.line(b.text); out.line("```")
-    case "blockquote" => out.startElement(); out.line("> " + b.text.trim)
-    case "li" => out.startElement(); out.line(listLine(b.text))
-    case _ => out.startElement(); out.line(b.text)
+  private val Blockquote = ascii("blockquote")
+  private val Code = ascii("code")
+  private val Pre = ascii("pre")
+
+  private def tagOf(bs: Blocks, b: Int): Int = {
+    val p = bs.bytes
+    val end = bs.tagOff(b) + bs.tagLen(b)
+    var s = end
+    while (s > bs.tagOff(b) && p(s - 1) != '/') s -= 1
+    (end - s) match {
+      case 2 if p(s) == 'l' && p(s + 1) == 'i' => TagLi
+      case 2 if p(s) == 'h' && p(s + 1) >= '1' && p(s + 1) <= '6' => TagH1 + (p(s + 1) - '1')
+      case 3 if Boilerplate.regionIs(p, s, Pre) => TagPre
+      case 4 if Boilerplate.regionIs(p, s, Code) => TagCode
+      case 10 if Boilerplate.regionIs(p, s, Blockquote) => TagQuote
+      case _ => TagOther
+    }
+  }
+
+  private def isPreOrCode(bs: Blocks, b: Int): Boolean = {
+    val t = tagOf(bs, b)
+    t == TagPre || t == TagCode
   }
 }

@@ -12,99 +12,124 @@ package graft.extract
   */
 object ReadingOrder {
 
-  /** Sort all blocks of one turn into reading order.
+  /** Sort all blocks of one turn into reading order: fills `bs.order`
+    * with block indices and returns `bs`.
     *
-    * Hot-path note: this runs once per turn inside the extraction
-    * kernel (the bench's headline job). The implementation is
-    * array-based — one pass to split PDF vs rest, one comparator sort
-    * per group, page runs processed in place — because the previous
-    * groupBy + tuple-keyed `sortBy` chain allocated a HashMap, key
-    * tuples and boxed Double comparisons per turn and was the
-    * kernel's single largest phase (~1/3). Ordering semantics are
-    * IDENTICAL (golden gate + OrderSpec): PDF pages first ascending,
-    * within a page by (column, y0, x0, seq) with IEEE Double.compare
-    * (NaN-total like Ordering[Double]), then HTML/plain by seq.
+    * PDF pages first ascending, within a page by (column, y0, x0, seq)
+    * with IEEE Double.compare (NaN-total), then HTML/plain by seq;
+    * blocks equal on all of these keep payload order. Two stable
+    * merge sorts of int index arrays on the blocks' primitive fields:
+    * the PDF blocks by (page, x0, x1), which lays out each page's
+    * x-intervals for the column sweep, then every block by its final
+    * key. Every array they use is scratch of `bs`.
     */
-  def order(blocks: Seq[Block]): Vector[Block] = {
+  def order(bs: Blocks): Blocks = {
+    val n = bs.size
+    bs.ints1 = Blocks.atLeast(bs.ints1, n)
+    bs.ints2 = Blocks.atLeast(bs.ints2, n)
+    val tmp = bs.ints1
+    val col = bs.ints2 // by block index: its column on its page
+    val byX = bs.order // the PDF blocks by (page, x0, x1), then the result
     var nPdf = 0
-    blocks.foreach(b => if (b.kind == BlockKind.Pdf) nPdf += 1)
-    val pdf = new Array[Block](nPdf)
-    val rest = new Array[Block](blocks.size - nPdf)
-    var pi = 0
-    var ri = 0
-    blocks.foreach { b =>
-      if (b.kind == BlockKind.Pdf) { pdf(pi) = b; pi += 1 }
-      else { rest(ri) = b; ri += 1 }
-    }
-    val out = Vector.newBuilder[Block]
-    if (nPdf > 0) {
-      // pre-sort by (page, seq): page runs become contiguous; the
-      // within-page tie-break is irrelevant to the final order (the
-      // per-page sort key is total) but keeps this sort deterministic
-      java.util.Arrays.sort(pdf, (a: Block, b: Block) => {
-        val c = Integer.compare(a.page, b.page)
-        if (c != 0) c else Integer.compare(a.seq, b.seq)
-      })
-      var i = 0
-      while (i < nPdf) {
-        var j = i + 1
-        while (j < nPdf && pdf(j).page == pdf(i).page) j += 1
-        orderPageInPlace(pdf, i, j)
-        var k = i
-        while (k < j) { out += pdf(k); k += 1 }
-        i = j
-      }
-    }
-    java.util.Arrays.sort(rest,
-      (a: Block, b: Block) => Integer.compare(a.seq, b.seq))
-    rest.foreach(out += _)
-    out.result()
-  }
-
-  /** sort a(from until until) into (column, y0, x0, seq) order */
-  private def orderPageInPlace(a: Array[Block], from: Int, until: Int): Unit = {
-    if (until - from <= 1) return
-    val (los, his) = mergeIntervals((from until until).map(k => (a(k).x0, a(k).x1)))
-    val nIv = los.length
-    // the first interval containing x0, else nIv. The starts ascend
-    // (NaN last) and each start exceeds every earlier interval's end,
-    // so only the last interval starting at or before x0 can hold it:
-    // binary-search for it, then check its end (a NaN end holds nothing)
-    def colOf(b: Block): Int = {
-      val x = b.x0
-      var lo = 0
-      var hi = nIv
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (los(mid) <= x) lo = mid + 1 else hi = mid
-      }
-      if (lo > 0 && x <= his(lo - 1)) lo - 1 else nIv
-    }
-    // colOf inside the comparator: no per-block key array to allocate
-    // on the common 1-3-interval page, and O(log intervals) per
-    // comparison on a page of many columns
-    java.util.Arrays.sort(a, from, until, (p: Block, q: Block) => {
-      var c = Integer.compare(colOf(p), colOf(q))
-      if (c == 0) c = java.lang.Double.compare(p.y0, q.y0)
-      if (c == 0) c = java.lang.Double.compare(p.x0, q.x0)
-      if (c == 0) c = Integer.compare(p.seq, q.seq)
+    var i = 0
+    while (i < n) { if (bs.isPdf(i)) { byX(nPdf) = i; nPdf += 1 }; i += 1 }
+    sort(byX, 0, nPdf, tmp, (a, b) => {
+      var c = Integer.compare(bs.page(a), bs.page(b))
+      if (c == 0) c = java.lang.Double.compare(bs.x0(a), bs.x0(b))
+      if (c == 0) c = java.lang.Double.compare(bs.x1(a), bs.x1(b))
       c
     })
+    // per page: merge the x-intervals by overlap (starts ascend, NaN
+    // last, and each start exceeds every earlier interval's end), then
+    // give each block the first interval holding its x0, else the
+    // interval count: the last interval starting at or before x0 is the
+    // only candidate (binary search), then its end is checked (a NaN
+    // end holds nothing)
+    bs.doubles1 = Blocks.atLeast(bs.doubles1, nPdf)
+    bs.doubles2 = Blocks.atLeast(bs.doubles2, nPdf)
+    val los = bs.doubles1
+    val his = bs.doubles2
+    i = 0
+    while (i < nPdf) {
+      var j = i + 1
+      while (j < nPdf && bs.page(byX(j)) == bs.page(byX(i))) j += 1
+      var nIv = 0
+      var lo = bs.x0(byX(i))
+      var hi = bs.x1(byX(i))
+      var k = i + 1
+      while (k < j) {
+        val a = bs.x0(byX(k))
+        val b = bs.x1(byX(k))
+        if (a <= hi) { if (b > hi) hi = b }
+        else { los(nIv) = lo; his(nIv) = hi; nIv += 1; lo = a; hi = b }
+        k += 1
+      }
+      los(nIv) = lo; his(nIv) = hi; nIv += 1
+      k = i
+      while (k < j) {
+        val x = bs.x0(byX(k))
+        var l = 0
+        var h = nIv
+        while (l < h) {
+          val mid = (l + h) >>> 1
+          if (los(mid) <= x) l = mid + 1 else h = mid
+        }
+        col(byX(k)) = if (l > 0 && x <= his(l - 1)) l - 1 else nIv
+        k += 1
+      }
+      i = j
+    }
+    val ord = bs.order
+    i = 0
+    while (i < n) { ord(i) = i; i += 1 }
+    sort(ord, 0, n, tmp, (p, q) => {
+      var c = java.lang.Boolean.compare(!bs.isPdf(p), !bs.isPdf(q))
+      if (c == 0 && bs.isPdf(p)) {
+        c = Integer.compare(bs.page(p), bs.page(q))
+        if (c == 0) c = Integer.compare(col(p), col(q))
+        if (c == 0) c = java.lang.Double.compare(bs.y0(p), bs.y0(q))
+        if (c == 0) c = java.lang.Double.compare(bs.x0(p), bs.x0(q))
+      }
+      if (c == 0) c = Integer.compare(bs.seq(p), bs.seq(q))
+      c
+    })
+    bs
   }
 
-  /** x-intervals merged by overlap: (starts, ends), starts ascending */
-  private[extract] def mergeIntervals(ivs: Seq[(Double, Double)]): (Array[Double], Array[Double]) = {
-    if (ivs.isEmpty) return (Array.emptyDoubleArray, Array.emptyDoubleArray)
-    val sorted = ivs.sorted
-    val los = Array.newBuilder[Double]
-    val his = Array.newBuilder[Double]
-    var (lo, hi) = sorted.head
-    sorted.tail.foreach { case (a, b) =>
-      if (a <= hi) { if (b > hi) hi = b }
-      else { los += lo; his += hi; lo = a; hi = b }
+  /** comparator of two block indices */
+  private trait IndexOrder { def compare(a: Int, b: Int): Int }
+
+  /** stable sort of a[from, until), `tmp` as the merge buffer (at
+    * least `until` long): a merge sort over insertion-sorted runs,
+    * O(n log n) comparisons in the worst case and O(n) on input already
+    * in order
+    */
+  private def sort(a: Array[Int], from: Int, until: Int, tmp: Array[Int],
+      cmp: IndexOrder): Unit = {
+    if (until - from <= 16) {
+      var i = from + 1
+      while (i < until) {
+        val v = a(i)
+        var j = i - 1
+        while (j >= from && cmp.compare(a(j), v) > 0) { a(j + 1) = a(j); j -= 1 }
+        a(j + 1) = v
+        i += 1
+      }
+      return
     }
-    los += lo
-    his += hi
-    (los.result(), his.result())
+    val mid = (from + until) >>> 1
+    sort(a, from, mid, tmp, cmp)
+    sort(a, mid, until, tmp, cmp)
+    if (cmp.compare(a(mid - 1), a(mid)) <= 0) return
+    System.arraycopy(a, from, tmp, from, mid - from)
+    var i = from
+    var j = mid
+    var k = from
+    while (i < mid && j < until) {
+      if (cmp.compare(a(j), tmp(i)) < 0) { a(k) = a(j); j += 1 }
+      else { a(k) = tmp(i); i += 1 }
+      k += 1
+    }
+    while (i < mid) { a(k) = tmp(i); i += 1; k += 1 }
   }
 }

@@ -1,14 +1,18 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.charset.StandardCharsets.UTF_8
 import graft.extract._
+import graft.extract.ExtractReference.{Block, BlockKind, toBlocks}
 import graft.gen.TranscriptGen
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-turn text equality of the extraction kernel vs the golden
   * renderer (FIXTURES.md §3) — the inverse-check core of the
   * north-rule correctness gate, here exercised Spark-free so failures
-  * localize to the kernel.
+  * localize to the kernel. Block-level cases state their blocks as
+  * [[ExtractReference.Block]]s and hand the kernel the same blocks in
+  * its byte representation ([[ExtractReference.toBlocks]]).
   */
 class ExtractGoldenSpec extends AnyFunSuite {
 
@@ -45,9 +49,10 @@ class ExtractGoldenSpec extends AnyFunSuite {
           turns += 1
           val hm = Headers.identify(blocks)
           val ordered = ReadingOrder.order(blocks)
-          val viaElements =
-            ExtractReference.normalizeJoin(ExtractReference.emit(ordered, hm))
-          val fused = MarkdownEmitter.emitNormalized(ordered, hm)
+          val ref = ExtractReference.parse(t.text)
+          val viaElements = ExtractReference.normalizeJoin(ExtractReference.emit(
+            ExtractReference.readingOrder(ref), ExtractReference.headerLevels(ref)))
+          val fused = new String(MarkdownEmitter.emitNormalized(ordered, hm), UTF_8)
           assert(fused == viaElements,
             s"fused/element divergence conv=${t.conv_id} turn=${t.turn_idx}")
         }
@@ -64,9 +69,9 @@ class ExtractGoldenSpec extends AnyFunSuite {
       "P6 looks like a header but is prose\n" +
       "P0\t1,2,3,4\t10\t0\treal pdf line"
     val blocks = BlockParser.parse(payload)
-    assert(blocks.map(_.kind) ==
+    assert((0 until blocks.size).map(ExtractReference.block(blocks, _).kind) ==
       Vector(BlockKind.Plain, BlockKind.Plain, BlockKind.Pdf))
-    assert(blocks(0).text == "Please note there are no tabs here")
+    assert(ExtractReference.block(blocks, 0).text == "Please note there are no tabs here")
   }
 
   test("plain single-line text passes through as one paragraph") {
@@ -95,13 +100,24 @@ class ExtractGoldenSpec extends AnyFunSuite {
     assert(row("") == ("err", "", "empty input"))
   }
 
+  /** C11 over a document, through the kernel's byte buffer */
+  private def lintBytes(md: String): String = {
+    val out = new LintNormalize.Out
+    md.split("\n", -1).foreach { l =>
+      out.beginLine(); out.put(l.getBytes(UTF_8)); out.endLine()
+    }
+    new String(out.result(), UTF_8)
+  }
+
   test("lint normalize collapses blank runs and trailing space") {
     assert(ExtractReference.normalize("a  \n\n\n\nb\n\n") == "a\n\nb\n")
+    assert(lintBytes("a  \n\n\n\nb\n\n") == "a\n\nb\n")
   }
 
   test("lint normalize leaves fenced code interiors verbatim (MD012/MD009 exemption)") {
     val md = "a\n\n```\ncode  \n\n\nmore\n```\n\nb"
     assert(ExtractReference.normalize(md) == "a\n\n```\ncode  \n\n\nmore\n```\n\nb\n")
+    assert(lintBytes(md) == "a\n\n```\ncode  \n\n\nmore\n```\n\nb\n")
   }
 
   test("mixed-kind turn: page separator closes the PDF page before trailing plain text") {
@@ -122,7 +138,7 @@ class ExtractGoldenSpec extends AnyFunSuite {
       val line = s"P0\t$c,$c,$c,$c\t$c\t0\tpayload"
       val parsed = BlockParser.parse(line)
       assert(parsed.size == 1)
-      val b = parsed.head
+      val b = ExtractReference.block(parsed, 0)
       val expectOk = try { java.lang.Double.parseDouble(c); true }
         catch { case _: NumberFormatException => false }
       if (expectOk) {
@@ -141,7 +157,7 @@ class ExtractGoldenSpec extends AnyFunSuite {
       Block(BlockKind.Pdf, 0, 0, 0, 0, 0, 10.0, 0, "", 0, "x" * 100, 0),
       Block(BlockKind.Pdf, 0, 0, 0, 0, 0, 18.0, 0, "", 0, "t1", 1),
       Block(BlockKind.Pdf, 0, 0, 0, 0, 0, 14.0, 0, "", 0, "t2", 2))
-    val m = Headers.identify(blocks)
+    val m = Headers.identify(toBlocks(blocks))
     assert(m.toMap == Map(18.0 -> 1, 14.0 -> 2))
   }
 
@@ -151,18 +167,25 @@ class ExtractGoldenSpec extends AnyFunSuite {
   /** identify's map and every block's level equal the linear-probe
     * reference (level compared by exact size bits)
     */
-  private def assertHeadersMatchReference(blocks: Seq[Block], what: String): Unit = {
-    val got = Headers.identify(blocks)
+  private def assertHeadersMatchReference(bs: Blocks, blocks: Seq[Block], what: String): Unit = {
+    val got = Headers.identify(bs)
     val ref = ExtractReference.headerLevels(blocks)
     assert(got.toMap == ref.toMap, what)
-    blocks.foreach(b => assert(got.level(b) == ExtractReference.level(ref, b),
-      s"$what: level of size ${b.fontSize}"))
+    assert(bs.size == blocks.size, what)
+    blocks.zipWithIndex.foreach { case (b, i) =>
+      assert(got.level(bs, i) == ExtractReference.level(ref, b),
+        s"$what: level of size ${b.fontSize}")
+    }
   }
+
+  private def assertHeadersMatchReference(blocks: Seq[Block], what: String): Unit =
+    assertHeadersMatchReference(toBlocks(blocks), blocks, what)
 
   test("header identification equals the linear-probe reference on seeded and adversarial blocks") {
     (0L until 100L).foreach { c =>
       TranscriptGen.genConv(7L, c)._1.foreach { t =>
-        assertHeadersMatchReference(BlockParser.parse(t.text), s"conv $c turn ${t.turn_idx}")
+        assertHeadersMatchReference(BlockParser.parse(t.text),
+          ExtractReference.parse(t.text), s"conv $c turn ${t.turn_idx}")
       }
     }
     // random lists over a palette of adversarial sizes; HTML blocks,
@@ -174,7 +197,7 @@ class ExtractGoldenSpec extends AnyFunSuite {
     (0 until 500).foreach { k =>
       val bs = Vector.tabulate(rng.nextInt(40)) { i =>
         val kind = if (rng.nextInt(10) == 0) BlockKind.Html else BlockKind.Pdf
-        val flags = if (rng.nextInt(8) == 0) Block.TableRow else 0
+        val flags = if (rng.nextInt(8) == 0) Blocks.TableRow else 0
         Block(kind, 0, 0, 0, 0, 0, palette(rng.nextInt(palette.length)), flags,
           "", 0, "x" * rng.nextInt(4), i)
       }
@@ -183,33 +206,34 @@ class ExtractGoldenSpec extends AnyFunSuite {
     // -0.0 and 0.0 are two sizes; NaN is one size, never a header
     val zeros = Vector(pdf(-1.0, "body text", 0), pdf(-0.0, "a", 1),
       pdf(0.0, "b", 2), pdf(Double.NaN, "cc", 3), pdf(Double.NaN, "cc", 4))
-    assert(Headers.identify(zeros).level(zeros(1)) == 2)
-    assert(Headers.identify(zeros).level(zeros(2)) == 1)
+    val zb = toBlocks(zeros)
+    assert(Headers.identify(zb).level(zb, 1) == 2)
+    assert(Headers.identify(zb).level(zb, 2) == 1)
     assertHeadersMatchReference(zeros, "signed zeros and NaN")
     // equal counts: the smaller size is body
     val tie = Vector(pdf(12.0, "aaaa", 0), pdf(10.0, "bbbb", 1), pdf(14.0, "c", 2))
-    assert(Headers.identify(tie).toMap == Map(14.0 -> 1, 12.0 -> 2))
+    assert(Headers.identify(toBlocks(tie)).toMap == Map(14.0 -> 1, 12.0 -> 2))
     assertHeadersMatchReference(tie, "tie")
     // 10^4 distinct sizes: every size above body is a header, levels cap at 6
     val many = Vector.tabulate(10000)(i =>
       pdf(1.0 + i * 0.25, if (i == 0) "body text" else "h", i))
-    assert(Headers.identify(many).toMap.size == 9999)
+    assert(Headers.identify(toBlocks(many)).toMap.size == 9999)
     assertHeadersMatchReference(many, "10^4 distinct sizes")
   }
 
   test("header identification cost is linear in distinct font sizes (n vs 4n)") {
-    def blocksOf(d: Int) = Vector.tabulate(d)(i =>
-      pdf(1.0 + i, if (i == 0) "body text" else "h", i))
+    def blocksOf(d: Int) = toBlocks(Vector.tabulate(d)(i =>
+      pdf(1.0 + i, if (i == 0) "body text" else "h", i)))
     val small = blocksOf(1 << 13)
     val large = blocksOf(1 << 15)
     // identify once, then one level lookup per block (the emitter's use)
-    def run(bs: Vector[Block]): Long = {
+    def run(bs: Blocks): Long = {
       val h = Headers.identify(bs)
       var acc = 0L
-      bs.foreach(b => acc += h.level(b))
+      (0 until bs.size).foreach(i => acc += h.level(bs, i))
       acc
     }
-    def best(bs: Vector[Block]): Long =
+    def best(bs: Blocks): Long =
       (0 until 7).map { _ =>
         val t0 = System.nanoTime(); run(bs); System.nanoTime() - t0
       }.min
@@ -224,21 +248,28 @@ class ExtractGoldenSpec extends AnyFunSuite {
       Block(BlockKind.Pdf, 0, x0, y0, x0 + 100, y0 + 10, 10.0, 0, "", 0, t, seq)
     val blocks = Vector(b(300, 50, 0, "R1"), b(50, 60, 1, "L2"),
       b(50, 50, 2, "L1"), b(300, 60, 3, "R2"))
-    val ordered = ReadingOrder.order(blocks).map(_.text)
+    val bs = ReadingOrder.order(toBlocks(blocks))
+    val ordered = (0 until bs.size).map(k => ExtractReference.block(bs, bs.order(k)).text)
     assert(ordered == Vector("L1", "L2", "R1", "R2"))
   }
 
-  private def assertOrderMatchesReference(blocks: Seq[Block], what: String): Unit = {
-    val got = ReadingOrder.order(blocks)
-    val ref = ExtractReference.readingOrder(blocks)
-    assert(got.length == ref.length && got.zip(ref).forall { case (g, r) => g eq r },
-      s"$what:\n${got.map(_.seq)}\n${ref.map(_.seq)}")
+  /** the kernel's order (block indices) equals the reference's order of
+    * the same blocks (their positions, found by identity)
+    */
+  private def assertOrderMatchesReference(bs: Blocks, blocks: Seq[Block], what: String): Unit = {
+    val got = ReadingOrder.order(bs).order.take(bs.size).toVector
+    val ref = ExtractReference.readingOrder(blocks).map(r => blocks.indexWhere(_ eq r))
+    assert(got == ref, s"$what:\n$got\n$ref")
   }
+
+  private def assertOrderMatchesReference(blocks: Seq[Block], what: String): Unit =
+    assertOrderMatchesReference(toBlocks(blocks), blocks, what)
 
   test("reading order equals the linear-probe reference on seeded and adversarial pages") {
     (0L until 100L).foreach { c =>
       TranscriptGen.genConv(7L, c)._1.foreach { t =>
-        assertOrderMatchesReference(BlockParser.parse(t.text), s"conv $c turn ${t.turn_idx}")
+        assertOrderMatchesReference(BlockParser.parse(t.text),
+          ExtractReference.parse(t.text), s"conv $c turn ${t.turn_idx}")
       }
     }
     // x coordinates from a palette with NaN, signed zeros, infinities
@@ -269,12 +300,12 @@ class ExtractGoldenSpec extends AnyFunSuite {
     // n blocks in n disjoint x ranges on one page, seq shuffled
     def pageOf(n: Int) = {
       val seqs = new scala.util.Random(17).shuffle((0 until n).toVector)
-      Vector.tabulate(n)(i => Block(BlockKind.Pdf, 0, 3.0 * seqs(i), (i % 11).toDouble,
-        3.0 * seqs(i) + 1, 0, 10.0, 0, "", 0, "c", i))
+      toBlocks(Vector.tabulate(n)(i => Block(BlockKind.Pdf, 0, 3.0 * seqs(i),
+        (i % 11).toDouble, 3.0 * seqs(i) + 1, 0, 10.0, 0, "", 0, "c", i)))
     }
     val small = pageOf(1 << 12)
     val large = pageOf(1 << 14)
-    def time(bs: Vector[Block]): Long = {
+    def time(bs: Blocks): Long = {
       val t0 = System.nanoTime(); ReadingOrder.order(bs); System.nanoTime() - t0
     }
     (0 until 5).foreach { _ => time(small); time(large) } // JIT
@@ -289,9 +320,9 @@ class ExtractGoldenSpec extends AnyFunSuite {
 
   test("boilerplate: nav/footer and link-dense blocks are dropped") {
     def h(path: String, lc: Int, t: String) =
-      Block(BlockKind.Html, 0, 0, 0, 0, 0, 0, 0, path, lc, t, 0)
-    assert(Boilerplate.isBoilerplate(h("body/nav/a", 20, "home docs api blog")))
-    assert(Boilerplate.isBoilerplate(h("body/div/a", 40, "a" * 60)))
-    assert(!Boilerplate.isBoilerplate(h("body/article/p", 0, "real content here")))
+      toBlocks(Vector(Block(BlockKind.Html, 0, 0, 0, 0, 0, 0, 0, path, lc, t, 0)))
+    assert(Boilerplate.isBoilerplate(h("body/nav/a", 20, "home docs api blog"), 0))
+    assert(Boilerplate.isBoilerplate(h("body/div/a", 40, "a" * 60), 0))
+    assert(!Boilerplate.isBoilerplate(h("body/article/p", 0, "real content here"), 0))
   }
 }
