@@ -23,9 +23,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   * fields are read without decoding. Every separator of the grammar
   * is ASCII, and no byte of a multi-byte UTF-8 sequence is ASCII, so
   * byte offsets split the text exactly where the decoded String would.
-  * The line scan also validates the UTF-8, eight ASCII bytes per step;
-  * a block's UTF-16 length is its byte length unless its line holds a
-  * non-ASCII byte, and only then is it counted.
+  * The line scan also validates the UTF-8 as it goes; a block's
+  * UTF-16 length is its byte length unless its line holds a non-ASCII
+  * byte, and only then is it counted.
   */
 object BlockParser {
 
@@ -47,23 +47,14 @@ object BlockParser {
     */
   def parseInto(out: Blocks, bytes: Array[Byte], from: Int, to: Int): Boolean = {
     out.clear(bytes)
-    val words = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     var seq = 0
     var start = from
     while (start < to) {
-      // to the line end: eight ASCII bytes at a time while no '\n' is
-      // among them, else one character, validating non-ASCII ones
+      // to the line end, validating each non-ASCII character
       var i = start
       var ascii = true
-      var atEnd = false
-      while (!atEnd) {
-        while (i + 8 <= to && {
-          val w = words.getLong(i)
-          val x = w ^ Newlines
-          ((w | ((x - Ones) & ~x)) & High) == 0 // all ASCII, no zero byte in x
-        }) i += 8
-        if (i >= to || bytes(i) == '\n') atEnd = true
-        else if (bytes(i) >= 0) i += 1
+      while (i < to && bytes(i) != '\n') {
+        if (bytes(i) >= 0) i += 1
         else {
           val n = sequenceLength(bytes, i, to)
           if (n == 0) return false
@@ -79,10 +70,6 @@ object BlockParser {
     }
     true
   }
-
-  private final val High = 0x8080808080808080L
-  private final val Ones = 0x0101010101010101L
-  private final val Newlines = 0x0a0a0a0a0a0a0a0aL
 
   /** byte length of the well-formed UTF-8 sequence at `i` whose lead
     * byte is not ASCII (Unicode Table 3-7: no overlong forms, no

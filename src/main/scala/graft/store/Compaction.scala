@@ -1,7 +1,6 @@
 package graft.store
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Table maintenance — small-file compaction for the partitioned
   * parquet chunk store (the S6–S10 family's missing op: the store
@@ -107,7 +106,7 @@ object Compaction {
     * `targetBytes` requires; returns one report row per partition of
     * the table: (partition, rows, files_before, files_after,
     * bytes_before, compacted) — `rows` is -1 for partitions left
-    * untouched (counting them would cost a job each for pure
+    * untouched (counting them would read all their footers for pure
     * reporting). When `manifestDir` is set, intent + result rows are
     * appended there (see class doc) for lineage alongside the
     * extraction manifest.
@@ -133,59 +132,56 @@ object Compaction {
     // attempt lineage; recovery itself is directory-state-driven)
     manifest(spark, manifestDir, todo.map(p =>
       (p.name, "compact_started", 0L, p.files, 0, p.bytes)))
-    // multiset guard, batched: one grouped count over the live
-    // partitions before any rewrite, one over their staged rewrites
-    // after all of them; only partitions whose counts agree are swapped
-    val rowsBefore = rowCounts(spark, todo.map(p => p.name -> new java.io.File(table, p.name)))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(maxConcurrent, todo.size)))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     // every future is lifted to Try and ALL of them are awaited before
     // any failure propagates: compactPartitions must never return (or
-    // throw) while a sibling rewrite is still writing its staging dir —
-    // recover()'s directory-state machine assumes no concurrent
+    // throw) while a sibling swap is still mutating live/trash/staging
+    // dirs — recover()'s directory-state machine assumes no concurrent
     // mutators, so an immediate retry after a propagated failure could
-    // otherwise rm a staging dir mid-write
-    val rewrites =
+    // otherwise rm a staging dir mid-write or delete trash during a
+    // live swap
+    val compacted =
       try {
         val fs = todo.map { p =>
           scala.concurrent.Future {
-            val staged = stagedDir(table, p.name)
+            val live = new java.io.File(table, p.name)
+            val staged = new java.io.File(new java.io.File(table, StagingName), p.name)
             if (staged.exists()) rm(staged)
+            // multiset guard, job-free: the row counts in the parquet
+            // footers of the live files, before the rewrite reads them,
+            // and of the staged files after it wrote them must agree
+            // before anything destructive happens
+            val rowsBefore = Parquet.rowCount(spark, live.getAbsolutePath)
             // distributed rewrite: one scan of the partition's own
             // bytes, coalesce (no shuffle) to the target file count
-            Parquet.read(spark, new java.io.File(table, p.name).getAbsolutePath)
+            Parquet.read(spark, live.getAbsolutePath)
               .coalesce(p.targetFiles(targetBytes))
               .write.mode(SaveMode.Overwrite).parquet(staged.getAbsolutePath)
+            val rowsAfter = Parquet.rowCount(spark, staged.getAbsolutePath)
+            require(rowsBefore == rowsAfter,
+              s"compaction would change ${p.name}: $rowsBefore -> $rowsAfter rows")
+            // swap (each step atomic; recover() completes/rolls back
+            // any prefix): live -> trash, staging -> live, drop trash
+            val trashDir = new java.io.File(table, TrashName)
+            trashDir.mkdirs()
+            val trashed = new java.io.File(trashDir, p.name)
+            mv(live, trashed)
+            mv(staged, live)
+            rm(trashed)
+            (p.name, rowsAfter, p.files, dataFiles(live).length, p.bytes, true)
           }
         }
-        scala.concurrent.Await.result(
+        val results = scala.concurrent.Await.result(
           scala.concurrent.Future.sequence(
             fs.map(_.transform(t => scala.util.Success(t)))),
           scala.concurrent.duration.Duration.Inf)
+        results.collectFirst { case scala.util.Failure(e) => e }
+          .foreach(e => throw e)
+        results.map(_.get)
       } finally pool.shutdown()
-    val written = todo.zip(rewrites).collect { case (p, scala.util.Success(_)) => p }
-    val rowsAfter = rowCounts(spark, written.map(p => p.name -> stagedDir(table, p.name)))
-    // swap each partition whose counts agree (each step atomic;
-    // recover() completes or rolls back any prefix): live -> trash,
-    // staging -> live, drop trash. A mismatch leaves its live dir as it
-    // was; the first failure propagates once every swap is done
-    def agree(p: PartitionState) =
-      rowsBefore(p.name) == rowsAfter(p.name)
-    val compacted = written.filter(agree).map { p =>
-      val live = new java.io.File(table, p.name)
-      val trashDir = new java.io.File(table, TrashName)
-      trashDir.mkdirs()
-      val trashed = new java.io.File(trashDir, p.name)
-      mv(live, trashed)
-      mv(stagedDir(table, p.name), live)
-      rm(trashed)
-      (p.name, rowsAfter(p.name), p.files, dataFiles(live).length, p.bytes, true)
-    }
-    rewrites.collectFirst { case scala.util.Failure(e) => e }.foreach(e => throw e)
-    written.foreach(p => require(agree(p), s"compaction would change ${p.name}: " +
-      s"${rowsBefore(p.name)} -> ${rowsAfter(p.name)} rows"))
     manifest(spark, manifestDir, compacted.map(r =>
       (r._1, "compact_done", r._2, r._3, r._4, r._5)))
     val staging = new java.io.File(table, StagingName)
@@ -198,20 +194,6 @@ object Compaction {
       .toDF("partition", "rows", "files_before", "files_after",
         "bytes_before", "compacted")
   }
-
-  private def stagedDir(table: java.io.File, name: String): java.io.File =
-    new java.io.File(new java.io.File(table, StagingName), name)
-
-  /** row count per named parquet dir, in one grouped aggregation (no
-    * job for an empty list); 0 for a dir without rows
-    */
-  private def rowCounts(spark: SparkSession,
-      dirs: Seq[(String, java.io.File)]): Map[String, Long] =
-    if (dirs.isEmpty) Map.empty[String, Long].withDefaultValue(0L)
-    else dirs.map { case (name, dir) =>
-      Parquet.read(spark, dir.getAbsolutePath).select(lit(name).as("p"))
-    }.reduce(_ union _).groupBy("p").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
 
   /** compaction lineage rows, kept in their own table under
     * `manifestDir` (schema differs from the extraction manifest;

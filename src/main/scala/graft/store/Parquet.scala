@@ -8,6 +8,7 @@ import org.apache.spark.FileListing
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Parquet table reads that start no Spark job.
   *
@@ -32,11 +33,25 @@ object Parquet {
   def schema(spark: SparkSession, path: String): StructType =
     read(spark, path).schema
 
+  /** rows under `path`: the row-group counts in the footers of its
+    * data files, summed on the driver (the metadata a parquet
+    * `count()` reads, with no job)
+    */
+  def rowCount(spark: SparkSession, path: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    dataFiles(fs, fs.getFileStatus(root)).map { file =>
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+        ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+    }.sum
+  }
+
   private def footerSchema(spark: SparkSession, path: String): StructType = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    val file = firstDataFile(fs, fs.getFileStatus(root)).getOrElse(
+    val file = dataFiles(fs, fs.getFileStatus(root)).nextOption().getOrElse(
       throw new java.io.FileNotFoundException(s"no parquet data file under $path"))
     val footer = ParquetFooterReader.readFooter(
       HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
@@ -44,16 +59,16 @@ object Parquet {
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
-  /** the path itself, or its first non-empty leaf file in name order
+  /** the path itself, or its non-empty leaf files in name order
     * (partition directories included) among the names Spark's file
     * index lists; the summary files it also lists hold no rows and are
     * skipped (nothing here writes them, and Spark writes none by default)
     */
-  private def firstDataFile(fs: FileSystem, st: FileStatus): Option[FileStatus] =
-    if (!st.isDirectory) Some(st).filter(_.getLen > 0)
+  private def dataFiles(fs: FileSystem, st: FileStatus): Iterator[FileStatus] =
+    if (!st.isDirectory) Iterator(st).filter(_.getLen > 0)
     else fs.listStatus(st.getPath).filterNot(s => skipped(s.getPath.getName))
       .sortBy(_.getPath.getName).iterator
-      .flatMap(firstDataFile(fs, _)).nextOption()
+      .flatMap(dataFiles(fs, _))
 
   private def skipped(name: String): Boolean =
     FileListing.skipped(name) || name == "_metadata" || name == "_common_metadata"

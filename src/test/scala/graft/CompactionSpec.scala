@@ -78,6 +78,35 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally rm(new java.io.File(dir))
   }
 
+  test("a failed rewrite leaves its partition live; the others compact; the error propagates") {
+    val dir = splinteredTable()
+    try {
+      val before = snapshot(dir)
+      val p3 = new java.io.File(dir, "partition_id=3")
+      // a data file no parquet reader can open fails partition 3 only
+      val bad = new java.io.File(p3, "part-99999-unreadable.parquet")
+      java.nio.file.Files.write(bad.toPath, "not parquet".getBytes("UTF-8"))
+      def listing(d: java.io.File) =
+        d.listFiles().map(f => f.getName -> f.length()).toSet
+      val p3Before = listing(p3)
+      val err = intercept[Exception](Compaction.compactPartitions(spark, dir, 1L << 30))
+      assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("unreadable")), err.toString)
+      // every sibling finished its swap before the error propagated
+      val layout = Compaction.layout(dir).map(p => p.name -> p.files).toMap
+      assert((0 to 2).forall(i => layout(s"partition_id=$i") == 1), layout.toString)
+      assert(listing(p3) == p3Before, "the failed partition's live dir changed")
+      assert(bad.delete())
+      assert(snapshot(dir) == before)
+      // the next run recovers and compacts the partition left over
+      Compaction.compactPartitions(spark, dir, 1L << 30)
+      assert(Compaction.layout(dir).forall(_.files == 1))
+      assert(snapshot(dir) == before)
+      assert(!new java.io.File(dir, ".compact_staging").exists())
+      assert(!new java.io.File(dir, ".compact_trash").exists())
+    } finally rm(new java.io.File(dir))
+  }
+
   test("recovery converges from every swap kill point") {
     // simulate the three interrupted states the swap can die in by
     // constructing them from a healthy table, then assert recover()
