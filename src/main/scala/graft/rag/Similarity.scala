@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** V2/V3 — cosine similarity (/root/reference/src/rag_engine/
   * embeddings.py:76-134): normalize + dot, zero-norm → 0.0.
   *
-  * Pure higher-order-function Column expression — no UDF, stays inside
-  * whole-stage codegen, and the strict left-to-right `aggregate` fold
+  * Built on the native `VectorExprs.dotProduct` expression — no UDF,
+  * stays inside whole-stage codegen, and its strict left-to-right sum
   * is bit-reproducible against the DuckDB oracle's `list_reduce`.
   */
 object Similarity {

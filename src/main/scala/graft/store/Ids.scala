@@ -8,13 +8,13 @@ import org.apache.spark.sql.functions._
 /** V7/V8 — deterministic chunk IDs + slugify
   * (/root/reference/src/rag_engine/vector_store.py:329-366).
   *
-  * Two implementations, same semantics:
+  * Two implementations:
   *  - pure JVM (kernel / tests), including the NFKD normalize step;
+  *    NFKD lives only here;
   *  - Column expressions built only from Spark built-ins (codegen'd,
   *    DuckDB-oracle-checkable). The Column variant omits NFKD (no
-  *    built-in exists); inputs that are already ASCII — every ID this
-  *    engine generates — are unaffected. Non-ASCII document names go
-  *    through `slugifyUdf`.
+  *    built-in exists), so it is exact on ASCII names only — the only
+  *    names this engine generates (`doc_ids` builds `doc-<id>`).
   */
 object Ids {
 
@@ -57,7 +57,4 @@ object Ids {
       substring(slugifyCol(document), 1, 30), lit("_"),
       substring(sha2(concat_ws("|", document, chunkIndex,
         substring(content, 1, 100)), 256), 1, 16))
-
-  /** full-fidelity fallback for non-ASCII names */
-  val slugifyUdf = udf((s: String) => slugify(s))
 }

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators for a training-data pipeline — exact,
   * MinHash+LSH (Broder 1997 resemblance sketch; banding per the
@@ -80,42 +81,11 @@ object Dedup {
   /** per-seed xor constants, splitmix64(i) in the 60-bit space */
   val Seeds: Seq[Long] = (0 until NumHashes).map(i => splitmix64(i.toLong) & Mask60)
 
-  /** 60-bit base hash of a shingle (first 15 sha256 hex digits). */
-  def shingleHash(s: Column): Column =
-    conv(substring(sha2(s, 256), 1, 15), 16, 10).cast("long")
-
-  /** z·c mod 2^60 without 64-bit overflow (Spark 4 runs ANSI mode, so
-    * a wrapping multiply would throw): split both operands into 30-bit
-    * halves — z·c ≡ zl·cl + 2^30·((zh·cl + zl·ch) mod 2^30) (mod 2^60),
-    * every intermediate < 2^61. The constant's halves fold at compile
-    * time.
-    */
-  private def mulMod60(z: Column, c: Long): Column = {
-    val lo30 = (1L << 30) - 1
-    val cl = c & lo30
-    val ch = c >>> 30
-    val zl = z.bitwiseAND(lit(lo30))
-    val zh = shiftrightunsigned(z, 30)
-    val cross = (zh * lit(cl) + zl * lit(ch)).bitwiseAND(lit(lo30))
-    (zl * lit(cl) + shiftleft(cross, 30)).bitwiseAND(lit(Mask60))
-  }
-
-  /** splitmix-style avalanche in [0, 2^60): two xorshift-multiply
-    * rounds + final xorshift. Input must be < 2^60.
-    */
-  def mix60(z0: Column): Column = {
-    val z1 = mulMod60(z0.bitwiseXOR(shiftrightunsigned(z0, 30)), MixC1)
-    val z2 = mulMod60(z1.bitwiseXOR(shiftrightunsigned(z1, 27)), MixC2)
-    z2.bitwiseXOR(shiftrightunsigned(z2, 31))
-  }
-
-  /** seeded hash of a pre-hashed shingle: mix(h ⊕ seed_i). */
-  def seededHash(seed: Column, h: Column): Column =
-    mix60(h.bitwiseXOR(seed))
-
   // ---- DuckDB twins of the mixing (shared with the oracle SQL) ----
 
-  /** the same mix60 as SQL; BIGINT-safe via HUGEINT mod 2^60. */
+  /** the kernel's mix (`TextKernels.mix60Jvm`) as SQL; BIGINT-safe via
+    * HUGEINT mod 2^60.
+    */
   def sqlMix60(z0: String): String = {
     val m = "1152921504606846976" // 2^60
     val s1 = s"((xor($z0, ($z0) >> 30)::HUGEINT * ${MixC1}::HUGEINT) % $m::HUGEINT)::BIGINT"
@@ -204,28 +174,6 @@ object Dedup {
 
   // ---- minhash + banded LSH ----
 
-  /** MinHash signature: sig[i] = min over shingles of mix(h(s) ⊕ seed_i);
-    * null for documents with fewer than 3 words (no shingles — keeping
-    * them would band-collide every short document with every other).
-    *
-    * Shaped as a SINGLE fold over the pre-hashed shingle array — each
-    * shingle is materialized and sha256'd exactly once, with the 16
-    * seeded values derived by integer mixing of the lambda-bound hash.
-    * (The naive `transform(seeds, i -> array_min(transform(shingles,
-    * ...)))` re-evaluates the whole shingle subtree per seed: Catalyst
-    * inlines aliased subtrees into lambda bodies, so lambda-nested
-    * array-building work multiplies by the outer arity.)
-    */
-  def signatureCol(text: Column): Column = {
-    val maxSig = typedLit(Seq.fill(NumHashes)(Long.MaxValue))
-    val seeds = typedLit(Seeds)
-    val hashed = TextExprs.shingleHashes(text, distinct = false)
-    val sig = aggregate(hashed, maxSig, (acc, h) =>
-      zip_with(acc, seeds, (a, sd) => least(a, seededHash(sd, h))))
-    when(size(wordsCol(text)) >= 3, sig)
-      .otherwise(lit(null).cast("array<bigint>"))
-  }
-
   /** candidate pairs: same (band, band_key) bucket for any band.
     *
     * Returns a lazy plan (no Spark job at call time). The self-join's
@@ -240,11 +188,11 @@ object Dedup {
     // earlier explode → groupBy(id) min-agg shape shuffled
     // 16×|shingles| longs per document; the per-doc kernel shuffles
     // NOTHING before banding (the band table is 4 rows per doc).
-    // Values are identical to signatureCol (spec-asserted); <3-word
-    // docs yield an empty signature and are dropped, matching
-    // signatureCol's null. repartition first: the corpus may arrive as
-    // one file → one scan task, and the sha256 kernel must run at full
-    // parallelism, not scan parallelism
+    // Values are identical to the HOF form in the test sources
+    // (spec-asserted); <3-word docs yield an empty signature and are
+    // dropped, matching that form's null. repartition first: the
+    // corpus may arrive as one file → one scan task, and the sha256
+    // kernel must run at full parallelism, not scan parallelism
     val sigs = sigsOf(docs, idCol, textCol)
     val bands = bandsOf(sigs)
     // NO sketch persist: the self-join's two legs plan identical
@@ -620,9 +568,22 @@ object Dedup {
     * prune — the legs below reuse the capped index's single by-`sh`
     * repartition with NO further exchange.) Returns a lazy plan (no
     * Spark job at call time).
+    *
+    * `idCol` must be integral (tinyint, smallint, int or bigint); the
+    * output ids keep its type. Any other type throws
+    * `IllegalArgumentException` at call time.
     */
   def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, maxDf: Int = 100): DataFrame = {
+    // CappedIdsAgg collects BIGINT: integral ids are cast in and back
+    // (the exploded posting id keeps the caller's id type, so the
+    // output schema is unchanged). Any other id type is refused here,
+    // before a plan is built: it would not survive the round trip
+    // through long (a string id fails the cast or changes value).
+    val idType = docs.select(col(idCol)).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"ngramJaccard: id column '$idCol' is ${idType.simpleString}; " +
+        "it must be an integral type (tinyint, smallint, int or bigint)")
     // the index key is the 60-bit shingle HASH, not the string: every
     // downstream shuffle (df count, inverted-index self-join, pair agg)
     // moves 8-byte longs instead of ~25-byte strings, and join equality
@@ -637,13 +598,14 @@ object Dedup {
     // NULL and is dropped, with its state freed the moment the cap
     // breaks, so the hottest boilerplate shingle costs O(maxDf) per
     // mapper and its occurrences die at the map-side combine. This
-    // replaces the previous df-count + anti-join shape, which needed
-    // TWO evaluations of the shingle kernel (df agg + index rebuild)
-    // and a second full-index exchange; now the kernel runs once, the
-    // index shuffles once (as bounded per-shingle lists), and the
-    // groupBy's hash partitioning on `sh` is inherited by the exploded
-    // posting rows, so the self-join legs below need no further
-    // exchange. (A count-window df-cap was tried and reverted: a
+    // replaces the previous df-count + anti-join shape (kept in the
+    // test sources as the reference CappedIdsSpec checks against),
+    // which needed TWO evaluations of the shingle kernel (df agg +
+    // index rebuild) and a second full-index exchange; now the kernel
+    // runs once, the index shuffles once (as bounded per-shingle
+    // lists), and the groupBy's hash partitioning on `sh` is inherited
+    // by the exploded posting rows, so the self-join legs below need no
+    // further exchange. (A count-window df-cap was tried and reverted: a
     // window must shuffle EVERY occurrence of a hot shingle into one
     // task before the filter discards them — re-concentrating exactly
     // the key the cap exists to bound.)
@@ -660,35 +622,14 @@ object Dedup {
     // parallelism (explicit count ⇒ AQE keeps it) holds the expansion
     // wide; the exchange it adds carries only the capped posting
     // lists — bounded and small by construction at any scale.
-    //
-    // CappedIdsAgg collects BIGINT: integral ids are cast in and back
-    // (the exploded posting id keeps the caller's id type, so output
-    // schema is unchanged); a non-integral id column (e.g. string
-    // keys) takes the pre-r6 df-count + anti-join shape below, which
-    // is type-generic.
-    val idType = all.schema("id").dataType
-    val integral = idType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
     val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val sh =
-      if (integral)
-        graft.util.Staged.explodeOnce(
-          all.groupBy("sh")
-            .agg(CappedIds.cappedIds(col("id").cast("long"), maxDf).as("ids"))
-            .filter(col("ids").isNotNull),
-          Seq(col("sh")), col("ids"), "id")
-          .select(col("sh"), col("id").cast(idType).as("id"))
-          .repartition(parts, col("sh"))
-      else {
-        val hot = all.groupBy("sh").agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxDf).select("sh")
-        all.join(hot, Seq("sh"), "left_anti").repartition(parts, col("sh"))
-      }
+    val sh = graft.util.Staged.explodeOnce(
+        all.groupBy("sh")
+          .agg(CappedIds.cappedIds(col("id").cast("long"), maxDf).as("ids"))
+          .filter(col("ids").isNotNull),
+        Seq(col("sh")), col("ids"), "id")
+      .select(col("sh"), col("id").cast(idType).as("id"))
+      .repartition(parts, col("sh"))
     // set sizes AFTER the cap: dropped shingles leave the universe
     // entirely (index AND set sizes), the standard df-capped trade
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))

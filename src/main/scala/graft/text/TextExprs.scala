@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Hash basis shared with the DuckDB oracle: word regex
   * `[A-Za-z0-9]+`, shingle = 3 words joined by one space, 60-bit hash
-  * = first 15 hex digits of sha256 (Dedup.shingleHash /
-  * HashEmbedder.tokenHash compute the same).
+  * = first 15 hex digits of sha256 (HashEmbedder.tokenHash computes
+  * the same).
   */
 object TextKernels {
 
@@ -228,9 +228,9 @@ object TextKernels {
   }
 
   /** full MinHash signature in one pass: sig[i] = min over shingles of
-    * mix60(hash60(s) ⊕ seed_i) — identical values to
-    * Dedup.signatureCol / the relational explode+min-agg path (the
-    * JVM mix here is the wrapping-multiply twin of Dedup.mix60,
+    * mix60(hash60(s) ⊕ seed_i) — identical values to the HOF
+    * `signatureCol` in the test sources' `ReferenceForms` (the JVM mix
+    * here is the wrapping-multiply twin of its Column `mix60`,
     * spec-asserted equal; shingle hashing is the byte-level stream of
     * [[shingleHashes]]). Empty array below 3 words (no shingles).
     */
@@ -258,7 +258,8 @@ object TextKernels {
     ArrayData.toArrayData(sig)
   }
 
-  /** JVM twin of Dedup.mix60: wrapping multiply masked to 60 bits ≡
+  /** JVM twin of the Column `mix60` in the test sources'
+    * `ReferenceForms`: wrapping multiply masked to 60 bits ≡
     * multiply mod 2^60 (2^60 | 2^64)
     */
   private[text] def mix60Jvm(z0: Long): Long = {

@@ -12,8 +12,8 @@ import graft.text.{CappedIds, CappedIdsAgg, CappedLongs, Dedup}
 /** `CappedIdsAgg` under a hot key: one shingle at 100× the cap. The
   * group must evaluate to NULL (poisoned), no buffer may ever hold
   * more than cap+1 values on the way, and the df-capped `ngramJaccard`
-  * built on it must agree with the type-generic df-count + anti-join
-  * path (taken for non-integral ids) on the same data.
+  * built on it must agree on the same data with the type-generic
+  * df-count + anti-join reference (`ReferenceForms`), run on string ids.
   */
 class CappedIdsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -95,7 +95,7 @@ class CappedIdsSpec extends AnyFunSuite with BeforeAndAfterAll {
         (math.min(a, b), math.max(a, b), r.getDouble(2))
       }.toSet
     val viaCapped = norm(Dedup.ngramJaccard(docs, "doc_id", "text", 0.5, maxDf = cap))
-    val viaAntiJoin = norm(Dedup.ngramJaccard(
+    val viaAntiJoin = norm(ReferenceForms.ngramJaccardAntiJoin(
       docs.select(col("doc_id").cast("string").as("doc_id"), col("text")),
       "doc_id", "text", 0.5, maxDf = cap))
     assert(viaCapped.nonEmpty)

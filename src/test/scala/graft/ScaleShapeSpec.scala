@@ -1,10 +1,14 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import graft.rag.HashEmbedder
 import graft.text.Dedup
 
 /** Scale-shape audits: the physical plans the 100 TB story depends on
@@ -211,7 +215,7 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cases = Seq.fill(50)(
       (rnd.nextLong() & Dedup.Mask60, Dedup.Seeds(rnd.nextInt(Dedup.NumHashes))))
     val got = cases.toDF("h", "seed")
-      .select(Dedup.seededHash(col("seed"), col("h"))).as[Long].collect()
+      .select(ReferenceForms.seededHash(col("seed"), col("h"))).as[Long].collect()
     cases.zip(got).foreach { case ((h, sd), g) =>
       assert(g == mixJvm(h, sd), s"h=$h seed=$sd")
     }
@@ -226,14 +230,14 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
       "naïve café touché 日本語42mix déjà-vu")
     val rows = texts.toDF("text").select(
       graft.text.TextExprs.shingleHashes(col("text"), distinct = false).as("n_all"),
-      transform(ReferenceForms.shinglesCol(col("text")), s => Dedup.shingleHash(s)).as("h_all"),
+      transform(ReferenceForms.shinglesCol(col("text")), HashEmbedder.tokenHash _).as("h_all"),
       graft.text.TextExprs.shingleHashes(col("text"), distinct = true).as("n_dst"),
       transform(array_distinct(ReferenceForms.shinglesCol(col("text"))),
-        s => Dedup.shingleHash(s)).as("h_dst"),
+        HashEmbedder.tokenHash _).as("h_dst"),
       graft.text.TextExprs.simhash(col("text")).as("n_sim"),
       ReferenceForms.simhashColHof(col("text")).as("h_sim"),
       graft.text.TextExprs.minhashSig(col("text")).as("n_mh"),
-      Dedup.signatureCol(col("text")).as("h_mh"),
+      ReferenceForms.signatureCol(col("text")).as("h_mh"),
       Dedup.wordsCol(col("text")).as("n_words"),
       ReferenceForms.wordsColHof(col("text")).as("h_words")).collect()
     texts.zip(rows).foreach { case (t, r) =>
@@ -282,7 +286,7 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val rows = Seq("one two", "", "one two three four")
       .toDF("text")
-      .select(Dedup.signatureCol(col("text")).as("sig"))
+      .select(ReferenceForms.signatureCol(col("text")).as("sig"))
       .collect()
     assert(rows(0).isNullAt(0) && rows(1).isNullAt(0))
     assert(rows(2).getSeq[Long](0).length == Dedup.NumHashes)
@@ -619,7 +623,7 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(capped.count() == 0)
   }
 
-  test("ngramJaccard keeps its output id type and accepts non-integral ids") {
+  test("ngramJaccard keeps its output id type and rejects non-integral ids") {
     import spark.implicits._
     // int ids: the capped-ids aggregate collects BIGINT internally but
     // the output pair columns must keep the caller's id type (the
@@ -637,15 +641,25 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
         r.getDouble(2))).toSet ==
       longPairs.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getDouble(2))).toSet)
-    // string ids take the generic df-count + anti-join path
+    // string ids are refused when the operator is called, before any job
     val strDocs = (0 until 4)
       .map(i => (s"d$i", s"aa bb cc x$i y$i shared tail words here"))
       .toDF("doc_id", "text")
-    val strPairs = Dedup.ngramJaccard(strDocs, "doc_id", "text", 0.3)
-    assert(strPairs.schema("a_id").dataType ==
-      org.apache.spark.sql.types.StringType)
-    assert(strPairs.collect().map(r => (r.getString(0), r.getString(1))).toSet ==
-      intPairs.collect().map(r => (s"d${r.getInt(0)}", s"d${r.getInt(1)}")).toSet)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ListenerBusDrain.drain(spark.sparkContext)
+      val before = jobs.get
+      val e = intercept[IllegalArgumentException](
+        Dedup.ngramJaccard(strDocs, "doc_id", "text", 0.3))
+      ListenerBusDrain.drain(spark.sparkContext)
+      assert(e.getMessage.contains("doc_id") && e.getMessage.contains("string"),
+        e.getMessage)
+      assert(jobs.get == before, s"the rejection started ${jobs.get - before} job(s)")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("repetition_stats: line stats stay below the Generate (once per doc, not per gram)") {
