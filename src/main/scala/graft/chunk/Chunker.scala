@@ -4,7 +4,7 @@ import java.util.regex.Pattern
 
 /** One produced chunk + metadata (K5), the typed analogue of
   * `DocumentChunk` + its metadata dict
-  * (/root/reference/src/rag_engine/chunking.py:14-23,232-252).
+  * (the reference's rag_engine/chunking.py:14-23,232-252).
   * `at_commands` keeps the reference's comma-joined string view
   * (ChromaDB can only store scalars, chunking.py:246-247); the array
   * form is `atCommands.split(", ")` when needed.
@@ -24,75 +24,20 @@ final case class Chunk(
     has_tables: Boolean)
 
 /** K1–K5 — chunking kernel, a semantics-faithful reimplementation of
-  * `DocumentChunker` (/root/reference/src/rag_engine/chunking.py).
+  * `DocumentChunker` (the reference's rag_engine/chunking.py).
   * Pure `String => Vector[Chunk]`; Spark wiring is a flatMap
-  * (perfectly parallel across documents, no shuffle).
+  * (perfectly parallel across documents, no shuffle). Each chunker
+  * equals its test-source reference, `ChunkerReference`.
   */
 class Chunker(maxTokens: Int = 512, overlapTokens: Int = 50) {
+  import Chunker._
 
-  // chunking.py:40-42
-  private val AtCommand = Pattern.compile("AT\\+[A-Z0-9]+")
-  private val SectionLine = Pattern.compile("^#{1,6}\\s+(.+)$")
-
-  /** K1 — `chunk_by_sections` (chunking.py:44-114).
-    *
-    * The over-budget check keeps a RUNNING token total instead of
-    * re-tokenizing the accumulated chunk on every appended line (the
-    * reference's O(lines²·chars) shape, chunking.py:85): no token of
-    * `Tokenizer.TokenRegex` can span the '\n' join (alnum runs stop at
-    * it, the single-char class excludes whitespace), so
-    * count(join(lines)) = Σ count(line) exactly — property-tested in
-    * ChunkerPropertySpec.
+  /** K1 — `chunk_by_sections` (chunking.py:44-114): a heading opens
+    * a chunk and names its section; non-blank closed chunks are kept.
     */
-  def chunkBySections(markdown: String, document: String): Vector[Chunk] = {
-    val lines = split(markdown)
-    val chunks = Vector.newBuilder[Chunk]
-    var current = Vector.empty[String]
-    var counts = Vector.empty[Int]
-    var total = 0
-    var section: String = null
-    var chunkId = 0
-    var i = 0
-    while (i < lines.length) {
-      val line = lines(i)
-      val m = SectionLine.matcher(line)
-      if (m.matches() && current.nonEmpty) {
-        val content = current.mkString("\n")
-        if (content.trim.nonEmpty) {
-          chunks += create(content, document, section, chunkId,
-            i - current.length, i)
-          chunkId += 1
-        }
-        current = Vector(line)
-        counts = Vector(Tokenizer.count(line))
-        total = counts.head
-        section = m.group(1)
-      } else {
-        current = current :+ line
-        val c = Tokenizer.count(line)
-        counts = counts :+ c
-        total += c
-        if (total > maxTokens) {
-          Chunker.splitAtBoundary(current).foreach { splitPart =>
-            chunks += create(splitPart.mkString("\n"), document, section,
-              chunkId, i - splitPart.length, i)
-            chunkId += 1
-            current = current.drop(splitPart.length)
-            total -= counts.take(splitPart.length).sum
-            counts = counts.drop(splitPart.length)
-          }
-        }
-      }
-      i += 1
-    }
-    if (current.nonEmpty) {
-      val content = current.mkString("\n")
-      if (content.trim.nonEmpty)
-        chunks += create(content, document, section, chunkId,
-          lines.length - current.length, lines.length)
-    }
-    chunks.result()
-  }
+  def chunkBySections(markdown: String, document: String): Vector[Chunk] =
+    chunkLines(markdown, document, SectionLine.matcher(_).matches(), heading,
+      nonBlank)
 
   /** K2 — `chunk_by_tokens` (chunking.py:116-144), sliding token
     * window with overlap. Offsets are original-text char offsets of
@@ -110,67 +55,70 @@ class Chunker(maxTokens: Int = 512, overlapTokens: Int = 50) {
       val startChar = toks(i).start
       val endChar = toks(end - 1).end
       val content = markdown.substring(startChar, endChar)
-      chunks += create(content, document, null, chunkId, startChar, endChar)
+      chunks += create(content, document, null, chunkId, startChar, endChar,
+        end - i)
       chunkId += 1
       i += stride
     }
     chunks.result()
   }
 
-  /** K3 — `chunk_by_at_commands` (chunking.py:146-215). Same running
-    * token total as chunkBySections.
+  /** K3 — `chunk_by_at_commands` (chunking.py:146-215): an AT-command
+    * line opens a chunk; closed chunks holding one are kept.
     */
-  def chunkByAtCommands(markdown: String, document: String): Vector[Chunk] = {
-    val lines = split(markdown)
+  def chunkByAtCommands(markdown: String, document: String): Vector[Chunk] =
+    chunkLines(markdown, document, hasAt, _ => null, hasAt)
+
+  /** The line loop of K1 and K3, with K4's over-budget split. The
+    * open chunk is the line range [start, i]; `cum` holds the prefix
+    * sums of the per-line token counts, so the budget test, each split
+    * and every `token_count` are differences of two sums. That is
+    * exact: no `Tokenizer.TokenRegex` token spans the '\n' join
+    * (ChunkerPropertySpec). The reference's quirks stay: a line at
+    * `start` opens nothing; a split chunk is kept whatever it holds, at
+    * the offsets (i - n, i); the final range is kept if not blank.
+    * `opens` marks a line that closes the range and opens one at
+    * itself, `sectionOf` names its section, and a closed range is kept
+    * if any of its lines passes `keep`.
+    */
+  private def chunkLines(markdown: String, document: String,
+      opens: String => Boolean, sectionOf: String => String,
+      keep: String => Boolean): Vector[Chunk] = {
+    val lines = if (markdown == null) Array.empty[String] else markdown.split("\n", -1)
+    val cum = new Array[Int](lines.length + 1)
+    var j = 0
+    while (j < lines.length) { cum(j + 1) = cum(j) + Tokenizer.count(lines(j)); j += 1 }
     val chunks = Vector.newBuilder[Chunk]
-    var current = Vector.empty[String]
-    var counts = Vector.empty[Int]
-    var total = 0
     var chunkId = 0
+    var section: String = null
+    def emit(from: Int, until: Int, startChar: Int, endChar: Int): Unit = {
+      chunks += create(lines.slice(from, until).mkString("\n"), document,
+        section, chunkId, startChar, endChar, cum(until) - cum(from))
+      chunkId += 1
+    }
+    var start = 0
     var i = 0
     while (i < lines.length) {
-      val line = lines(i)
-      val hasAt = AtCommand.matcher(line).find()
-      if (hasAt && current.nonEmpty) {
-        val content = current.mkString("\n")
-        if (AtCommand.matcher(content).find()) {
-          chunks += create(content, document, null, chunkId,
-            i - current.length, i)
-          chunkId += 1
-        }
-        current = Vector(line)
-        counts = Vector(Tokenizer.count(line))
-        total = counts.head
-      } else {
-        current = current :+ line
-        val c = Tokenizer.count(line)
-        counts = counts :+ c
-        total += c
-        if (total > maxTokens) {
-          Chunker.splitAtBoundary(current).foreach { splitPart =>
-            chunks += create(splitPart.mkString("\n"), document, null,
-              chunkId, i - splitPart.length, i)
-            chunkId += 1
-            current = current.drop(splitPart.length)
-            total -= counts.take(splitPart.length).sum
-            counts = counts.drop(splitPart.length)
-          }
-        }
+      if (start < i && opens(lines(i))) {
+        if (lines.slice(start, i).exists(keep)) emit(start, i, start, i)
+        start = i
+        section = sectionOf(lines(i))
+      } else if (cum(i + 1) - cum(start) > maxTokens) {
+        val n = splitAtBoundary(lines, start, i + 1)
+        if (n > 0) { emit(start, start + n, i - n, i); start += n }
       }
       i += 1
     }
-    if (current.nonEmpty) {
-      val content = current.mkString("\n")
-      if (content.trim.nonEmpty)
-        chunks += create(content, document, null, chunkId,
-          lines.length - current.length, lines.length)
-    }
+    if (lines.drop(start).exists(nonBlank))
+      emit(start, lines.length, start, lines.length)
     chunks.result()
   }
 
-  /** K5 — `_create_chunk` metadata enrichment (chunking.py:217-260). */
+  /** K5 — `_create_chunk` metadata enrichment (chunking.py:217-260);
+    * the caller supplies the token count it already holds.
+    */
   private def create(content: String, document: String, section: String,
-      chunkIndex: Int, startChar: Int, endChar: Int): Chunk = {
+      chunkIndex: Int, startChar: Int, endChar: Int, tokens: Int): Chunk = {
     val m = AtCommand.matcher(content)
     val ats = Vector.newBuilder[String]
     while (m.find()) ats += m.group()
@@ -183,35 +131,46 @@ class Chunker(maxTokens: Int = 512, overlapTokens: Int = 50) {
       content = content,
       start_char = startChar,
       end_char = endChar,
-      token_count = Tokenizer.count(content),
+      token_count = tokens,
       at_commands = atList.mkString(", "),
       at_command_count = atList.length,
       has_code_blocks = content.contains("```"),
       has_tables = content.contains("|") && content.contains("\n"))
   }
-
-  private def split(markdown: String): Array[String] =
-    if (markdown == null) Array.empty else markdown.split("\n", -1)
 }
 
 object Chunker {
 
-  /** K4 — `_split_chunk_at_boundary` (chunking.py:262-284): last
-    * sentence-final line, else last blank line, else midpoint.
+  // chunking.py:40-42
+  private val AtCommand = Pattern.compile("AT\\+[A-Z0-9]+")
+  private val SectionLine = Pattern.compile("^#{1,6}\\s+(.+)$")
+  private val SentenceEnd = Pattern.compile("[.!?]\\s*$")
+
+  private def hasAt(line: String): Boolean = AtCommand.matcher(line).find()
+  private def nonBlank(line: String): Boolean = line.trim.nonEmpty
+  private def heading(line: String): String = {
+    val m = SectionLine.matcher(line)
+    m.matches()
+    m.group(1)
+  }
+
+  /** K4 — `_split_chunk_at_boundary` (chunking.py:262-284) over the
+    * line range [from, until): the length of the prefix to split off —
+    * through the last sentence-final line, else before the last blank
+    * line, else half the range; 0 for no split. The range's first line
+    * is never a boundary.
     */
-  def splitAtBoundary(lines: Vector[String]): Option[Vector[String]] = {
-    val sentenceEnd = Pattern.compile("[.!?]\\s*$")
-    var i = lines.length - 1
-    while (i > 0) {
-      if (sentenceEnd.matcher(lines(i)).find()) return Some(lines.take(i + 1))
+  def splitAtBoundary(lines: Array[String], from: Int, until: Int): Int = {
+    var i = until - 1
+    while (i > from) {
+      if (SentenceEnd.matcher(lines(i)).find()) return i + 1 - from
       i -= 1
     }
-    i = lines.length - 1
-    while (i > 0) {
-      if (lines(i).trim.isEmpty) return Some(lines.take(i))
+    i = until - 1
+    while (i > from) {
+      if (lines(i).trim.isEmpty) return i - from
       i -= 1
     }
-    val mid = lines.length / 2
-    if (mid > 0) Some(lines.take(mid)) else None
+    (until - from) / 2
   }
 }

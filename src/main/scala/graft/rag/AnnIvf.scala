@@ -62,9 +62,6 @@ object AnnIvf {
   /** drop all cached centroid tables (corpus mutated in place) */
   def invalidateCentroids(): Unit = centroidCache.clear()
 
-  /** test hook alias */
-  private[graft] def clearCentroidCache(): Unit = invalidateCentroids()
-
   /** deterministic coarse centroids: embeddings of the nCells smallest
     * keys, as doubles. Cached per corpus snapshot (see centroidCache).
     */
@@ -93,16 +90,9 @@ object AnnIvf {
     * Column/oracle forms, for the query-side cell ranking.
     */
   private[rag] def cosineJvm(a: Array[Double], b: Array[Double]): Double = {
-    def dot(x: Array[Double], y: Array[Double]): Double = {
-      var acc = 0.0
-      var i = 0
-      val n = math.min(x.length, y.length)
-      while (i < n) { acc += x(i) * y(i); i += 1 }
-      acc
-    }
-    val na = math.sqrt(dot(a, a))
-    val nb = math.sqrt(dot(b, b))
-    if (na == 0.0 || nb == 0.0) 0.0 else dot(a, b) / (na * nb)
+    val na = math.sqrt(dotJvm(a, a))
+    val nb = math.sqrt(dotJvm(b, b))
+    if (na == 0.0 || nb == 0.0) 0.0 else dotJvm(a, b) / (na * nb)
   }
 
   /** the query's nprobe nearest cells (desc score, asc cid on ties). */
@@ -115,8 +105,14 @@ object AnnIvf {
 
   /** IVF-restricted exact top-k. */
   def search(emb: DataFrame, queryVec: Array[Double], k: Int,
-      embeddingCol: String = "embedding", keyCol: String = "vec_id"): DataFrame = {
-    val cents = centroids(emb, keyCol, embeddingCol)
+      embeddingCol: String = "embedding", keyCol: String = "vec_id"): DataFrame =
+    probeTopK(emb, centroids(emb, keyCol, embeddingCol), queryVec, k,
+      embeddingCol, keyCol)
+
+  /** exact top-k over the rows of the query's nprobe nearest cells */
+  private def probeTopK(emb: DataFrame, cents: Seq[Array[Double]],
+      queryVec: Array[Double], k: Int, embeddingCol: String,
+      keyCol: String): DataFrame = {
     val probes = probeCells(queryVec, cents)
     TopK.search(
       emb.filter(cellCol(col(embeddingCol), cents).isin(probes: _*)),
@@ -147,18 +143,25 @@ object AnnIvf {
       kmeansTrain(emb, nCells, iters, maxSample, keyCol, embeddingCol)
     }
 
+  /** the bounded training sample shared by the k-means quantizer and
+    * the PQ codebooks: the maxSample rows of smallest xxhash64(key), as
+    * doubles. TakeOrdered: per-partition heap, no full sort. The key
+    * tiebreak keeps an xxhash64 collision at the sample boundary from
+    * making the training set partition-layout-dependent.
+    */
+  private[rag] def trainingSample(emb: DataFrame, maxSample: Int,
+      keyCol: String, embeddingCol: String): Array[Array[Double]] =
+    emb
+      .select(col(embeddingCol).cast("array<double>").as("v"),
+        xxhash64(col(keyCol)).as("h"), col(keyCol).as("k"))
+      .orderBy(col("h"), col("k"))
+      .limit(maxSample)
+      .collect().map(_.getSeq[Double](0).toArray)
+
   private def kmeansTrain(emb: DataFrame, nCells: Int, iters: Int,
       maxSample: Int, keyCol: String,
       embeddingCol: String): Seq[Array[Double]] = {
-    val sample = emb
-      .select(col(embeddingCol).cast("array<double>").as("v"),
-        xxhash64(col(keyCol)).as("h"), col(keyCol).as("k"))
-      // TakeOrdered: per-partition heap, no full sort. Key tiebreak
-      // (as in AnnPq) so an xxhash64 collision at the sample boundary
-      // cannot make the training set partition-layout-dependent.
-      .orderBy(col("h"), col("k"))
-      .limit(maxSample)
-      .collect().map(_.getSeq[Double](0).toArray).map(normalize)
+    val sample = trainingSample(emb, maxSample, keyCol, embeddingCol).map(normalize)
     require(sample.nonEmpty, "k-means needs a non-empty corpus")
     val k = math.min(nCells, sample.length)
     // farthest-point init: seed with sample(0), then repeatedly take
@@ -211,11 +214,7 @@ object AnnIvf {
 
   /** IVF top-k over k-means-trained cells. */
   def searchKmeans(emb: DataFrame, queryVec: Array[Double], k: Int,
-      embeddingCol: String = "embedding", keyCol: String = "vec_id"): DataFrame = {
-    val cents = kmeansCentroids(emb, keyCol = keyCol, embeddingCol = embeddingCol)
-    val probes = probeCells(queryVec, cents)
-    TopK.search(
-      emb.filter(cellCol(col(embeddingCol), cents).isin(probes: _*)),
+      embeddingCol: String = "embedding", keyCol: String = "vec_id"): DataFrame =
+    probeTopK(emb, kmeansCentroids(emb, keyCol = keyCol, embeddingCol = embeddingCol),
       queryVec, k, embeddingCol, keyCol)
-  }
 }

@@ -50,12 +50,7 @@ object AnnPq {
       embeddingCol: String = "embedding"): Seq[Seq[Array[Double]]] =
     AnnIvf.cachedArtifact[Seq[Seq[Array[Double]]]](
       emb, s"pq|$m|$ks|$iters|$maxSample|$keyCol|$embeddingCol") {
-      val sample = emb
-        .select(col(embeddingCol).cast("array<double>").as("v"),
-          xxhash64(col(keyCol)).as("h"), col(keyCol).as("k"))
-        .orderBy(col("h"), col("k")) // TakeOrdered; key tiebreak for determinism
-        .limit(maxSample)
-        .collect().map(_.getSeq[Double](0).toArray)
+      val sample = AnnIvf.trainingSample(emb, maxSample, keyCol, embeddingCol)
       require(sample.nonEmpty, "PQ training needs a non-empty corpus")
       val dim = sample.head.length
       require(dim % m == 0, s"PQ: dim $dim not divisible by m=$m")

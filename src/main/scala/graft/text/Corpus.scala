@@ -47,13 +47,23 @@ object Corpus {
   def decontaminate(train: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, n: Int = 5): DataFrame = {
     val benchGrams = benchmarkGramRows(bench, textCol, n).distinct()
+    trainHits(train, idCol, textCol, n)(
+      _.join(broadcast(benchGrams), Seq("g"), "left_semi"))
+  }
+
+  /** The train side of both decontamination forms: one row per
+    * (doc_id, n_grams, distinct gram g), narrowed by `probe` to the
+    * grams found in the benchmark, then counted per document into
+    * (doc_id, n_hits, n_grams, hit_frac).
+    */
+  private def trainHits(train: DataFrame, idCol: String, textCol: String,
+      n: Int)(probe: DataFrame => DataFrame): DataFrame = {
     // gram array staged below the explode (the repetitionStats lesson:
     // size() selected beside explode would re-run the kernel per gram)
     val staged = train.select(col(idCol).as("doc_id"),
       TextExprs.shingleHashes(col(textCol), distinct = true, n).as("gs"))
-    graft.util.Staged.explodeOnce(staged,
-      Seq(col("doc_id"), size(col("gs")).as("n_grams")), col("gs"), "g")
-      .join(broadcast(benchGrams), Seq("g"), "left_semi")
+    probe(graft.util.Staged.explodeOnce(staged,
+        Seq(col("doc_id"), size(col("gs")).as("n_grams")), col("gs"), "g"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_hits"), min("n_grams").as("n_grams"))
       .select(col("doc_id"), col("n_hits"), col("n_grams"),
@@ -144,18 +154,10 @@ object Corpus {
     val prescreen = toColumn(BloomFilterMightContain(
       Literal(bfBytes, org.apache.spark.sql.types.BinaryType),
       toExpression(col("g"))))
-    val staged = train.select(col(idCol).as("doc_id"),
-      TextExprs.shingleHashes(col(textCol), distinct = true, n).as("gs"))
-    graft.util.Staged.explodeOnce(staged,
-      Seq(col("doc_id"), size(col("gs")).as("n_grams")), col("gs"), "g")
-      .filter(prescreen)
-      // a semi-join needs no distinct build side: joining the gram rows
-      // saves the distinct's reduce stage
-      .join(gramRows, Seq("g"), "left_semi")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_hits"), min("n_grams").as("n_grams"))
-      .select(col("doc_id"), col("n_hits"), col("n_grams"),
-        (col("n_hits").cast("double") / col("n_grams")).as("hit_frac"))
+    // a semi-join needs no distinct build side: joining the gram rows
+    // saves the distinct's reduce stage
+    trainHits(train, idCol, textCol, n)(
+      _.filter(prescreen).join(gramRows, Seq("g"), "left_semi"))
   }
 
   /** Repetition quality signals per document (Gopher §A1.1 shape):

@@ -566,8 +566,8 @@ object Dedup {
     * sizes to the index rows costs a full extra exchange by id, which
     * at this join's layout outweighs the candidate rows it would
     * prune — the legs below reuse the capped index's single by-`sh`
-    * repartition with NO further exchange.) Returns a lazy plan (no
-    * Spark job at call time).
+    * exchange and add none.) Returns a lazy plan (no Spark job at
+    * call time).
     *
     * `idCol` must be integral (tinyint, smallint, int or bigint); the
     * output ids keep its type. Any other type throws
@@ -616,20 +616,18 @@ object Dedup {
     // measured this round at >3× the no-persist task time at sf0.1
     // (columnar cache encode/decode on every read).
     // the explode + self-join below EXPANDS (Σdf² candidate pairs from
-    // a compact posting table): AQE sizes the post-aggregate read by
-    // its input bytes and coalesces the expansion stage down to a few
-    // tasks. Re-keying by `sh` at the session's configured shuffle
-    // parallelism (explicit count ⇒ AQE keeps it) holds the expansion
-    // wide; the exchange it adds carries only the capped posting
-    // lists — bounded and small by construction at any scale.
-    val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
+    // a compact posting table) with no exchange of its own: it reads
+    // the groupBy(sh) shuffle, which AQE sizes by its input bytes and
+    // coalesces (to 2 tasks at sf0.1 on 4 cores), so the expansion
+    // runs that narrow. A repartition by `sh` cannot widen it: the
+    // child is already hash-partitioned on `sh`, so the planner drops
+    // it.
     val sh = graft.util.Staged.explodeOnce(
         all.groupBy("sh")
           .agg(CappedIds.cappedIds(col("id").cast("long"), maxDf).as("ids"))
           .filter(col("ids").isNotNull),
         Seq(col("sh")), col("ids"), "id")
       .select(col("sh"), col("id").cast(idType).as("id"))
-      .repartition(parts, col("sh"))
     // set sizes AFTER the cap: dropped shingles leave the universe
     // entirely (index AND set sizes), the standard df-capped trade
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))

@@ -16,18 +16,7 @@ class ChunkerPropertySpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
-  private val word = Gen.oneOf("spark", "merge", "join", "scan", "filter",
-    "window", "batch", "table", "AT+CFUN", "AT+CSQ")
-  private val line: Gen[String] = Gen.frequency(
-    6 -> Gen.chooseNum(1, 12).flatMap(n =>
-      Gen.listOfN(n, word).map(_.mkString(" ") + ".")),
-    2 -> Gen.chooseNum(1, 4).flatMap(n =>
-      Gen.listOfN(n, word).map(ws => "# " + ws.mkString(" "))),
-    1 -> Gen.const(""),
-    1 -> Gen.chooseNum(1, 5).flatMap(n =>
-      Gen.listOfN(n, word).map(ws => "- " + ws.mkString(" "))))
-  private val doc: Gen[String] =
-    Gen.chooseNum(1, 60).flatMap(n => Gen.listOfN(n, line).map(_.mkString("\n")))
+  import ChunkerPropertySpec.doc
 
   private val chunker = new Chunker(maxTokens = 30, overlapTokens = 5)
 
@@ -135,4 +124,24 @@ class ChunkerPropertySpec extends AnyFunSuite {
         (status == "ok" || r.getUTF8String(1).numBytes() == 0)
     })
   }
+}
+
+object ChunkerPropertySpec {
+
+  private val word = Gen.oneOf("spark", "merge", "join", "scan", "filter",
+    "window", "batch", "table", "AT+CFUN", "AT+CSQ")
+  private val line: Gen[String] = Gen.frequency(
+    6 -> Gen.chooseNum(1, 12).flatMap(n =>
+      Gen.listOfN(n, word).map(_.mkString(" ") + ".")),
+    2 -> Gen.chooseNum(1, 4).flatMap(n =>
+      Gen.listOfN(n, word).map(ws => "# " + ws.mkString(" "))),
+    1 -> Gen.const(""),
+    1 -> Gen.chooseNum(1, 5).flatMap(n =>
+      Gen.listOfN(n, word).map(ws => "- " + ws.mkString(" "))))
+
+  /** seeded markdown: 1-60 lines of prose, headings, blanks and list
+    * items over a small vocabulary that includes AT commands
+    */
+  val doc: Gen[String] =
+    Gen.chooseNum(1, 60).flatMap(n => Gen.listOfN(n, line).map(_.mkString("\n")))
 }

@@ -64,10 +64,12 @@ class ChunkerSpec extends AnyFunSuite {
   }
 
   test("boundary splitter: sentence > blank > midpoint") {
-    assert(Chunker.splitAtBoundary(Vector("a", "b.", "c")) == Some(Vector("a", "b.")))
-    assert(Chunker.splitAtBoundary(Vector("a", "", "c")) == Some(Vector("a")))
-    assert(Chunker.splitAtBoundary(Vector("a", "b", "c", "d")) == Some(Vector("a", "b")))
-    assert(Chunker.splitAtBoundary(Vector("a")) == None)
+    // the length of the prefix split off; 0 is no split
+    def split(lines: String*) = Chunker.splitAtBoundary(lines.toArray, 0, lines.length)
+    assert(split("a", "b.", "c") == 2) // "a", "b."
+    assert(split("a", "", "c") == 1) // "a"
+    assert(split("a", "b", "c", "d") == 2) // "a", "b"
+    assert(split("a") == 0)
   }
 
   test("at-commands: new chunk on AT line when current chunk has one") {

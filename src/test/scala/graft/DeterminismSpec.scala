@@ -44,12 +44,12 @@ class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
     // layout A: many tiny scan splits, small odd shuffle count
     spark.conf.set("spark.sql.shuffle.partitions", "5")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "131072")
-    graft.rag.AnnIvf.clearCentroidCache()
+    graft.rag.AnnIvf.invalidateCentroids()
     val a = canonAll(names)
     // layout B: default-sized splits, different shuffle count
     spark.conf.set("spark.sql.shuffle.partitions", "17")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
-    graft.rag.AnnIvf.clearCentroidCache()
+    graft.rag.AnnIvf.invalidateCentroids()
     val b = canonAll(names)
     val diff = names.filter(n => a(n) != b(n))
     assert(diff.isEmpty, s"partition-layout-dependent queries: $diff")
