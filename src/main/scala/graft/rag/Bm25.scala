@@ -1,13 +1,15 @@
 package graft.rag
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.text.Dedup
 
@@ -22,30 +24,30 @@ import graft.text.Dedup
   * rows). Two rows sharing an id are scored, and returned, as two rows.
   *
   * Determinism contract (the oracle hash-compares doubles): each row's
-  * score is computed by [[Bm25Score]] in FIXED query order — per term
-  * `idf * ((tf*(k1+1)) / (tf + k1*((1-b) + b*dl/avgdl)))`, 0.0 for an
-  * absent term, summed left to right — so no float sum depends on row
-  * encounter order; all model constants are interpolated into the
+  * score is computed by [[Bm25TextScore]] in FIXED query order — per
+  * term `idf * ((tf*(k1+1)) / (tf + k1*((1-b) + b*dl/avgdl)))`, 0.0 for
+  * an absent term, summed left to right — so no float sum depends on
+  * row encounter order; all model constants are interpolated into the
   * oracle SQL from the same Scala doubles (shortest-round-trip repr),
   * and avgdl is derived as sum/count in double on both sides.
   *
-  * Scale notes (100 TB): the df/N/avgdl corpus stats are one bounded
-  * aggregate (|query|+2 scalars to the driver — the mixtureSample
-  * pattern). Scoring is then a map-only pass: one native per-row
-  * expression counts the query terms' tf in a single walk of the row's
-  * tokens, so nothing is exploded and no document row is shuffled, and
-  * the final top-k is TakeOrderedAndProject (per-partition heap, then
-  * one merge of the k·partitions heap rows, no global sort). At
-  * production scale the exploded (term, doc_id, tf, dl) inverted index
-  * would be built ONCE at write time, bucketed by term so a query reads
-  * only its terms' postings; here the bounded corpus is tokenized per
-  * query.
+  * Scale notes (100 TB): the N/Σdl/df corpus stats are one job: each
+  * partition computes its partial (|query|+2 longs) with [[Bm25Terms]]
+  * and the driver sums the partials. Scoring is then a map-only pass:
+  * the same kernel walks each row's text once, so nothing is exploded,
+  * no token array is built and no document row is shuffled, and the
+  * final top-k is TakeOrderedAndProject (per-partition heap, then one
+  * merge of the k·partitions heap rows, no global sort). At production
+  * scale the exploded (term, doc_id, tf, dl) inverted index would be
+  * built ONCE at write time, bucketed by term so a query reads only its
+  * terms' postings; here the bounded corpus is read per query.
   */
 object Bm25 {
   import org.apache.spark.sql.GraftExprBridge._
 
   /** lowercase word terms (DNS for text: BM25 matching is
-    * case-insensitive; the oracle lowercases identically)
+    * case-insensitive; the oracle lowercases identically). The words
+    * [[Bm25Terms]] counts are exactly these.
     */
   def termsCol(text: Column): Column = Dedup.wordsCol(lower(text))
 
@@ -53,7 +55,9 @@ object Bm25 {
     * Returns (doc_id, score, n_matched) ordered by (score desc,
     * doc_id) — the doc_id tie-break keeps rankings deterministic. Only
     * rows matching at least one query term are returned. Runs the
-    * stats aggregate when called; the returned plan is the scoring.
+    * one corpus-stats job when called; the returned plan is the
+    * scoring. `textCol` must be a STRING column; a null text counts as
+    * a document with no words.
     */
   def search(docs: DataFrame, idCol: String, textCol: String,
       query: Seq[String], topK: Int = 10,
@@ -72,31 +76,48 @@ object Bm25 {
     }
     require(unmatchable.isEmpty,
       s"query terms must be [A-Za-z0-9]+ words, got ${unmatchable.mkString(", ")}")
-    val base = docs.select(col(idCol).cast("long").as("doc_id"),
-      termsCol(col(textCol)).as("ws"))
-    // corpus stats in ONE bounded aggregate → 2 scalars + |q| dfs to
-    // the driver. df(t) = #rows whose term array contains t — counted
-    // as per-term conditional aggregates in the SAME pass as N and the
-    // token mass.
-    val statsRow = base.agg(
-      count(lit(1)),
-      (sum(size(col("ws"))) +:
-        q.map(t => count(when(array_contains(col("ws"), t), 1)))): _*).head()
-    val nDocs = statsRow.getLong(0)
+    val text = docs.select(col(textCol))
+    val collationId = text.schema.head.dataType match {
+      case s: StringType => s.collationId
+      case dt => throw new IllegalArgumentException(
+        s"text column '$textCol' must be a STRING, got ${dt.catalogString}")
+    }
+    // the flag Spark's own `lower` reads
+    val useICU = docs.sparkSession.conf.get(SQLConf.ICU_CASE_MAPPINGS_ENABLED.key).toBoolean
+    val kernel = new Bm25Terms(q, collationId, useICU)
+    val nq = q.size
+    // corpus stats in ONE job: per partition (N, Σdl, df per term),
+    // summed on the driver. A null text is a document of no words.
+    val partials = text.queryExecution.toRdd.mapPartitions { rows =>
+      val st = new Array[Long](2 + nq)
+      val tf = new Array[Int](nq)
+      rows.foreach { r =>
+        st(0) += 1
+        if (!r.isNullAt(0)) {
+          st(1) += kernel.count(r.getUTF8String(0), tf)
+          var j = 0
+          while (j < nq) { if (tf(j) > 0) st(2 + j) += 1; j += 1 }
+        }
+      }
+      Iterator.single(st)
+    }.collect()
+    val stats = Array.tabulate(2 + nq)(i => partials.map(_(i)).sum)
+    val nDocs = stats(0)
     require(nDocs > 0, "empty corpus")
-    val avgdl = statsRow.getLong(1).toDouble / nDocs.toDouble
+    val avgdl = stats(1).toDouble / nDocs.toDouble
     // Lucene-variant idf, computed once per query term on the driver
     val idfs = q.indices.map { i =>
-      val df = statsRow.getLong(2 + i).toDouble
+      val df = stats(2 + i).toDouble
       math.log(1.0 + (nDocs.toDouble - df + 0.5) / (df + 0.5))
     }
-    val scored = toColumn(Bm25Score(toExpression(col("ws")), q, idfs, k1, b, avgdl))
+    val scored = toColumn(Bm25TextScore(toExpression(col(textCol)), q, idfs, k1, b, avgdl,
+      useICU))
     // A row matching no query term scores null, and nulls sort last,
     // so they are dropped after the top-k. Filtered before it, the
     // predicate is pushed below the projection (FilterExec has no
     // subexpression elimination — the Staged.explodeOnce problem), and
-    // every matching row would be tokenized and scored twice.
-    base.select(col("doc_id"), scored.as("m"))
+    // every matching row would be read and scored twice.
+    docs.select(col(idCol).cast("long").as("doc_id"), scored.as("m"))
       .select(col("doc_id"), col("m.score").as("score"),
         col("m.n_matched").as("n_matched"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -112,30 +133,119 @@ object Bm25 {
     */
 }
 
-/** One row's BM25 score: a native pass over the row's token array
-  * that counts tf for each of the |q| query terms, then combines
-  * `idf * ((tf*(k1+1)) / (tf + k1*((1-b) + b*dl/avgdl)))` per term in
-  * query order (0.0 for an absent term), summed left to right.
-  * Returns struct(score, n_matched), or null when no query term occurs
-  * (also for a null array; null elements count toward dl and match
-  * nothing). Cost is O(tokens · |q|).
+/** The byte kernel of both BM25 passes: one walk over a text's UTF-8
+  * bytes, in place, that counts the row's dl and each query term's tf.
+  *
+  * The words are the maximal `[A-Za-z0-9]` byte runs, exactly the words
+  * `Bm25.termsCol` (`asciiWords(lower(text))`) yields. Each run is
+  * compared in place with the lowercased terms, folding ASCII case; no
+  * lowered copy and no word is built. A row holding a byte >= 0x80 is
+  * first lowercased by the very call Spark's `lower` makes
+  * (`CollationSupport.Lower.exec` with the column's collation and the
+  * session's ICU flag), because lowering can create or split ASCII
+  * words: U+212A KELVIN SIGN lowers to `k`, U+0130 to `i` + U+0307.
+  * Collations whose lowercasing is not ASCII-to-ASCII on ASCII text
+  * (locale collations: Turkish `I` → `ı`) lower every row.
+  *
+  * Cost is O(bytes · |terms|), plus one lowered copy for a non-ASCII
+  * row. Query terms are distinct, so a run matches at most one.
+  */
+final class Bm25Terms(terms: Seq[String], collationId: Int, useICU: Boolean)
+    extends Serializable {
+
+  private val bytes: Array[Array[Byte]] = terms.map(_.getBytes(UTF_8)).toArray
+  private val asciiInPlace: Boolean = {
+    val c = CollationFactory.fetchCollation(collationId)
+    c.isUtf8BinaryType || c.isUtf8LcaseType
+  }
+
+  def size: Int = bytes.length
+
+  /** the row's dl (its word count); `tf(j)` is set to the count of
+    * term j
+    */
+  def count(s: UTF8String, tf: Array[Int]): Int = {
+    java.util.Arrays.fill(tf, 0)
+    if (asciiInPlace) {
+      val dl = walk(s, tf, stopAtHigh = true)
+      if (dl >= 0) return dl
+      java.util.Arrays.fill(tf, 0)
+    }
+    walk(CollationSupport.Lower.exec(s, collationId, useICU), tf, stopAtHigh = false)
+  }
+
+  /** the word count of `s`, or -1 at its first byte >= 0x80 when
+    * `stopAtHigh`
+    */
+  private def walk(s: UTF8String, tf: Array[Int], stopAtHigh: Boolean): Int = {
+    val n = s.numBytes()
+    var dl = 0
+    var i = 0
+    while (i < n) {
+      val c = s.getByte(i)
+      if (Bm25Terms.isWord(c)) {
+        val start = i
+        i += 1
+        while (i < n && Bm25Terms.isWord(s.getByte(i))) i += 1
+        dl += 1
+        val j = find(s, start, i - start)
+        if (j >= 0) tf(j) += 1
+      } else if (c < 0 && stopAtHigh) return -1
+      else i += 1
+    }
+    dl
+  }
+
+  /** the term equal to the run `[start, start + len)` of `s`, or -1 */
+  private def find(s: UTF8String, start: Int, len: Int): Int = {
+    var j = 0
+    while (j < bytes.length) {
+      val t = bytes(j)
+      if (t.length == len) {
+        // a run holds only [A-Za-z0-9]: | 0x20 lowers a letter and
+        // keeps a digit
+        var k = 0
+        while (k < len && (s.getByte(start + k) | 0x20) == t(k)) k += 1
+        if (k == len) return j
+      }
+      j += 1
+    }
+    -1
+  }
+}
+
+object Bm25Terms {
+  private def isWord(c: Byte): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
+}
+
+/** One row's BM25 score straight from its text: [[Bm25Terms]] counts
+  * dl and each query term's tf in one walk of the bytes, then
+  * `idf * ((tf*(k1+1)) / (tf + k1*((1-b) + b*dl/avgdl)))` is combined
+  * per term in query order (0.0 for an absent term), summed left to
+  * right. Returns struct(score, n_matched), or null when no query term
+  * occurs (also for a null text).
   *
   * The per-query constants (terms, idfs, k1, b, avgdl) reach generated
   * code as reference objects, never as literals: the generated source
   * is then the same for every query of one arity, and one compiled
-  * class serves them all.
+  * class serves them all. `useICU` is the session flag Spark's `lower`
+  * reads; the collation comes from the child's type.
   */
-case class Bm25Score(child: Expression, terms: Seq[String],
-    idfs: Seq[Double], k1: Double, b: Double, avgdl: Double)
+case class Bm25TextScore(child: Expression, terms: Seq[String],
+    idfs: Seq[Double], k1: Double, b: Double, avgdl: Double, useICU: Boolean)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
 
+  // plans name the BM25 scorer `bm25score`, whatever its input form
+  override def prettyName: String = "bm25score"
+
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) =>
+    case _: StringType =>
       if (terms.length != idfs.length)
         TypeCheckResult.TypeCheckFailure(s"$prettyName needs one idf per term")
       else TypeCheckResult.TypeCheckSuccess
     case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING>, got ${dt.catalogString}")
+      s"$prettyName requires STRING, got ${dt.catalogString}")
   }
   override def dataType: DataType = StructType(Seq(
     StructField("score", DoubleType, nullable = false),
@@ -143,24 +253,23 @@ case class Bm25Score(child: Expression, terms: Seq[String],
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
 
-  @transient private lazy val termArr: Array[UTF8String] =
-    terms.map(UTF8String.fromString).toArray
+  @transient private lazy val kernel: Bm25Terms =
+    new Bm25Terms(terms, child.dataType.asInstanceOf[StringType].collationId, useICU)
   @transient private lazy val idfArr: Array[Double] = idfs.toArray
   // k1 + 1 and 1 - b are formed once, as the oracle SQL writes them
   @transient private lazy val params: Array[Double] =
     Array(k1 + 1.0, k1, 1.0 - b, b, avgdl)
 
   override def nullSafeEval(v: Any): Any =
-    Bm25Score.score(v.asInstanceOf[ArrayData], termArr, idfArr, params)
+    Bm25TextScore.score(v.asInstanceOf[UTF8String], kernel, idfArr, params)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val termsRef = ctx.addReferenceObj("bm25Terms", termArr,
-      "org.apache.spark.unsafe.types.UTF8String[]")
+    val termsRef = ctx.addReferenceObj("bm25Terms", kernel, "graft.rag.Bm25Terms")
     val idfsRef = ctx.addReferenceObj("bm25Idfs", idfArr, "double[]")
     val paramsRef = ctx.addReferenceObj("bm25Params", params, "double[]")
-    nullSafeCodeGen(ctx, ev, a =>
+    nullSafeCodeGen(ctx, ev, s =>
       s"""
-         |${ev.value} = graft.rag.Bm25Score$$.MODULE$$.score($a, $termsRef, $idfsRef, $paramsRef);
+         |${ev.value} = graft.rag.Bm25TextScore$$.MODULE$$.score($s, $termsRef, $idfsRef, $paramsRef);
          |${ev.isNull} = ${ev.value} == null;
        """.stripMargin)
   }
@@ -169,32 +278,21 @@ case class Bm25Score(child: Expression, terms: Seq[String],
     copy(child = c)
 }
 
-object Bm25Score {
+object Bm25TextScore {
 
   /** static entry for generated code; `params` is
     * (k1 + 1, k1, 1 - b, b, avgdl)
     */
-  def score(ws: ArrayData, terms: Array[UTF8String], idfs: Array[Double],
+  def score(s: UTF8String, terms: Bm25Terms, idfs: Array[Double],
       params: Array[Double]): InternalRow = {
-    val nq = terms.length
+    val nq = terms.size
     val tf = new Array[Int](nq)
-    val n = ws.numElements()
-    var i = 0
-    while (i < n) {
-      if (!ws.isNullAt(i)) {
-        val w = ws.getUTF8String(i)
-        var j = 0
-        while (j < nq && !terms(j).equals(w)) j += 1
-        if (j < nq) tf(j) += 1
-      }
-      i += 1
-    }
+    val dl = terms.count(s, tf).toDouble
     val k1p1 = params(0)
     val k1 = params(1)
     val omb = params(2)
     val b = params(3)
     val avgdl = params(4)
-    val dl = n.toDouble
     var matched = 0L
     var acc = 0.0
     var j = 0

@@ -24,9 +24,18 @@ object Similarity {
     sqrt(VectorExprs.dotProduct(ad, ad))
   }
 
-  def cosine(a: Column, b: Column): Column = {
+  def cosine(a: Column, b: Column): Column = cosine(a, b, norm(b))
+
+  /** cosine against one query vector. The vector and its norm reach
+    * generated code as reference objects: a folded norm would be a
+    * double literal, and each new literal compiles new classes. The
+    * norm is the same fold `norm` computes.
+    */
+  def cosineTo(a: Column, q: Array[Double]): Column =
+    cosine(a, typedLit(q), VectorExprs.param(math.sqrt(NearestCentroid.selfDot(q))))
+
+  private def cosine(a: Column, b: Column, nb: Column): Column = {
     val na = norm(a)
-    val nb = norm(b)
     when(na === 0.0 || nb === 0.0, 0.0).otherwise(dot(a, b) / (na * nb))
   }
 }

@@ -21,9 +21,8 @@ object TopK {
   def search(chunks: DataFrame, queryVec: Array[Double], k: Int,
       embeddingCol: String = "embedding", keyCol: String = "vec_id",
       metaFilter: Column = lit(true)): DataFrame = {
-    val q = typedLit(queryVec)
     chunks.filter(metaFilter)
-      .withColumn("score", Similarity.cosine(col(embeddingCol), q))
+      .withColumn("score", Similarity.cosineTo(col(embeddingCol), queryVec))
       .orderBy(col("score").desc, col(keyCol).asc)
       .limit(k)
   }

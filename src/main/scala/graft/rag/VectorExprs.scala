@@ -4,7 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
@@ -205,6 +206,25 @@ object NearestCentroid {
   }
 }
 
+/** A per-query double that reaches generated code as a reference
+  * object. Not foldable, so no rule turns it into a literal: the
+  * generated source, and the compiled class, are the same whatever its
+  * value.
+  */
+case class DoubleParam(value: Double)
+    extends org.apache.spark.sql.catalyst.expressions.LeafExpression {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("param", java.lang.Double.valueOf(value), "java.lang.Double")
+    ev.copy(code = code"final double ${ev.value} = $ref;", isNull = FalseLiteral)
+  }
+}
+
 object VectorExprs {
   import org.apache.spark.sql.GraftExprBridge._
 
@@ -226,6 +246,9 @@ object VectorExprs {
   /** one-pass L2 normalization of an array<double> column. */
   def l2Normalize(a: Column): Column =
     toColumn(L2Normalize(toExpression(a)))
+
+  /** a query constant that never becomes a literal ([[DoubleParam]]) */
+  def param(v: Double): Column = toColumn(DoubleParam(v))
 
   /** IVF cell id: index of the max-cosine centroid (float or double
     * array column).

@@ -1,20 +1,24 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.CollationFactory
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import graft.rag.{Bm25, Bm25Score}
+import graft.rag.{Bm25, Bm25Score, Bm25Terms, Bm25TextScore}
+import graft.text.TextKernels
 
 /** BM25 retrieval: ranking sanity (tf saturation, idf down-weighting,
   * length normalization), determinism of the fixed-order combine, the
   * match-only result contract, and bit-equality of the native per-row
-  * scorer with the explode/group-by plan it replaced.
+  * scorer with the explode/group-by plan it replaced. Then totality and
+  * linear cost of the byte kernel, of the array-form reference scorer
+  * and of the `AsciiWords` tokenizer both are built on.
   */
 class Bm25Spec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -107,6 +111,17 @@ class Bm25Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.toSet == Set((1L, s(1, 2), 1L), (1L, s(2, 4), 1L)))
   }
 
+  test("an all-null corpus returns no rows, as a corpus of no words does; an empty one is rejected") {
+    assert(ranked(df(1L -> null, 2L -> null), Seq("a")).isEmpty)
+    assert(ranked(df(1L -> "!!! ...", 2L -> ""), Seq("a")).isEmpty)
+    // null texts count in N and add no words: dl/avgdl as if empty
+    assert(ranked(df(1L -> null, 2L -> "a b"), Seq("a")) == Seq(2L))
+    val e = intercept[IllegalArgumentException] {
+      Bm25.search(df(1L -> "a").filter(col("doc_id") < 0L), "doc_id", "text", Seq("a"))
+    }
+    assert(e.getMessage.contains("empty corpus"))
+  }
+
   // ---- the native scorer against the explode/group-by reference ----
 
   /** The plan `search` ran before the per-row scorer: explode every
@@ -190,6 +205,87 @@ class Bm25Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // ---- kernel totality and cost ----
+
+  /** best-of-7 time ratio f(large) / f(small), the two interleaved so a
+    * burst of host load lands on both
+    */
+  private def ratio(small: () => Unit, large: () => Unit): Double = {
+    def time(f: () => Unit): Long = { val t0 = System.nanoTime(); f(); System.nanoTime() - t0 }
+    (0 until 5).foreach { _ => small(); large() } // JIT
+    val (ts, tl) = (0 until 7).map(_ => (time(small), time(large))).unzip
+    tl.min.toDouble / ts.min.toDouble
+  }
+
+  private val binary = new Bm25Terms(Seq("a", "c"), CollationFactory.UTF8_BINARY_COLLATION_ID, false)
+
+  private def textKernel(s: UTF8String): InternalRow =
+    Bm25TextScore.score(s, binary, Array(1.5, 2.5), Array(2.2, 1.2, 0.25, 0.75, 3.0))
+
+  test("Bm25TextScore is total: null text, empty, invalid UTF-8, a 2^20-word row") {
+    import org.apache.spark.sql.GraftExprBridge._
+    val invalid = Array[Byte]('A', ' ', 0xff.toByte, 'c', 0xc3.toByte, ' ', 'a', 0x80.toByte)
+    val big = Array.fill(1 << 20)("A").mkString(" ")
+    val raws: Seq[Array[Byte]] = Seq(null, Array.emptyByteArray, invalid,
+      "b c\u212A, C".getBytes("UTF-8"), big.getBytes("UTF-8"))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("raw", BinaryType)))
+    val d = spark.createDataFrame(spark.sparkContext.parallelize(
+        raws.zipWithIndex.map { case (r, i) => Row(i.toLong, r) }, 2), schema)
+      .select(col("id"), col("raw").cast("string").as("text"))
+    val got = d.select(col("id"),
+        toColumn(Bm25TextScore(toExpression(col("text")), Seq("a", "c"), Seq(1.5, 2.5),
+          1.2, 0.75, 3.0, useICU = false)).as("m"),
+        toColumn(Bm25Score(toExpression(Bm25.termsCol(col("text"))), Seq("a", "c"),
+          Seq(1.5, 2.5), 1.2, 0.75, 3.0)).as("ref"))
+      .orderBy("id").collect()
+    def bitsOf(r: Row, i: Int): Option[(Long, Long)] = Option(r.getStruct(i))
+      .map(s => (java.lang.Double.doubleToRawLongBits(s.getDouble(0)), s.getLong(1)))
+    assert(got.map(r => bitsOf(r, 1)).toSeq == got.map(r => bitsOf(r, 2)).toSeq)
+    assert(got.map(r => bitsOf(r, 1).isDefined).toSeq == Seq(false, false, true, true, true))
+    // the interpreted path and the direct kernel agree with the generated one
+    raws.zip(got).foreach { case (raw, r) =>
+      val s = if (raw == null) null else UTF8String.fromBytes(raw)
+      val interpreted = Bm25TextScore(Literal.create(s, StringType),
+          Seq("a", "c"), Seq(1.5, 2.5), 1.2, 0.75, 3.0, useICU = false)
+        .eval(null).asInstanceOf[InternalRow]
+      val direct = if (s == null) null else textKernel(s)
+      for (k <- Seq(interpreted, direct))
+        assert(Option(k).map(x => (java.lang.Double.doubleToRawLongBits(x.getDouble(0)),
+          x.getLong(1))) == bitsOf(r, 1))
+    }
+    // dl and tf of the big row, counted in place
+    val tf = new Array[Int](2)
+    assert(binary.count(UTF8String.fromString(big), tf) == (1 << 20) && tf.toSeq == Seq(1 << 20, 0))
+  }
+
+  test("Bm25TextScore cost is linear in one row's bytes and in the number of rows (n vs 4n)") {
+    def words(n: Int, sep: String) =
+      (0 until n).map(i => if (i % 5 == 0) "A" else s"t${i % 97}").mkString(sep)
+    val shapes = Seq(
+      ("one huge row", Seq(UTF8String.fromString(words(1 << 17, " "))),
+        Seq(UTF8String.fromString(words(1 << 19, " ")))),
+      ("one huge non-ASCII row", Seq(UTF8String.fromString(words(1 << 15, " \u00e9 "))),
+        Seq(UTF8String.fromString(words(1 << 17, " \u00e9 ")))),
+      ("many short rows", Seq.tabulate(1 << 13)(i => UTF8String.fromString(s"c ${words(8, " ")} $i")),
+        Seq.tabulate(1 << 15)(i => UTF8String.fromString(s"c ${words(8, " ")} $i"))))
+    for ((shape, small, large) <- shapes) {
+      val r = ratio(() => small.foreach(textKernel), () => large.foreach(textKernel))
+      // linear reads ~4; quadratic would read ~16
+      assert(r < 8.0, s"$shape: 4n/n time ratio $r")
+    }
+  }
+
+  test("AsciiWords cost is linear in one row's bytes and in the number of rows (n vs 4n)") {
+    def text(n: Int) = UTF8String.fromString((0 until n).map(i => s"w$i,").mkString(" "))
+    val small = text(1 << 16)
+    val large = text(1 << 18)
+    val r = ratio(() => TextKernels.asciiWords(small), () => TextKernels.asciiWords(large))
+    assert(r < 8.0, s"one huge row: 4n/n time ratio $r")
+    val rows = Seq.tabulate(1 << 14)(i => UTF8String.fromString(s"row $i of some words"))
+    val r2 = ratio(() => rows.take(1 << 12).foreach(TextKernels.asciiWords),
+      () => rows.foreach(TextKernels.asciiWords))
+    assert(r2 < 8.0, s"many short rows: 4n/n time ratio $r2")
+  }
 
   private def kernel(tokens: Array[UTF8String], terms: Seq[String]): InternalRow =
     Bm25Score.score(new GenericArrayData(tokens.asInstanceOf[Array[Any]]),

@@ -17,7 +17,7 @@ import graft.text.{Corpus, Dedup}
   * whole lineage. `decontaminateBloom` is the one exception by design:
   * it runs the jobs that produce its plan inputs (sizing count, bloom
   * build) and nothing else, and `Bm25.search` runs only its corpus
-  * stats aggregate.
+  * stats job.
   */
 class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -67,6 +67,23 @@ class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def assertNoCheckpoint(name: String, df: DataFrame): Unit = {
     val analyzed = df.queryExecution.analyzed
     assert(!analyzed.exists(_.isInstanceOf[LogicalRDD]), s"$name:\n$analyzed")
+  }
+
+  /** `docs` written as parquet: over a local relation the optimizer
+    * would score the rows on the driver, interpreted, and compile
+    * nothing
+    */
+  private lazy val docsScan: DataFrame = {
+    val path = s"$embDir/docs.parquet"
+    docs.write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  private def withAqe[A](on: Boolean)(f: => A): A = {
+    val conf = spark.conf
+    val saved = conf.get("spark.sql.adaptive.enabled")
+    try { conf.set("spark.sql.adaptive.enabled", on.toString); f }
+    finally conf.set("spark.sql.adaptive.enabled", saved)
   }
 
   private lazy val docs: DataFrame = {
@@ -142,11 +159,7 @@ class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
     val saved = conf.get("spark.sql.adaptive.enabled")
     try {
       conf.set("spark.sql.adaptive.enabled", "false")
-      // from parquet: over a local relation the optimizer would score
-      // the rows on the driver, interpreted, and compile nothing
-      val path = s"$embDir/docs.parquet"
-      docs.write.parquet(path)
-      val scan = spark.read.parquet(path)
+      val scan = docsScan
       val (plan, n) = countingJobs(
         graft.rag.Bm25.search(scan, "doc_id", "text", Seq("w1", "para"), 5))
       assert(n == 1, s"expected the stats aggregate only, got $n job(s)")
@@ -164,5 +177,42 @@ class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
         "a second query of the same arity compiled new classes")
     } finally conf.set("spark.sql.adaptive.enabled", saved)
+  }
+
+  test("Bm25.search runs one job when called with AQE on too") {
+    // the stats partials are one job under AQE as well; a global
+    // agg(...).head() there is 2 (the partial-aggregate stage is a job)
+    withAqe(on = true) {
+      val (plan, n) = countingJobs(
+        graft.rag.Bm25.search(docsScan, "doc_id", "text", Seq("w1", "para"), 5))
+      assert(n == 1, s"expected the stats job only, got $n job(s)")
+      assert(plan.collect().nonEmpty)
+    }
+  }
+
+  test("TopK.search compiles nothing for a second non-unit query vector of one dimension") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import graft.rag.{AnnLsh, Similarity, TopK}
+    val emb = SparkEntry.embeddings(spark, embDir.toString)
+    val rnd = new scala.util.Random(11)
+    // norms far from 1: a folded norm would be a new literal per query
+    val (q1, q2) = (Array.fill(AnnLsh.Dim)(rnd.nextGaussian() * 3),
+      Array.fill(AnnLsh.Dim)(rnd.nextGaussian() * 5))
+    // (vec_id, score bits) in result order
+    def bits(d: DataFrame): Seq[(Long, Long)] = d.collect().toSeq.map(r =>
+      (r.getAs[Long]("vec_id"), java.lang.Double.doubleToRawLongBits(r.getAs[Double]("score"))))
+    def top(q: Array[Double]): Seq[(Long, Long)] = bits(TopK.search(emb, q, 10))
+    val first = top(q1)
+    assert(first.size == 10)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = top(q2)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "a second query vector compiled new classes")
+    // scores equal the cosine against a literal vector, bit for bit
+    for ((q, got) <- Seq(q1 -> first, q2 -> second)) {
+      val ref = emb.withColumn("score", Similarity.cosine(col("embedding"), typedLit(q)))
+        .orderBy(col("score").desc, col("vec_id").asc).limit(10)
+      assert(got == bits(ref))
+    }
   }
 }
