@@ -1,11 +1,14 @@
 package graft.text
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, SpecificInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
 /** Df-capped id-list aggregate for inverted-index builds: per group,
   * collect up to `cap` BIGINT values; a group that EXCEEDS the cap
@@ -119,6 +122,82 @@ case class CappedIdsAgg(
       c: IndexedSeq[Expression]): Expression = copy(child = c.head)
 }
 
+/** The candidate pairs of one capped posting list: a row (a_id, b_id)
+  * for every two list ENTRIES whose ids satisfy a < b strictly. Entries
+  * pair by position, so an id listed twice pairs twice with each other
+  * id and never with itself: the multiset that an explode of the list
+  * plus a self-join on the shingle with `a < b` gives, without the
+  * exploded rows or the join. A null or empty list yields no row.
+  *
+  * Cost is O(1) per emitted pair: the list is read once into a long
+  * array and the pairs stream from two cursors through one reused row.
+  * Under whole-stage codegen the iterator feeds the consuming
+  * aggregate in the same generated loop, which reads each row before
+  * asking for the next; the interpreted path projects each row before
+  * the next `next()`, so the reused row is never observed twice.
+  */
+case class PostingPairs(child: Expression) extends UnaryExpression with Generator {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an ARRAY<BIGINT> argument, got ${t.catalogString}")
+  }
+
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("a_id", LongType, nullable = false),
+    StructField("b_id", LongType, nullable = false)))
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    PostingPairs.pairs(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ids = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${ids.code}
+      |scala.collection.Iterator<InternalRow> ${ev.value} =
+      |  graft.text.PostingPairs$$.MODULE$$.pairs(${ids.isNull} ? null : ${ids.value});
+      """.stripMargin, isNull = FalseLiteral,
+      value = JavaCode.variable(ev.value.toString, classOf[Iterator[_]]))
+  }
+
+  override protected def withNewChildInternal(c: Expression): PostingPairs = copy(child = c)
+}
+
+object PostingPairs {
+
+  /** the pairs of `ids` (see [[PostingPairs]]); null → none */
+  def pairs(ids: ArrayData): Iterator[InternalRow] =
+    if (ids == null || ids.numElements() < 2) Iterator.empty
+    else new Pairs(ids.toLongArray())
+
+  private final class Pairs(ids: Array[Long]) extends Iterator[InternalRow] {
+    private[this] val row = new SpecificInternalRow(Seq(LongType, LongType))
+    private[this] val n = ids.length
+    // the next candidate entry pair is (i, j), i < j
+    private[this] var i = 0
+    private[this] var j = 1
+
+    /** moves (i, j) to the next entry pair with unequal ids */
+    private[this] def seek(): Unit =
+      while (i < n - 1 && (j == n || ids(i) == ids(j))) {
+        if (j == n) { i += 1; j = i + 1 } else j += 1
+      }
+
+    override def hasNext: Boolean = { seek(); i < n - 1 }
+
+    override def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException("no more posting pairs")
+      val x = ids(i)
+      val y = ids(j)
+      j += 1
+      row.setLong(0, math.min(x, y))
+      row.setLong(1, math.max(x, y))
+      row
+    }
+  }
+}
+
 object CappedIds {
   import org.apache.spark.sql.GraftExprBridge._
 
@@ -127,4 +206,9 @@ object CappedIds {
     */
   def cappedIds(e: Column, cap: Int): Column =
     toColumn(CappedIdsAgg(toExpression(e), cap).toAggregateExpression())
+
+  /** generator column of the (a_id, b_id) BIGINT pairs of a posting
+    * list, a < b (see [[PostingPairs]])
+    */
+  def postingPairs(ids: Column): Column = toColumn(PostingPairs(toExpression(ids)))
 }

@@ -89,34 +89,29 @@ object Corpus {
     *     the output is IDENTICAL to [[decontaminate]] (same oracle),
     *     the false positives having been removed by the exact join.
     *
-    * The filter is built by Spark's native `BloomFilterAggregate` —
-    * ONE distributed pass over the gram set returns the serialized
-    * filter (merge happens inside the aggregate; no separate driver
-    * `count()` pass, capacity comes from `expectedGrams` or, when the
-    * caller has no estimate, one counting pass). The probe is the
-    * native `BloomFilterMightContain` over a binary literal — it
-    * codegens, so the prescreen filter stays inside the train side's
-    * whole-stage-codegen span instead of breaking it with a UDF call
-    * per gram (the hottest filter of the scale path; r4 verdict
-    * Missing #2). The literal rides the task binary, which Spark
-    * ships via its own broadcast — executor-wise this is the old
-    * explicit `sc.broadcast` without the session-lifetime leak the
-    * ADVICE flagged (nothing to unpersist; the task binary's
-    * lifecycle is Spark's).
+    * The filter is a scalar subquery of the returned plan — the shape
+    * Spark's own `InjectRuntimeFilter` plans: `BloomFilterAggregate`
+    * over the benchmark gram rows, one distributed pass whose merge
+    * happens inside the aggregate, feeds the native
+    * `BloomFilterMightContain` probe. The caller's action runs the
+    * subquery first; its bits then ride the task binary as a constant,
+    * so the probe codegens inside the train side's whole-stage span
+    * (no UDF call per gram) and nothing outlives the query. Calling
+    * the operator starts no job and caches nothing.
     *
-    * Calling it runs the two jobs that produce plan INPUTS — the
-    * sizing count (skipped when `expectedGrams` > 0) and the bloom
-    * build, whose bits become a plan literal — and returns the lazy
-    * verify plan; the caller's action runs the prescreen, the exact
-    * semi-join and the per-doc aggregate. The benchmark gram set is
-    * persisted only around those two input jobs and released before
-    * returning, so the returned plan never depends on a cache.
+    * Sizing, without a job: the filter's capacity is `expectedGrams`
+    * when the caller gives one (> 0); otherwise the optimizer's size
+    * estimate of the benchmark's text column at one gram per 4 bytes
+    * (a gram starts at each word; a file scan's estimate is its
+    * compressed size, so this can land either side of the truth).
+    * Either is clamped to the session's runtime-bloom ceilings
+    * (`spark.sql.optimizer.runtime.bloomFilter.maxNumItems` and
+    * `maxNumBits`), above which `BloomFilterAggregate` refuses to run.
+    * A wrong capacity only moves the false-positive rate — more or
+    * less exact-verify work — never the output.
     *
     * @param expectedGrams caller's estimate of the benchmark's
-    *   distinct gram count, sizing the filter without a counting
-    *   pass; <= 0 → derive by counting (one extra benchmark-side
-    *   pass — fine when the benchmark is MBs, the default calling
-    *   convention)
+    *   distinct gram count; <= 0 → the plan-statistics estimate
     */
   def decontaminateBloom(train: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, n: Int = 5, fpp: Double = 0.01,
@@ -124,38 +119,24 @@ object Corpus {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
     import org.apache.spark.sql.GraftExprBridge.{toColumn, toExpression}
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    val conf = train.sparkSession.conf
+    def ceiling(name: String): Long =
+      conf.get(s"spark.sql.optimizer.runtime.bloomFilter.$name").toLong
+    val estimate =
+      if (expectedGrams > 0) BigInt(expectedGrams)
+      else bench.select(col(textCol)).queryExecution.optimizedPlan.stats.sizeInBytes / 4
+    val expected = estimate.max(1).min(ceiling("maxNumItems")).toLong
+    val numBits = math.min(
+      org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(expected, fpp),
+      ceiling("maxNumBits"))
+    // no distinct: duplicate grams set the same bits, and a semi-join
+    // needs no distinct build side
     val gramRows = benchmarkGramRows(bench, textCol, n)
-    val benchGrams = gramRows.distinct()
-    // the sizing count and the bloom build share the benchmark-side
-    // kernel — cache it for those two jobs only; unpersist in finally
-    // so a failing job cannot pin it for a resident engine's lifetime
-    benchGrams.persist()
-    val bfBytes = try {
-      val expected0 =
-        if (expectedGrams > 0) expectedGrams else math.max(benchGrams.count(), 1L)
-      // BloomFilterAggregate hard-errors above the session's runtime-
-      // bloom ceilings; clamp instead — an undersized filter only
-      // degrades fpp (more exact-verify work), never correctness
-      val conf = train.sparkSession.conf
-      val expected = math.min(expected0,
-        conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumItems").toLong)
-      val numBits = math.min(
-        org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(expected, fpp),
-        conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits").toLong)
-      // one distributed pass; the aggregate's TypedImperativeAggregate
-      // state is the filter itself, merged combine-style — the returned
-      // row is the serialized bits (bounded: numBits/8 bytes)
-      benchGrams.agg(toColumn(
-          new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-            toExpression(col("g")), Literal(expected), Literal(numBits))
-            .toAggregateExpression()).as("bf"))
-        .head().getAs[Array[Byte]](0)
-    } finally benchGrams.unpersist()
-    val prescreen = toColumn(BloomFilterMightContain(
-      Literal(bfBytes, org.apache.spark.sql.types.BinaryType),
-      toExpression(col("g"))))
-    // a semi-join needs no distinct build side: joining the gram rows
-    // saves the distinct's reduce stage
+    val bloom = gramRows.agg(toColumn(
+      new BloomFilterAggregate(toExpression(col("g")), Literal(expected), Literal(numBits))
+        .toAggregateExpression())).scalar()
+    val prescreen = toColumn(BloomFilterMightContain(toExpression(bloom), toExpression(col("g"))))
     trainHits(train, idCol, textCol, n)(
       _.filter(prescreen).join(gramRows, Seq("g"), "left_semi"))
   }

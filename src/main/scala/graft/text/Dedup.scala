@@ -553,21 +553,21 @@ object Dedup {
     *
     * `maxDf` caps the document frequency of an index shingle: a
     * boilerplate "stop shingle" appearing in d documents contributes
-    * d² candidate rows to the join — one hot shingle at 1% of a 100 TB
-    * corpus would dominate the whole shuffle. Shingles above the cap
+    * d² candidate pairs — one hot shingle at 1% of a 100 TB corpus
+    * would dominate the whole shuffle. Shingles above the cap
     * are dropped from the universe (index AND set sizes — as if they
     * did not exist), so reported Jaccard is over the capped shingle
     * space; pairs held together only by ubiquitous boilerplate lose
     * score, which is the standard trade (df-capped similarity join).
-    * The cap is also the scale bound on the candidate join: with every
+    * The cap is also the scale bound on the candidate pairs: with every
     * df ≤ maxDf, candidate rows Σ_sh df² ≤ maxDf·|index| — linear in
-    * the corpus for a fixed cap. (A PPJoin-style size-ratio prescreen
-    * on the legs was evaluated and rejected: attaching post-cap set
-    * sizes to the index rows costs a full extra exchange by id, which
-    * at this join's layout outweighs the candidate rows it would
-    * prune — the legs below reuse the capped index's single by-`sh`
-    * exchange and add none.) Returns a lazy plan (no Spark job at
-    * call time).
+    * the corpus for a fixed cap. The pairs are generated straight from
+    * each capped posting list (set intersection over partitioned
+    * posting lists, as in HERO, SIGMOD 2024), not by a self-join. (A
+    * PPJoin-style size-ratio prescreen was evaluated and rejected:
+    * attaching post-cap set sizes to the index rows costs a full extra
+    * exchange by id, which outweighs the candidate rows it would
+    * prune.) Returns a lazy plan (no Spark job at call time).
     *
     * `idCol` must be integral (tinyint, smallint, int or bigint); the
     * output ids keep its type. Any other type throws
@@ -575,9 +575,9 @@ object Dedup {
     */
   def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, maxDf: Int = 100): DataFrame = {
-    // CappedIdsAgg collects BIGINT: integral ids are cast in and back
-    // (the exploded posting id keeps the caller's id type, so the
-    // output schema is unchanged). Any other id type is refused here,
+    // CappedIdsAgg collects BIGINT: integral ids are cast in, and the
+    // output pair ids back to the caller's type, so the output schema
+    // keeps it. Any other id type is refused here,
     // before a plan is built: it would not survive the round trip
     // through long (a string id fails the cast or changes value).
     val idType = docs.select(col(idCol)).schema.head.dataType
@@ -585,8 +585,8 @@ object Dedup {
       s"ngramJaccard: id column '$idCol' is ${idType.simpleString}; " +
         "it must be an integral type (tinyint, smallint, int or bigint)")
     // the index key is the 60-bit shingle HASH, not the string: every
-    // downstream shuffle (df count, inverted-index self-join, pair agg)
-    // moves 8-byte longs instead of ~25-byte strings, and join equality
+    // downstream shuffle (capped index, pair agg, set sizes) moves
+    // 8-byte longs instead of ~25-byte strings, and join equality
     // is integer comparison. A 2^-60 collision merges two shingles —
     // negligible, and mirrored exactly by the oracle's identical hash.
     val all = graft.util.Staged.explodeOnce(spread(docs),
@@ -597,51 +597,42 @@ object Dedup {
     // values per buffer — a shingle exceeding the cap evaluates to
     // NULL and is dropped, with its state freed the moment the cap
     // breaks, so the hottest boilerplate shingle costs O(maxDf) per
-    // mapper and its occurrences die at the map-side combine. This
-    // replaces the previous df-count + anti-join shape (kept in the
-    // test sources as the reference CappedIdsSpec checks against),
-    // which needed TWO evaluations of the shingle kernel (df agg +
-    // index rebuild) and a second full-index exchange; now the kernel
-    // runs once, the index shuffles once (as bounded per-shingle
-    // lists), and the groupBy's hash partitioning on `sh` is inherited
-    // by the exploded posting rows, so the self-join legs below need no
-    // further exchange. (A count-window df-cap was tried and reverted: a
-    // window must shuffle EVERY occurrence of a hot shingle into one
-    // task before the filter discards them — re-concentrating exactly
-    // the key the cap exists to bound.)
-    // no index persist: all three consumers (sizes agg + both
-    // self-join legs) hang off the ONE groupBy(sh) exchange, which
-    // ReusedExchange dedups — they re-read its shuffle files, never
-    // re-run the kernel. The round-5 persist of the capped index was
-    // measured this round at >3× the no-persist task time at sf0.1
-    // (columnar cache encode/decode on every read).
-    // the explode + self-join below EXPANDS (Σdf² candidate pairs from
-    // a compact posting table) with no exchange of its own: it reads
-    // the groupBy(sh) shuffle, which AQE sizes by its input bytes and
-    // coalesces (to 2 tasks at sf0.1 on 4 cores), so the expansion
-    // runs that narrow. A repartition by `sh` cannot widen it: the
-    // child is already hash-partitioned on `sh`, so the planner drops
-    // it.
-    val sh = graft.util.Staged.explodeOnce(
-        all.groupBy("sh")
-          .agg(CappedIds.cappedIds(col("id").cast("long"), maxDf).as("ids"))
-          .filter(col("ids").isNotNull),
-        Seq(col("sh")), col("ids"), "id")
-      .select(col("sh"), col("id").cast(idType).as("id"))
+    // mapper and its occurrences die at the map-side combine. (The
+    // df-count + anti-join shape it replaced is kept in the test
+    // sources as the reference CappedIdsSpec checks against. A
+    // count-window df-cap was tried and reverted: a window must shuffle
+    // EVERY occurrence of a hot shingle into one task before the filter
+    // discards them — re-concentrating exactly the key the cap exists
+    // to bound.)
+    // Both consumers below read the ONE groupBy(sh) exchange (reused,
+    // never re-running the kernel), and neither joins on `sh`: the
+    // pairs come straight from each posting list (PostingPairs, Σdf²
+    // rows from Σdf list entries, aggregated map-side in the same
+    // generated loop), and the set sizes from exploding the same lists.
+    // (The explode + self-join form is kept in the test sources as the
+    // reference PostingPairsSpec checks against.) The pairs run as wide
+    // as AQE coalesces that shuffle's read (2 tasks at sf0.1 on 4
+    // cores): a repartition by `sh` is dropped by the planner, and a
+    // round-robin re-spread adds an exchange — at sf0.01 an extra AQE
+    // job per call — for a single-task expansion. No index persist: a
+    // persist of the capped index measured >3× the no-persist task time
+    // at sf0.1 (columnar cache encode/decode on every read).
+    val index = all.groupBy("sh")
+      .agg(CappedIds.cappedIds(col("id").cast("long"), maxDf).as("ids"))
     // set sizes AFTER the cap: dropped shingles leave the universe
     // entirely (index AND set sizes), the standard df-capped trade
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
-    val a = sh.select(col("id").as("a_id"), col("sh"))
-    val b = sh.select(col("id").as("b_id"), col("sh"))
-    val common = a.join(b, Seq("sh")).filter(col("a_id") < col("b_id"))
+    val sizes = graft.util.Staged.explodeOnce(index, Seq.empty, col("ids"), "id")
+      .groupBy("id").agg(count(lit(1)).as("n"))
+    index.select(CappedIds.postingPairs(col("ids")))
       .groupBy("a_id", "b_id").agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.withColumnRenamed("id", "a_id").withColumnRenamed("n", "na"), "a_id")
-      .join(sizes.withColumnRenamed("id", "b_id").withColumnRenamed("n", "nb"), "b_id")
+      .join(sizes.select(col("id").as("a_id"), col("n").as("na")), "a_id")
+      .join(sizes.select(col("id").as("b_id"), col("n").as("nb")), "b_id")
       .withColumn("jaccard",
         col("common") / (col("na") + col("nb") - col("common")).cast("double"))
       .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
+      // the index holds BIGINT ids; the output keeps the caller's type
+      .select(col("a_id").cast(idType).as("a_id"), col("b_id").cast(idType).as("b_id"),
+        col("jaccard"))
   }
 
   // ---- span-level exact substring dedup ----

@@ -346,6 +346,38 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("decontaminateBloom == decontaminate on an empty, gram-less, oversized or unsized bench") {
+    import org.apache.spark.sql.Row
+    import spark.implicits._
+    val train = (0L until 40L).map { i =>
+      (i, if (i % 4 == 0) s"the quick brown fox jumps over the lazy dog $i"
+          else s"other words in document number $i only")
+    }.toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Long, Double)].collect().toSeq.sorted
+    def same(what: String, bench: org.apache.spark.sql.DataFrame,
+        expectedGrams: Long = 0L): Seq[(Long, Long, Long, Double)] = {
+      val exact = rows(Corpus.decontaminate(train, bench, "doc_id", "text", n = 4))
+      val bloom = rows(Corpus.decontaminateBloom(train, bench, "doc_id", "text", n = 4,
+        expectedGrams = expectedGrams))
+      assert(bloom == exact, what)
+      exact
+    }
+    val full = Seq((100L, "the quick brown fox jumps over it")).toDF("doc_id", "text")
+    assert(same("empty bench", full.filter(lit(false))).isEmpty)
+    // below n words, and null: the bloom aggregate sees no row
+    val gramless = Seq((101L, "the quick brown"), (102L, null), (103L, "")).toDF("doc_id", "text")
+    assert(same("gram-less bench", gramless).isEmpty)
+    val maxItems = spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumItems").toLong
+    assert(same("expectedGrams above maxNumItems", full, expectedGrams = maxItems * 10).nonEmpty)
+    // a bench over an RDD has no size estimate: the optimizer reports
+    // its default (Long.MaxValue bytes), clamped to the ceilings
+    val unsized = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row(100L, "the quick brown fox jumps over it")), 2), full.schema)
+    assert(unsized.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(Long.MaxValue))
+    assert(same("bench without a size estimate", unsized).nonEmpty)
+  }
+
   test("removeBoilerplateLines: hot set at the cap rides a broadcast, not a plan literal") {
     import spark.implicits._
     // 2000 hot lines, cap exactly 2000: every line must still be

@@ -14,10 +14,10 @@ import graft.text.{Corpus, Dedup}
   * operators return plans. Calling one starts no Spark job (the
   * caller's action runs it), and no returned plan reads a checkpoint
   * (`LogicalRDD`, printed as `Scan ExistingRDD`) — the plan is the
-  * whole lineage. `decontaminateBloom` is the one exception by design:
-  * it runs the jobs that produce its plan inputs (sizing count, bloom
-  * build) and nothing else, and `Bm25.search` runs only its corpus
-  * stats job.
+  * whole lineage. `decontaminateBloom` holds to it too: its filter is
+  * a scalar subquery of the plan, sized without a job, so calling it
+  * starts none and persists nothing. `Bm25.search` is the exception:
+  * it runs only its corpus stats job.
   */
 class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -113,7 +113,10 @@ class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("dupSpansIncremental", () => Dedup.dupSpansIncremental(
         docs.filter(col("doc_id") % 4 =!= 0), docs.filter(col("doc_id") % 4 === 0),
         "doc_id", "text")),
-      ("embedNearDup", () => Queries.embedNearDup(spark, dir, 0.4)))
+      ("embedNearDup", () => Queries.embedNearDup(spark, dir, 0.4)),
+      ("decontaminateBloom", () => Corpus.decontaminateBloom(
+        docs.filter(col("doc_id") % 5 =!= 0), docs.filter(col("doc_id") % 5 === 0),
+        "doc_id", "text", n = 4)))
     for ((name, op) <- ops) {
       val (df, n) = countingJobs(op())
       assert(n == 0, s"$name started $n Spark job(s) when called")
@@ -124,31 +127,22 @@ class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("decontaminateBloom runs only its two input jobs: sizing count + bloom build") {
-    // AQE submits each shuffle stage as its own job; with it off, one
-    // action is one job, so the count below is the number of actions
-    val conf = spark.conf
-    val saved = conf.get("spark.sql.adaptive.enabled")
-    try {
-      conf.set("spark.sql.adaptive.enabled", "false")
-      val train = docs.filter(col("doc_id") % 5 =!= 0)
-      val bench = docs.filter(col("doc_id") % 5 === 0)
-      val (sized, nSized) = countingJobs(
-        Corpus.decontaminateBloom(train, bench, "doc_id", "text", n = 4))
-      assert(nSized == 2, s"expected count + bloom build, got $nSized job(s)")
-      assertNoCheckpoint("decontaminateBloom", sized)
-      val (given, nGiven) = countingJobs(Corpus.decontaminateBloom(
-        train, bench, "doc_id", "text", n = 4, expectedGrams = 1000L))
-      assert(nGiven == 1, s"expected the bloom build only, got $nGiven job(s)")
-      assertNoCheckpoint("decontaminateBloom(expectedGrams)", given)
-      // the bench-side cache is released before returning
-      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-      val exact = Corpus.decontaminate(train, bench, "doc_id", "text", n = 4)
-        .collect().toSet
-      assert(exact.nonEmpty)
-      assert(sized.collect().toSet == exact)
-      assert(given.collect().toSet == exact)
-    } finally conf.set("spark.sql.adaptive.enabled", saved)
+  test("decontaminateBloom starts no job when called, AQE on or off, and equals decontaminate") {
+    val train = docs.filter(col("doc_id") % 5 =!= 0)
+    val bench = docs.filter(col("doc_id") % 5 === 0)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+    val exact = rows(Corpus.decontaminate(train, bench, "doc_id", "text", n = 4))
+    assert(exact.nonEmpty)
+    for (aqe <- Seq(true, false); expected <- Seq(0L, 1000L)) withAqe(aqe) {
+      val what = s"aqe=$aqe expectedGrams=$expected"
+      val (plan, n) = countingJobs(Corpus.decontaminateBloom(
+        train, bench, "doc_id", "text", n = 4, expectedGrams = expected))
+      assert(n == 0, s"$what: started $n Spark job(s) when called")
+      assertNoCheckpoint(s"decontaminateBloom($what)", plan)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty, what)
+      assert(rows(plan) == exact, what)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty, s"$what: the action left a cache")
+    }
   }
 
   test("Bm25.search runs only its stats job, plans no Generate/Exchange, compiles once per arity") {

@@ -4,13 +4,14 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.chunk.Tokenizer
 import graft.rag.{HashEmbedder, VectorExprs}
-import graft.text.{Dedup, TextExprs}
+import graft.text.{CappedIds, Dedup, TextExprs}
 
 /** The composed Column forms (Spark higher-order functions, interpreted
   * per row) that the native kernels replaced. They are the readable
   * specification of each kernel; specs assert the kernel equal to its
   * form here. The same holds for the df-count + anti-join n-gram index
-  * that the capped-ids aggregate replaced.
+  * that the capped-ids aggregate replaced, and for the self-join over
+  * that index that the posting-pair generator replaced.
   */
 object ReferenceForms {
 
@@ -116,6 +117,43 @@ object ReferenceForms {
     val b = sh.select(col("id").as("b_id"), col("sh"))
     a.join(b, Seq("sh")).filter(col("a_id") < col("b_id"))
       .groupBy("a_id", "b_id").agg(count(lit(1)).as("common"))
+      .join(sizes.withColumnRenamed("id", "a_id").withColumnRenamed("n", "na"), "a_id")
+      .join(sizes.withColumnRenamed("id", "b_id").withColumnRenamed("n", "nb"), "b_id")
+      .withColumn("jaccard",
+        col("common") / (col("na") + col("nb") - col("common")).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select("a_id", "b_id", "jaccard")
+  }
+
+  /** `Dedup.ngramJaccard` as it was before its pairs came from the
+    * posting lists: the capped index exploded back into (sh, id) rows
+    * and self-joined on `sh` with `a_id < b_id`, the set sizes counted
+    * from the same rows. Same plan otherwise, with `Dedup`'s private
+    * `spread` inlined.
+    */
+  def ngramJaccardSelfJoin(docs: DataFrame, idCol: String, textCol: String,
+      threshold: Double, maxDf: Int = 100): DataFrame = {
+    val idType = docs.select(col(idCol)).schema.head.dataType
+    val spread = {
+      val target = docs.sparkSession.sparkContext.defaultParallelism
+      if (docs.queryExecution.toRdd.getNumPartitions >= target) docs
+      else docs.repartition(target)
+    }
+    val all = graft.util.Staged.explodeOnce(spread,
+      Seq(col(idCol).as("id")),
+      TextExprs.shingleHashes(col(textCol), distinct = true), "sh")
+    val sh = graft.util.Staged.explodeOnce(
+        all.groupBy("sh")
+          .agg(CappedIds.cappedIds(col("id").cast("long"), maxDf).as("ids"))
+          .filter(col("ids").isNotNull),
+        Seq(col("sh")), col("ids"), "id")
+      .select(col("sh"), col("id").cast(idType).as("id"))
+    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
+    val a = sh.select(col("id").as("a_id"), col("sh"))
+    val b = sh.select(col("id").as("b_id"), col("sh"))
+    val common = a.join(b, Seq("sh")).filter(col("a_id") < col("b_id"))
+      .groupBy("a_id", "b_id").agg(count(lit(1)).as("common"))
+    common
       .join(sizes.withColumnRenamed("id", "a_id").withColumnRenamed("n", "na"), "a_id")
       .join(sizes.withColumnRenamed("id", "b_id").withColumnRenamed("n", "nb"), "b_id")
       .withColumn("jaccard",

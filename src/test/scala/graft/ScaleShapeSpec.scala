@@ -455,7 +455,8 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // r4 verdict Missing #2: the prescreen probe was a Scala UDF —
     // it broke whole-stage codegen in the hottest filter of the scale
     // path. The rewrite probes via the native BloomFilterMightContain
-    // over a binary literal; this pins (a) no UDF anywhere in the
+    // over the filter's bits (a scalar subquery of the plan, a constant
+    // by the time the probe runs); this pins (a) no UDF anywhere in the
     // plan, (b) the probe present as a Filter condition, (c) the
     // filter inside a WholeStageCodegen span (the formatted explain
     // marks codegen'd operators with a (codegen id)).
