@@ -327,14 +327,9 @@ class Bm25Spec extends AnyFunSuite with BeforeAndAfterAll {
     val small = Array.tabulate(n)(i => UTF8String.fromString(s"t${i % 97}"))
     val large = Array.tabulate(4 * n)(i => UTF8String.fromString(s"t${i % 97}"))
     val terms = Seq("t1", "t50", "absent", "t96")
-    def best(a: Array[UTF8String]): Long =
-      (0 until 7).map { _ =>
-        val t0 = System.nanoTime(); kernel(a, terms); System.nanoTime() - t0
-      }.min
-    (0 until 5).foreach { _ => kernel(small, terms); kernel(large, terms) } // JIT
-    val ratio = best(large).toDouble / best(small).toDouble
+    val r = ratio(() => kernel(small, terms), () => kernel(large, terms))
     // linear reads ~4; quadratic would read ~16
-    assert(ratio < 8.0, s"4n/n time ratio $ratio")
+    assert(r < 8.0, s"4n/n time ratio $r")
   }
 
   // ---- RRF fusion ----

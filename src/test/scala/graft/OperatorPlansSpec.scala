@@ -127,7 +127,7 @@ class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("decontaminateBloom starts no job when called, AQE on or off, and equals decontaminate") {
+  test("decontaminateBloom starts no job when called and equals decontaminate") {
     val train = docs.filter(col("doc_id") % 5 =!= 0)
     val bench = docs.filter(col("doc_id") % 5 === 0)
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
