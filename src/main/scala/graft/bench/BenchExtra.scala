@@ -1,14 +1,18 @@
 package graft.bench
 
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Per-query profiler, not an artifact of record (graft.Bench and
   * perfbench are). For each named query this main runs one warm pass
   * then `reps` timed passes and reports, per query: min seconds,
   * Spark job count, stage count,
-  * summed executor task time, and shuffle bytes — the numbers that
-  * separate "too many jobs/exchanges" from "slow per-task compute".
+  * summed executor task time, shuffle bytes, and the classes Janino
+  * compiled in the warm pass and in the best pass — the numbers that
+  * separate "too many jobs/exchanges" from "slow per-task compute"
+  * from "recompiling generated code". Each query's jobs and stages
+  * carry the query name as their call site.
   * Kernel-phase timing is perfbench's (`--trace 1`, `extract.*_us`).
   *
   * Usage: sbt -batch "runMain graft.bench.BenchExtra [query ...]"
@@ -75,10 +79,14 @@ object BenchExtra {
     val names =
       if (args.nonEmpty) args.toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    println(f"${"query"}%-24s ${"sec"}%8s ${"jobs"}%5s ${"stages"}%7s ${"taskSec"}%8s ${"shufRdMB"}%9s ${"shufWrMB"}%9s")
+    println(f"${"query"}%-24s ${"sec"}%8s ${"jobs"}%5s ${"stages"}%7s ${"taskSec"}%8s ${"shufRdMB"}%9s ${"shufWrMB"}%9s ${"warmCls"}%8s ${"cls"}%5s")
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       sc.setJobDescription(s"bench-extra: $name")
+      // adaptive stages run from a pool thread that copies these
+      // properties; without it they are named after that thread's frame
+      sc.setCallSite(name)
       explainDir.foreach { dir =>
         val df = fn(spark, sfDir)
         // execute first: an unexecuted AQE plan shows duplicated
@@ -92,26 +100,30 @@ object BenchExtra {
         java.nio.file.Files.createDirectories(p.getParent)
         java.nio.file.Files.write(p, txt.getBytes("UTF-8"))
       }
+      val c0 = compiles
       fn(spark, sfDir).count() // warm: plan + codegen + JIT
+      val warmCls = compiles - c0
       var best = Double.MaxValue
-      var bm: (Int, Int, Long, Long, Long) = (0, 0, 0L, 0L, 0L)
+      var bm: (Int, Int, Long, Long, Long, Long) = (0, 0, 0L, 0L, 0L, 0L)
       var bestStages = Seq.empty[String]
       (1 to reps).foreach { _ =>
         ListenerBusDrain.drain(sc)
         m.reset()
+        val c1 = compiles
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val sec = (System.nanoTime() - t0) / 1e9
         ListenerBusDrain.drain(sc)
         if (sec < best) {
           best = sec
-          bm = (m.jobs, m.stages, m.taskTimeMs, m.shuffleRead, m.shuffleWrite)
+          bm = (m.jobs, m.stages, m.taskTimeMs, m.shuffleRead, m.shuffleWrite, compiles - c1)
           bestStages = m.stageDetail.toList
         }
       }
-      println(f"$name%-24s $best%8.3f ${bm._1}%5d ${bm._2}%7d ${bm._3 / 1e3}%8.2f ${bm._4 / 1e6}%9.2f ${bm._5 / 1e6}%9.2f")
+      println(f"$name%-24s $best%8.3f ${bm._1}%5d ${bm._2}%7d ${bm._3 / 1e3}%8.2f ${bm._4 / 1e6}%9.2f ${bm._5 / 1e6}%9.2f $warmCls%8d ${bm._6}%5d")
       if (printStages) bestStages.foreach(println)
       sc.setJobDescription(null)
+      sc.clearCallSite()
     }
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft.rag
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.store.Snapshot
 
 /** IVF-style ANN (inverted-file coarse quantizer, as in FAISS's
   * IVF-Flat, public design): assign every vector to its nearest
@@ -22,15 +23,12 @@ object AnnIvf {
 
   /** Centroid tables are per-corpus-snapshot artifacts: a resident
     * engine must not re-run the training/collect job on every
-    * `search()` call. Cache key = the analyzed plan's semanticHash
-    * (same source + same projection) PLUS the scan's resolved file
-    * list — appending to a parquet directory adds part files, so a
-    * re-read of the same path after an append/overwrite misses the
-    * cache and retrains instead of silently serving pre-append
-    * centroids (the file list is already resolved in the relation; no
-    * extra listing job). Residual alias: an in-place byte rewrite of
-    * an identically-named file — which no parquet writer in this
-    * engine produces — still needs `invalidateCentroids()`. Bounded: a
+    * `search()` call. Cache key = `graft.store.Snapshot.key`: the
+    * analyzed plan's semanticHash (same source + same projection) plus
+    * each data file's path, length and mtime from the scan's resolved
+    * file index, so a re-read of the same path after an append or an
+    * in-place rewrite misses the cache and retrains instead of silently
+    * serving pre-append centroids (no extra listing job). Bounded: a
     * table this size (≤ 64 entries × nCells × dim doubles) can never
     * grow into a driver-memory risk; on overflow the whole cache is
     * dropped and re-trained lazily.
@@ -45,21 +43,14 @@ object AnnIvf {
   private[graft] def cachedArtifact[T <: AnyRef](emb: DataFrame, params: String)(
       train: => T): T = {
     if (centroidCache.size > 64) centroidCache.clear()
-    // 256-bit digest of the resolved file list — a 32-bit hash could
-    // collide across successive overwrites of the same path and serve
-    // stale centroids, the very failure this key exists to rule out
-    val snapshot = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(emb.inputFiles.sorted.mkString("\n").getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-    val key = s"${emb.queryExecution.analyzed.semanticHash()}|$snapshot|$params"
-    centroidCache.computeIfAbsent(key, _ => train).asInstanceOf[T]
+    centroidCache.computeIfAbsent(s"${Snapshot.key(emb)}|$params", _ => train).asInstanceOf[T]
   }
 
   private def cachedCentroids(emb: DataFrame, params: String)(
       train: => Seq[Array[Double]]): Seq[Array[Double]] =
     cachedArtifact[Seq[Array[Double]]](emb, params)(train)
 
-  /** drop all cached centroid tables (corpus mutated in place) */
+  /** drop every cached per-snapshot artifact; each retrains on next use */
   def invalidateCentroids(): Unit = centroidCache.clear()
 
   /** deterministic coarse centroids: embeddings of the nCells smallest

@@ -1,6 +1,7 @@
 package graft.rag
 
 import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.InternalRow
@@ -11,6 +12,7 @@ import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.store.Snapshot
 import graft.text.Dedup
 
 /** BM25 keyword retrieval (Robertson/Spärck Jones probabilistic
@@ -40,7 +42,9 @@ import graft.text.Dedup
   * merge of the k·partitions heap rows, no global sort). At production
   * scale the exploded (term, doc_id, tf, dl) inverted index would be
   * built ONCE at write time, bucketed by term so a query reads only its
-  * terms' postings; here the bounded corpus is read per query.
+  * terms' postings; here the bounded corpus is read per query, from
+  * its resident snapshot when `docs` is a bare collection scan
+  * ([[graft.store.Snapshot.resident]]).
   */
 object Bm25 {
   import org.apache.spark.sql.GraftExprBridge._
@@ -76,7 +80,8 @@ object Bm25 {
     }
     require(unmatchable.isEmpty,
       s"query terms must be [A-Za-z0-9]+ words, got ${unmatchable.mkString(", ")}")
-    val text = docs.select(col(textCol))
+    val corpus = Snapshot.resident(docs)
+    val text = corpus.select(col(textCol))
     val collationId = text.schema.head.dataType match {
       case s: StringType => s.collationId
       case dt => throw new IllegalArgumentException(
@@ -85,23 +90,11 @@ object Bm25 {
     // the flag Spark's own `lower` reads
     val useICU = docs.sparkSession.conf.get(SQLConf.ICU_CASE_MAPPINGS_ENABLED.key).toBoolean
     val kernel = new Bm25Terms(q, collationId, useICU)
-    val nq = q.size
     // corpus stats in ONE job: per partition (N, Σdl, df per term),
-    // summed on the driver. A null text is a document of no words.
-    val partials = text.queryExecution.toRdd.mapPartitions { rows =>
-      val st = new Array[Long](2 + nq)
-      val tf = new Array[Int](nq)
-      rows.foreach { r =>
-        st(0) += 1
-        if (!r.isNullAt(0)) {
-          st(1) += kernel.count(r.getUTF8String(0), tf)
-          var j = 0
-          while (j < nq) { if (tf(j) > 0) st(2 + j) += 1; j += 1 }
-        }
-      }
-      Iterator.single(st)
-    }.collect()
-    val stats = Array.tabulate(2 + nq)(i => partials.map(_(i)).sum)
+    // summed on the driver
+    val stats = new Array[Long](2 + q.size)
+    docs.sparkSession.sparkContext.runJob(text.queryExecution.toRdd, Bm25Terms.statsTask(kernel),
+      (_: Int, st: Array[Long]) => st.indices.foreach(i => stats(i) += st(i)))
     val nDocs = stats(0)
     require(nDocs > 0, "empty corpus")
     val avgdl = stats(1).toDouble / nDocs.toDouble
@@ -117,7 +110,7 @@ object Bm25 {
     // predicate is pushed below the projection (FilterExec has no
     // subexpression elimination — the Staged.explodeOnce problem), and
     // every matching row would be read and scored twice.
-    docs.select(col(idCol).cast("long").as("doc_id"), scored.as("m"))
+    corpus.select(col(idCol).cast("long").as("doc_id"), scored.as("m"))
       .select(col("doc_id"), col("m.score").as("score"),
         col("m.n_matched").as("n_matched"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -215,6 +208,28 @@ final class Bm25Terms(terms: Seq[String], collationId: Int, useICU: Boolean)
 }
 
 object Bm25Terms {
+
+  /** the stats job's task: (N, Σdl, df per term) of one partition; a
+    * null text is a document of no words. Defined in this small class
+    * because Spark's ClosureCleaner reads the bytes of the class that
+    * defines a closure on every job.
+    */
+  def statsTask(kernel: Bm25Terms): (TaskContext, Iterator[InternalRow]) => Array[Long] =
+    (_, rows) => {
+      val nq = kernel.size
+      val st = new Array[Long](2 + nq)
+      val tf = new Array[Int](nq)
+      rows.foreach { r =>
+        st(0) += 1
+        if (!r.isNullAt(0)) {
+          st(1) += kernel.count(r.getUTF8String(0), tf)
+          var j = 0
+          while (j < nq) { if (tf(j) > 0) st(2 + j) += 1; j += 1 }
+        }
+      }
+      st
+    }
+
   private def isWord(c: Byte): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
 }

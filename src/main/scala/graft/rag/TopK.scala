@@ -2,6 +2,7 @@ package graft.rag
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.store.Snapshot
 
 /** V4 — top-k retrieval with optional metadata filter
   * (/root/reference/src/rag_engine/vector_store.py:116-179).
@@ -14,6 +15,11 @@ import org.apache.spark.sql.functions._
   * while a cluster scan is recall-1.0 and bounded by scan throughput.
   * For repeated queries at scale, AnnLsh (bucketed) cuts the scanned
   * fraction.
+  *
+  * An unfiltered search of a bare collection scan reads its resident
+  * snapshot ([[graft.store.Snapshot.resident]]). A metadata filter
+  * keeps the file scan, so the filter is pushed into the parquet reader
+  * and skips row groups by their footer statistics.
   */
 object TopK {
 
@@ -21,7 +27,8 @@ object TopK {
   def search(chunks: DataFrame, queryVec: Array[Double], k: Int,
       embeddingCol: String = "embedding", keyCol: String = "vec_id",
       metaFilter: Column = lit(true)): DataFrame = {
-    chunks.filter(metaFilter)
+    val rows = if (metaFilter == lit(true)) Snapshot.resident(chunks) else chunks
+    rows.filter(metaFilter)
       .withColumn("score", Similarity.cosineTo(col(embeddingCol), queryVec))
       .orderBy(col("score").desc, col(keyCol).asc)
       .limit(k)

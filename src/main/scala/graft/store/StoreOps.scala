@@ -1,18 +1,20 @@
 package graft.store
 
-import org.apache.spark.sql.{functions, DataFrame, SparkSession}
+import org.apache.spark.sql.{functions, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Table-maintenance operators of the vector store re-expressed
   * relationally (SURVEY.md §2.1, §2.4). The backing "collection" is a
   * partitioned parquet table of chunks; every op is a plain Catalyst
-  * plan so pushdown/pruning stay free.
+  * plan so pushdown/pruning stay free. The read ops (count, list,
+  * page) answer a bare collection scan from its resident snapshot
+  * ([[Snapshot.resident]]).
   */
 object StoreOps {
 
   /** V5 — collection count (vector_store.py:181-196). */
   def collectionCount(chunks: DataFrame): DataFrame =
-    chunks.agg(functions.count(lit(1)).as("n"))
+    Snapshot.resident(chunks).agg(functions.count(lit(1)).as("n"))
 
   /** V6 — `list_documents` (vector_store.py:198-264): group chunks by
     * document, per-doc representative metadata + chunk_count. The
@@ -22,7 +24,7 @@ object StoreOps {
     */
   def listDocuments(chunks: DataFrame, typeCol: String = "type",
       sourceCol: String = "source"): DataFrame =
-    chunks.groupBy(col("document")).agg(
+    Snapshot.resident(chunks).groupBy(col("document")).agg(
       min(col(typeCol)).as("type"),
       min(col(sourceCol)).as("source"),
       functions.count(lit(1)).as("chunk_count"))
@@ -32,7 +34,7 @@ object StoreOps {
     * Deterministic page = ORDER BY key LIMIT n OFFSET m.
     */
   def page(chunks: DataFrame, orderCol: String, offset: Int, limit: Int): DataFrame =
-    chunks.orderBy(col(orderCol)).offset(offset).limit(limit)
+    Snapshot.resident(chunks).orderBy(col(orderCol)).offset(offset).limit(limit)
 
   /** S8 — filtered delete (vector_store.py:284-308): parquet has no
     * row-level delete, so the op is the retained-set rewrite (the

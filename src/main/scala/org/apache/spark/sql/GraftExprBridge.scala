@@ -12,6 +12,10 @@ object GraftExprBridge {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** a DataFrame over a logical plan (`Dataset.ofRows` is private[sql]) */
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
   /** The exact RDD backing a `localCheckpoint()`ed Dataset (its plan is
     * a LogicalRDD over the checkpointed, persisted RDD). Lets callers
     * unpersist precisely their own checkpoint blocks — a global

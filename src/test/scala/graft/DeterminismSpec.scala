@@ -18,7 +18,9 @@ import org.scalatest.BeforeAndAfterAll
   * xxhash64-ordered TakeOrdered with a key tiebreak (AnnIvf/AnnPq),
   * which is layout-invariant, so the trained centroids/codebooks must
   * be too (centroid caches are cleared between layouts so training
-  * genuinely re-runs).
+  * genuinely re-runs). Each layout runs in its own session: a resident
+  * store snapshot (`store.Snapshot`) keeps the splits of the session
+  * that planned it, and serves no other session.
   */
 class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -33,24 +35,26 @@ class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def canonAll(names: Seq[String]): Map[String, Seq[String]] =
+  private def canonAll(s: SparkSession, names: Seq[String]): Map[String, Seq[String]] =
     names.map { n =>
-      n -> SparkEntry.queries(n)(spark, sf).collect()
+      n -> SparkEntry.queries(n)(s, sf).collect()
         .map(_.toString).sorted.toSeq
     }.toMap
 
   test("every query is invariant to scan splits and shuffle partitioning") {
     val names = SparkEntry.queries.keys.toSeq.sorted
     // layout A: many tiny scan splits, small odd shuffle count
-    spark.conf.set("spark.sql.shuffle.partitions", "5")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "131072")
+    val sa = spark.newSession()
+    sa.conf.set("spark.sql.shuffle.partitions", "5")
+    sa.conf.set("spark.sql.files.maxPartitionBytes", "131072")
     graft.rag.AnnIvf.invalidateCentroids()
-    val a = canonAll(names)
+    val a = canonAll(sa, names)
     // layout B: default-sized splits, different shuffle count
-    spark.conf.set("spark.sql.shuffle.partitions", "17")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
+    val sb = spark.newSession()
+    sb.conf.set("spark.sql.shuffle.partitions", "17")
+    sb.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
     graft.rag.AnnIvf.invalidateCentroids()
-    val b = canonAll(names)
+    val b = canonAll(sb, names)
     val diff = names.filter(n => a(n) != b(n))
     assert(diff.isEmpty, s"partition-layout-dependent queries: $diff")
   }
