@@ -7,7 +7,7 @@ import graft.extract.ExtractPipeline
 import graft.gen.TranscriptGen
 import graft.multimodal.Multimodal
 import graft.rag.{AnnIvf, AnnLsh, AnnPq, Bm25, Confidence, HashEmbedder, Hybrid, TopK}
-import graft.store.{Ids, Parquet, StoreOps}
+import graft.store.{Ids, Parquet, Snapshot, StoreOps}
 import graft.text.{Corpus, Dedup, TextOps, UrlOps}
 
 /** The operator contract (SURVEY.md §7).
@@ -1763,15 +1763,15 @@ object Queries {
 
   /** query vector = embedding of vec_id 0, as doubles (the reference
     * embeds the query text; here the query arrives pre-embedded —
-    * vector_store.py:151-179 search_with_embedding). Cached per
-    * corpus snapshot like the IVF centroids, so only the first call on
-    * a set of files runs a job — exactly one: the filter keeps one row,
-    * so `collect` scans every file in one job where `head` may scan
-    * partition by partition.
+    * vector_store.py:151-179 search_with_embedding). A per-snapshot
+    * artifact ([[Snapshot.artifact]]) like the IVF centroids, so only a
+    * session's first call on a set of files runs a job — exactly one:
+    * the filter keeps one row, so `collect` scans every file in one job
+    * where `head` may scan partition by partition.
     */
   def queryVec(s: SparkSession, dir: String): Array[Double] = {
     val emb = SparkEntry.embeddings(s, dir)
-    AnnIvf.cachedArtifact[Array[Double]](emb, "queryVec")(
+    Snapshot.artifact(emb, "queryVec")(
       emb.filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>"))
         .collect().head.getSeq[Double](0).toArray).clone()

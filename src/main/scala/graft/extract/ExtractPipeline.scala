@@ -129,6 +129,14 @@ object ExtractPipeline {
     * the parser happens to raise on null. The payload's bytes are
     * parsed where they lie (an on-heap row's own array); what a row
     * allocates is mostly the markdown copy and the row itself.
+    *
+    * Total over its input: any `Exception` becomes an `err` row. An
+    * `Error` escapes on purpose, since it says the JVM, not the row,
+    * is broken and Spark must fail the task: an `OutOfMemoryError` (the
+    * markdown buffers grow to about the payload's size, so a payload
+    * near the 2 GB row limit can exhaust the heap) or a `LinkageError`.
+    * No input raises a `StackOverflowError`: the kernel's one recursion
+    * is ReadingOrder's merge sort, log2(blocks) deep.
     */
   def extractRow(payload: UTF8String): InternalRow = {
     if (payload == null || payload.numBytes() == 0)

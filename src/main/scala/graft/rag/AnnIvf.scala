@@ -21,44 +21,12 @@ object AnnIvf {
   val NCells = 16
   val NProbe = 2
 
-  /** Centroid tables are per-corpus-snapshot artifacts: a resident
-    * engine must not re-run the training/collect job on every
-    * `search()` call. Cache key = `graft.store.Snapshot.key`: the
-    * analyzed plan's semanticHash (same source + same projection) plus
-    * each data file's path, length and mtime from the scan's resolved
-    * file index, so a re-read of the same path after an append or an
-    * in-place rewrite misses the cache and retrains instead of silently
-    * serving pre-append centroids (no extra listing job). Bounded: a
-    * table this size (≤ 64 entries × nCells × dim doubles) can never
-    * grow into a driver-memory risk; on overflow the whole cache is
-    * dropped and re-trained lazily.
-    */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  /** generic per-corpus-snapshot artifact cache — shared by the IVF
-    * centroid tables, the PQ codebooks (AnnPq) and the retrieval
-    * queries' query vector (`Queries.queryVec`).
-    */
-  private[graft] def cachedArtifact[T <: AnyRef](emb: DataFrame, params: String)(
-      train: => T): T = {
-    if (centroidCache.size > 64) centroidCache.clear()
-    centroidCache.computeIfAbsent(s"${Snapshot.key(emb)}|$params", _ => train).asInstanceOf[T]
-  }
-
-  private def cachedCentroids(emb: DataFrame, params: String)(
-      train: => Seq[Array[Double]]): Seq[Array[Double]] =
-    cachedArtifact[Seq[Array[Double]]](emb, params)(train)
-
-  /** drop every cached per-snapshot artifact; each retrains on next use */
-  def invalidateCentroids(): Unit = centroidCache.clear()
-
   /** deterministic coarse centroids: embeddings of the nCells smallest
-    * keys, as doubles. Cached per corpus snapshot (see centroidCache).
+    * keys, as doubles. Trained once per snapshot ([[Snapshot.artifact]]).
     */
   def centroids(emb: DataFrame, keyCol: String = "vec_id",
       embeddingCol: String = "embedding", nCells: Int = NCells): Seq[Array[Double]] =
-    cachedCentroids(emb, s"first|$nCells|$keyCol|$embeddingCol") {
+    Snapshot.artifact(emb, s"first|$nCells|$keyCol|$embeddingCol") {
       // first nCells rows by key — works for any orderable key domain
       // (not just dense 0-based ids)
       val cents = emb.orderBy(col(keyCol)).limit(nCells)
@@ -130,7 +98,7 @@ object AnnIvf {
   def kmeansCentroids(emb: DataFrame, nCells: Int = NCells, iters: Int = 5,
       maxSample: Int = 4096, keyCol: String = "vec_id",
       embeddingCol: String = "embedding"): Seq[Array[Double]] =
-    cachedCentroids(emb, s"kmeans|$nCells|$iters|$maxSample|$keyCol|$embeddingCol") {
+    Snapshot.artifact(emb, s"kmeans|$nCells|$iters|$maxSample|$keyCol|$embeddingCol") {
       kmeansTrain(emb, nCells, iters, maxSample, keyCol, embeddingCol)
     }
 

@@ -42,14 +42,13 @@ object AnnPq {
   val M = 8 // subspaces
   val Ks = 32 // centroids per subspace (256 at production scale)
 
-  /** deterministic per-subspace L2 k-means codebooks, cached per
-    * corpus snapshot (same cache/key discipline as AnnIvf.centroids).
+  /** deterministic per-subspace L2 k-means codebooks, trained once per
+    * snapshot ([[graft.store.Snapshot.artifact]]).
     */
   def codebooks(emb: DataFrame, m: Int = M, ks: Int = Ks, iters: Int = 5,
       maxSample: Int = 4096, keyCol: String = "vec_id",
       embeddingCol: String = "embedding"): Seq[Seq[Array[Double]]] =
-    AnnIvf.cachedArtifact[Seq[Seq[Array[Double]]]](
-      emb, s"pq|$m|$ks|$iters|$maxSample|$keyCol|$embeddingCol") {
+    graft.store.Snapshot.artifact(emb, s"pq|$m|$ks|$iters|$maxSample|$keyCol|$embeddingCol") {
       val sample = AnnIvf.trainingSample(emb, maxSample, keyCol, embeddingCol)
       require(sample.nonEmpty, "PQ training needs a non-empty corpus")
       val dim = sample.head.length

@@ -206,16 +206,6 @@ class Bm25Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- kernel totality and cost ----
 
-  /** best-of-7 time ratio f(large) / f(small), the two interleaved so a
-    * burst of host load lands on both
-    */
-  private def ratio(small: () => Unit, large: () => Unit): Double = {
-    def time(f: () => Unit): Long = { val t0 = System.nanoTime(); f(); System.nanoTime() - t0 }
-    (0 until 5).foreach { _ => small(); large() } // JIT
-    val (ts, tl) = (0 until 7).map(_ => (time(small), time(large))).unzip
-    tl.min.toDouble / ts.min.toDouble
-  }
-
   private val binary = new Bm25Terms(Seq("a", "c"), CollationFactory.UTF8_BINARY_COLLATION_ID, false)
 
   private def textKernel(s: UTF8String): InternalRow =
@@ -269,7 +259,7 @@ class Bm25Spec extends AnyFunSuite with BeforeAndAfterAll {
       ("many short rows", Seq.tabulate(1 << 13)(i => UTF8String.fromString(s"c ${words(8, " ")} $i")),
         Seq.tabulate(1 << 15)(i => UTF8String.fromString(s"c ${words(8, " ")} $i"))))
     for ((shape, small, large) <- shapes) {
-      val r = ratio(() => small.foreach(textKernel), () => large.foreach(textKernel))
+      val r = Linearity.ratio(() => small.foreach(textKernel), () => large.foreach(textKernel))
       // linear reads ~4; quadratic would read ~16
       assert(r < 8.0, s"$shape: 4n/n time ratio $r")
     }
@@ -279,10 +269,10 @@ class Bm25Spec extends AnyFunSuite with BeforeAndAfterAll {
     def text(n: Int) = UTF8String.fromString((0 until n).map(i => s"w$i,").mkString(" "))
     val small = text(1 << 16)
     val large = text(1 << 18)
-    val r = ratio(() => TextKernels.asciiWords(small), () => TextKernels.asciiWords(large))
+    val r = Linearity.ratio(() => TextKernels.asciiWords(small), () => TextKernels.asciiWords(large))
     assert(r < 8.0, s"one huge row: 4n/n time ratio $r")
     val rows = Seq.tabulate(1 << 14)(i => UTF8String.fromString(s"row $i of some words"))
-    val r2 = ratio(() => rows.take(1 << 12).foreach(TextKernels.asciiWords),
+    val r2 = Linearity.ratio(() => rows.take(1 << 12).foreach(TextKernels.asciiWords),
       () => rows.foreach(TextKernels.asciiWords))
     assert(r2 < 8.0, s"many short rows: 4n/n time ratio $r2")
   }
@@ -327,7 +317,7 @@ class Bm25Spec extends AnyFunSuite with BeforeAndAfterAll {
     val small = Array.tabulate(n)(i => UTF8String.fromString(s"t${i % 97}"))
     val large = Array.tabulate(4 * n)(i => UTF8String.fromString(s"t${i % 97}"))
     val terms = Seq("t1", "t50", "absent", "t96")
-    val r = ratio(() => kernel(small, terms), () => kernel(large, terms))
+    val r = Linearity.ratio(() => kernel(small, terms), () => kernel(large, terms))
     // linear reads ~4; quadratic would read ~16
     assert(r < 8.0, s"4n/n time ratio $r")
   }

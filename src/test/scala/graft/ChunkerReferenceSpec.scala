@@ -80,16 +80,6 @@ class ChunkerReferenceSpec extends AnyFunSuite {
 
   // ------------------------------------------------------ linear cost
 
-  /** best-of-7 time ratio f(large) / f(small), the two interleaved so a
-    * burst of host load lands on both
-    */
-  private def ratio(small: () => Unit, large: () => Unit): Double = {
-    def time(f: () => Unit): Long = { val t0 = System.nanoTime(); f(); System.nanoTime() - t0 }
-    (0 until 5).foreach { _ => small(); large() } // JIT
-    val (ts, tl) = (0 until 7).map(_ => (time(small), time(large))).unzip
-    tl.min.toDouble / ts.min.toDouble
-  }
-
   /** one line of `chars` characters: words and AT commands, no
     * sentence end
     */
@@ -109,7 +99,7 @@ class ChunkerReferenceSpec extends AnyFunSuite {
         (shape, small, large) <- Seq(
           ("one huge line", hugeLine(1 << 18), hugeLine(1 << 20)),
           ("many lines", manyLines(1 << 12), manyLines(1 << 14)))) {
-      val r = ratio(() => f(small), () => f(large))
+      val r = Linearity.ratio(() => f(small), () => f(large))
       // linear reads ~4; quadratic would read ~16
       assert(r < 8.0, s"$name, $shape: 4n/n time ratio $r")
     }
@@ -122,7 +112,7 @@ class ChunkerReferenceSpec extends AnyFunSuite {
         (shape, small, large) <- Seq(
           ("one huge line", hugeLine(1 << 18), hugeLine(1 << 20)),
           ("many lines", manyLines(1 << 12), manyLines(1 << 14)))) {
-      val r = ratio(() => f(small), () => f(large))
+      val r = Linearity.ratio(() => f(small), () => f(large))
       assert(r < 8.0, s"$name, $shape: 4n/n time ratio $r")
     }
   }

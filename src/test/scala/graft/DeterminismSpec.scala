@@ -17,10 +17,10 @@ import org.scalatest.BeforeAndAfterAll
   * The kmeans/PQ family is INCLUDED: its training sample is
   * xxhash64-ordered TakeOrdered with a key tiebreak (AnnIvf/AnnPq),
   * which is layout-invariant, so the trained centroids/codebooks must
-  * be too (centroid caches are cleared between layouts so training
-  * genuinely re-runs). Each layout runs in its own session: a resident
-  * store snapshot (`store.Snapshot`) keeps the splits of the session
-  * that planned it, and serves no other session.
+  * be too. Each layout runs in its own session: the per-snapshot
+  * registry (`store.Snapshot`) keeps a resident copy and the trained
+  * artifacts per session, so layout B plans its own copy under its
+  * splits and retrains its centroids and codebooks.
   */
 class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -47,13 +47,11 @@ class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sa = spark.newSession()
     sa.conf.set("spark.sql.shuffle.partitions", "5")
     sa.conf.set("spark.sql.files.maxPartitionBytes", "131072")
-    graft.rag.AnnIvf.invalidateCentroids()
     val a = canonAll(sa, names)
     // layout B: default-sized splits, different shuffle count
     val sb = spark.newSession()
     sb.conf.set("spark.sql.shuffle.partitions", "17")
     sb.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
-    graft.rag.AnnIvf.invalidateCentroids()
     val b = canonAll(sb, names)
     val diff = names.filter(n => a(n) != b(n))
     assert(diff.isEmpty, s"partition-layout-dependent queries: $diff")

@@ -227,18 +227,12 @@ class ExtractGoldenSpec extends AnyFunSuite {
     val small = blocksOf(1 << 13)
     val large = blocksOf(1 << 15)
     // identify once, then one level lookup per block (the emitter's use)
-    def run(bs: Blocks): Long = {
+    var sink = 0L
+    def run(bs: Blocks): () => Unit = () => {
       val h = Headers.identify(bs)
-      var acc = 0L
-      (0 until bs.size).foreach(i => acc += h.level(bs, i))
-      acc
+      (0 until bs.size).foreach(i => sink += h.level(bs, i))
     }
-    def best(bs: Blocks): Long =
-      (0 until 7).map { _ =>
-        val t0 = System.nanoTime(); run(bs); System.nanoTime() - t0
-      }.min
-    (0 until 5).foreach { _ => run(small); run(large) } // JIT
-    val ratio = best(large).toDouble / best(small).toDouble
+    val ratio = Linearity.ratio(run(small), run(large))
     // linear reads ~4; quadratic would read ~16
     assert(ratio < 8.0, s"4n/n time ratio $ratio")
   }
@@ -305,14 +299,7 @@ class ExtractGoldenSpec extends AnyFunSuite {
     }
     val small = pageOf(1 << 12)
     val large = pageOf(1 << 14)
-    def time(bs: Blocks): Long = {
-      val t0 = System.nanoTime(); ReadingOrder.order(bs); System.nanoTime() - t0
-    }
-    (0 until 5).foreach { _ => time(small); time(large) } // JIT
-    // best of 7, the two sizes interleaved so a burst of host load
-    // lands on both
-    val (ts, tl) = (0 until 7).map(_ => (time(small), time(large))).unzip
-    val ratio = tl.min.toDouble / ts.min.toDouble
+    val ratio = Linearity.ratio(() => ReadingOrder.order(small), () => ReadingOrder.order(large))
     // n log² n (a binary search per comparison) reads ~5.4; the linear
     // probe (n² log n) read 19
     assert(ratio < 8.0, s"4n/n time ratio $ratio")

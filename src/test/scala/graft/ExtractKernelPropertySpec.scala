@@ -163,17 +163,22 @@ class ExtractKernelPropertySpec extends AnyFunSuite {
     }
   }
 
-  // ------------------------------------------------------ linear cost
-
-  /** best-of-7 time ratio f(large) / f(small), the two interleaved so a
-    * burst of host load lands on both
-    */
-  private def ratio(small: () => Unit, large: () => Unit): Double = {
-    def time(f: () => Unit): Long = { val t0 = System.nanoTime(); f(); System.nanoTime() - t0 }
-    (0 until 5).foreach { _ => small(); large() } // JIT
-    val (ts, tl) = (0 until 7).map(_ => (time(small), time(large))).unzip
-    tl.min.toDouble / ts.min.toDouble
+  test("extractRow returns a row on its deepest inputs, never an exception") {
+    val cases = Seq(
+      "a 4 MB tag path" -> cat("H\t", "div/" * (1 << 20), "p\t0\tcontent"),
+      "10^4 distinct font sizes" -> utf8((0 until 10000).map(i =>
+        s"P0\t0,$i,100,${i + 1}\t${1.0 + i * 0.25}\t0\th$i").mkString("\n")),
+      "a 10 MB P line" -> cat("P0\t1,2,3,4\t10\t0\t", "é中😀x" * (1 << 20)),
+      "a 4 MB plain line" -> utf8("x " * (1 << 21)))
+    cases.foreach { case (what, p) =>
+      val r = ExtractPipeline.extractRow(UTF8String.fromBytes(p))
+      val (status, md, err) = (r.getUTF8String(0).toString, r.getUTF8String(1), r.getUTF8String(2))
+      assert(status == "ok" || status == "err", what)
+      assert(if (status == "ok") err.numBytes == 0 && md.numBytes > 0 else err.numBytes > 0, what)
+    }
   }
+
+  // ------------------------------------------------------ linear cost
 
   /** n lines of every kind, tab-free 'P' prose among them */
   private def mixedPayload(n: Int): Array[Byte] = utf8((0 until n).map { i =>
@@ -189,16 +194,16 @@ class ExtractKernelPropertySpec extends AnyFunSuite {
   test("block parsing cost is linear in lines and in line length (n vs 4n)") {
     val bs = new Blocks
     def parse(p: Array[Byte]) = () => { BlockParser.parseInto(bs, p, 0, p.length); () }
-    val byLines = ratio(parse(mixedPayload(1 << 12)), parse(mixedPayload(1 << 14)))
+    val byLines = Linearity.ratio(parse(mixedPayload(1 << 12)), parse(mixedPayload(1 << 14)))
     // a linear parse reads ~4; a per-line scan to the payload's end ~16
     assert(byLines < 8.0, s"4n/n time ratio over lines $byLines")
     // tab-free 'P' prose only: a field scan that ran past its line would
     // cross every later line
     def prose(n: Int) = utf8((0 until n).map(i => s"P$i prose without a tab").mkString("\n"))
-    val byProse = ratio(parse(prose(1 << 12)), parse(prose(1 << 14)))
+    val byProse = Linearity.ratio(parse(prose(1 << 12)), parse(prose(1 << 14)))
     assert(byProse < 8.0, s"4n/n time ratio over tab-free 'P' lines $byProse")
     def longLine(bytes: Int) = cat("P0\t1,2,3,4\t10\t0\t", "é中😀x" * (bytes / 10))
-    val byLength = ratio(parse(longLine(1 << 18)), parse(longLine(1 << 20)))
+    val byLength = Linearity.ratio(parse(longLine(1 << 18)), parse(longLine(1 << 20)))
     assert(byLength < 8.0, s"4n/n time ratio over line length $byLength")
   }
 
@@ -211,7 +216,7 @@ class ExtractKernelPropertySpec extends AnyFunSuite {
       ReadingOrder.order(bs)
       () => { MarkdownEmitter.emitNormalized(bs, levels); () }
     }
-    val r = ratio(prepared(1 << 12), prepared(1 << 14))
+    val r = Linearity.ratio(prepared(1 << 12), prepared(1 << 14))
     assert(r < 8.0, s"4n/n time ratio $r")
   }
 
@@ -222,7 +227,7 @@ class ExtractKernelPropertySpec extends AnyFunSuite {
       BlockParser.parseInto(bs, p, 0, p.length)
       () => { assert(!Boilerplate.isBoilerplate(bs, 0)); () }
     }
-    val r = ratio(block(1 << 18), block(1 << 20))
+    val r = Linearity.ratio(block(1 << 18), block(1 << 20))
     assert(r < 8.0, s"4n/n time ratio $r")
   }
 }

@@ -182,16 +182,6 @@ class PostingPairsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- linear cost ----
 
-  /** best-of-7 time ratio f(large) / f(small), the two interleaved so a
-    * burst of host load lands on both
-    */
-  private def ratio(small: () => Unit, large: () => Unit): Double = {
-    def time(f: () => Unit): Long = { val t0 = System.nanoTime(); f(); System.nanoTime() - t0 }
-    (0 until 5).foreach { _ => small(); large() } // JIT
-    val (ts, tl) = (0 until 7).map(_ => (time(small), time(large))).unzip
-    tl.min.toDouble / ts.min.toDouble
-  }
-
   test("the generator's cost is linear in the pairs it emits (n vs 4n pairs)") {
     // k ids emit k(k-1)/2 pairs: doubling k is 4x the pairs; every
     // third id repeats its predecessor, so the equal-id skip is timed too
@@ -203,7 +193,7 @@ class PostingPairsSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(sum != 42L); ()
       }
     }
-    val r = ratio(drainAll(1 << 10), drainAll(1 << 11))
+    val r = Linearity.ratio(drainAll(1 << 10), drainAll(1 << 11))
     assert(r < 8.0, s"4n/n time ratio over emitted pairs $r")
   }
 
@@ -214,7 +204,7 @@ class PostingPairsSpec extends AnyFunSuite with BeforeAndAfterAll {
       def run(t: UTF8String) = () => {
         assert(TextKernels.shingleHashes(t, distinct, 3).numElements() > 0); ()
       }
-      val r = ratio(run(text(1 << 14)), run(text(1 << 16)))
+      val r = Linearity.ratio(run(text(1 << 14)), run(text(1 << 16)))
       assert(r < 8.0, s"4n/n time ratio (distinct=$distinct) $r")
     }
   }

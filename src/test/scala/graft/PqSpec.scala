@@ -94,8 +94,9 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
     val a = AnnPq.codebooks(emb)
     val b = AnnPq.codebooks(emb)
     assert(a eq b) // cache hit returns the same artifact
-    AnnIvf.invalidateCentroids()
-    val c = AnnPq.codebooks(emb)
+    // a new session over the same path has its own registry entry
+    val c = AnnPq.codebooks(spark.newSession().read.parquet(s"$sf/embeddings.parquet"))
+    assert(c ne a) // a retrain happened
     assert(a.zip(c).forall { case (x, y) =>
       x.zip(y).forall { case (u, w) => u.sameElements(w) }
     }) // retraining reproduces identical codebooks

@@ -500,7 +500,6 @@ class ScaleShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("IVF centroid training is cached per corpus snapshot") {
-    graft.rag.AnnIvf.invalidateCentroids()
     val e = SparkEntry.embeddings(spark, sf)
     val c1 = graft.rag.AnnIvf.kmeansCentroids(e)
     val c2 = graft.rag.AnnIvf.kmeansCentroids(SparkEntry.embeddings(spark, sf))

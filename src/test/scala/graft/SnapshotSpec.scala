@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import graft.rag.{AnnIvf, Bm25, TopK}
+import graft.rag.{Bm25, TopK}
 import graft.store.{Snapshot, StoreOps}
 
 /** The store's read side over resident snapshots (`Snapshot.resident`):
@@ -163,7 +163,7 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpark
     val path = write(chunks(0, 120), 1)
     val trained = new AtomicInteger
     def artifact(df: DataFrame): Integer =
-      AnnIvf.cachedArtifact[Integer](df, "snapshot-spec")(Integer.valueOf(trained.incrementAndGet()))
+      Snapshot.artifact[Integer](df, "snapshot-spec")(Integer.valueOf(trained.incrementAndGet()))
     def count(df: DataFrame): Long = StoreOps.collectionCount(df).head().getLong(0)
     val before = persisted
     val scan1 = spark.read.parquet(path)
