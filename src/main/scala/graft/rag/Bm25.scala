@@ -81,8 +81,11 @@ object Bm25 {
     require(unmatchable.isEmpty,
       s"query terms must be [A-Za-z0-9]+ words, got ${unmatchable.mkString(", ")}")
     val corpus = Snapshot.resident(docs)
-    val text = corpus.select(col(textCol))
-    val collationId = text.schema.head.dataType match {
+    // the stats job scans the same (id, text) columns as the scoring
+    // plan, so over a resident copy both share one generated column
+    // accessor and batch filter instead of compiling a pair each
+    val idText = corpus.select(col(idCol), col(textCol))
+    val collationId = idText.schema(1).dataType match {
       case s: StringType => s.collationId
       case dt => throw new IllegalArgumentException(
         s"text column '$textCol' must be a STRING, got ${dt.catalogString}")
@@ -93,8 +96,11 @@ object Bm25 {
     // corpus stats in ONE job: per partition (N, Σdl, df per term),
     // summed on the driver
     val stats = new Array[Long](2 + q.size)
-    docs.sparkSession.sparkContext.runJob(text.queryExecution.toRdd, Bm25Terms.statsTask(kernel),
-      (_: Int, st: Array[Long]) => st.indices.foreach(i => stats(i) += st(i)))
+    withSessionArtifacts(docs.sparkSession) {
+      docs.sparkSession.sparkContext.runJob(idText.queryExecution.toRdd,
+        Bm25Terms.statsTask(kernel),
+        (_: Int, st: Array[Long]) => st.indices.foreach(i => stats(i) += st(i)))
+    }
     val nDocs = stats(0)
     require(nDocs > 0, "empty corpus")
     val avgdl = stats(1).toDouble / nDocs.toDouble
@@ -209,10 +215,10 @@ final class Bm25Terms(terms: Seq[String], collationId: Int, useICU: Boolean)
 
 object Bm25Terms {
 
-  /** the stats job's task: (N, Σdl, df per term) of one partition; a
-    * null text is a document of no words. Defined in this small class
-    * because Spark's ClosureCleaner reads the bytes of the class that
-    * defines a closure on every job.
+  /** the stats job's task over (id, text) rows: (N, Σdl, df per term)
+    * of one partition; a null text is a document of no words. Defined
+    * in this small class because Spark's ClosureCleaner reads the bytes
+    * of the class that defines a closure on every job.
     */
   def statsTask(kernel: Bm25Terms): (TaskContext, Iterator[InternalRow]) => Array[Long] =
     (_, rows) => {
@@ -221,8 +227,8 @@ object Bm25Terms {
       val tf = new Array[Int](nq)
       rows.foreach { r =>
         st(0) += 1
-        if (!r.isNullAt(0)) {
-          st(1) += kernel.count(r.getUTF8String(0), tf)
+        if (!r.isNullAt(1)) {
+          st(1) += kernel.count(r.getUTF8String(1), tf)
           var j = 0
           while (j < nq) { if (tf(j) > 0) st(2 + j) += 1; j += 1 }
         }

@@ -20,14 +20,21 @@ object StoreOps {
     * document, per-doc representative metadata + chunk_count. The
     * reference takes the dict-iteration "first"; a distributed engine
     * needs a deterministic representative → min().
-    * One hash aggregate, map-side partial combine, no sort.
+    * Planned as two ObjectHashAggregates, partial and final, around
+    * one exchange by document: the string mins are [[MinString]]s, so
+    * no Sort and no SortAggregate is planned (Spark's `min` over a
+    * string would plan both, each side of the exchange).
     */
   def listDocuments(chunks: DataFrame, typeCol: String = "type",
-      sourceCol: String = "source"): DataFrame =
+      sourceCol: String = "source"): DataFrame = {
+    import org.apache.spark.sql.GraftExprBridge.{toColumn, toExpression}
+    def minString(c: String) =
+      toColumn(MinString(toExpression(col(c))).toAggregateExpression())
     Snapshot.resident(chunks).groupBy(col("document")).agg(
-      min(col(typeCol)).as("type"),
-      min(col(sourceCol)).as("source"),
-      functions.count(lit(1)).as("chunk_count"))
+      minString(typeCol).as("type"),
+      minString(sourceCol).as("source"),
+      toColumn(RowCount().toAggregateExpression()).as("chunk_count"))
+  }
 
   /** S7 — paginated scan (vector_store.py:198-264 get() loop): only an
     * API-parity surface; in Spark the primitive is the full scan.

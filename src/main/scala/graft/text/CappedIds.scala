@@ -28,6 +28,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
   * costs O(cap) state per mapper and its occurrences are discarded at
   * the combine, never concentrated.
   *
+  * Planned as an ObjectHashAggregate, partial and final. Past Spark's
+  * per-task key threshold (`spark.sql.objectHashAggregate.sortBased.
+  * fallbackThreshold`, 128 by default) each side falls back to a
+  * sort-based merge: its hash map spills to an external sorter, so
+  * "one aggregation pass" holds per side but that pass sorts its
+  * buffers (3 more generated classes per side's key type).
+  *
   * Output-set determinism: the ARRAY ORDER is arrival order (partition
   * dependent), but a capped group's value multiset is exact and
   * complete, so any order-insensitive consumer (explode → join/agg) is
@@ -128,6 +135,9 @@ case class CappedIdsAgg(
   * id and never with itself: the multiset that an explode of the list
   * plus a self-join on the shingle with `a < b` gives, without the
   * exploded rows or the join. A null or empty list yields no row.
+  * With `withSelf`, the pairs are preceded by a row (x, x) for every
+  * entry x: counted per (a_id, b_id), those rows give each id's list
+  * count (its set size) in the same aggregate as the pair counts.
   *
   * Cost is O(1) per emitted pair: the list is read once into a long
   * array and the pairs stream from two cursors through one reused row.
@@ -136,7 +146,8 @@ case class CappedIdsAgg(
   * asking for the next; the interpreted path projects each row before
   * the next `next()`, so the reused row is never observed twice.
   */
-case class PostingPairs(child: Expression) extends UnaryExpression with Generator {
+case class PostingPairs(child: Expression, withSelf: Boolean = false)
+    extends UnaryExpression with Generator {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
@@ -149,14 +160,14 @@ case class PostingPairs(child: Expression) extends UnaryExpression with Generato
     StructField("b_id", LongType, nullable = false)))
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] =
-    PostingPairs.pairs(child.eval(input).asInstanceOf[ArrayData])
+    PostingPairs.pairs(child.eval(input).asInstanceOf[ArrayData], withSelf)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ids = child.genCode(ctx)
     ev.copy(code = code"""
       |${ids.code}
       |scala.collection.Iterator<InternalRow> ${ev.value} =
-      |  graft.text.PostingPairs$$.MODULE$$.pairs(${ids.isNull} ? null : ${ids.value});
+      |  graft.text.PostingPairs$$.MODULE$$.pairs(${ids.isNull} ? null : ${ids.value}, $withSelf);
       """.stripMargin, isNull = FalseLiteral,
       value = JavaCode.variable(ev.value.toString, classOf[Iterator[_]]))
   }
@@ -166,14 +177,18 @@ case class PostingPairs(child: Expression) extends UnaryExpression with Generato
 
 object PostingPairs {
 
-  /** the pairs of `ids` (see [[PostingPairs]]); null → none */
-  def pairs(ids: ArrayData): Iterator[InternalRow] =
-    if (ids == null || ids.numElements() < 2) Iterator.empty
-    else new Pairs(ids.toLongArray())
+  /** the pairs of `ids` (see [[PostingPairs]]); null → none. With
+    * `withSelf`, first a row (x, x) for every entry x.
+    */
+  def pairs(ids: ArrayData, withSelf: Boolean = false): Iterator[InternalRow] =
+    if (ids == null || ids.numElements() < (if (withSelf) 1 else 2)) Iterator.empty
+    else new Pairs(ids.toLongArray(), withSelf)
 
-  private final class Pairs(ids: Array[Long]) extends Iterator[InternalRow] {
+  private final class Pairs(ids: Array[Long], withSelf: Boolean) extends Iterator[InternalRow] {
     private[this] val row = new SpecificInternalRow(Seq(LongType, LongType))
     private[this] val n = ids.length
+    // self rows still to emit: entries [s, n)
+    private[this] var s = if (withSelf) 0 else n
     // the next candidate entry pair is (i, j), i < j
     private[this] var i = 0
     private[this] var j = 1
@@ -184,10 +199,16 @@ object PostingPairs {
         if (j == n) { i += 1; j = i + 1 } else j += 1
       }
 
-    override def hasNext: Boolean = { seek(); i < n - 1 }
+    override def hasNext: Boolean = s < n || { seek(); i < n - 1 }
 
     override def next(): InternalRow = {
       if (!hasNext) throw new NoSuchElementException("no more posting pairs")
+      if (s < n) {
+        row.setLong(0, ids(s))
+        row.setLong(1, ids(s))
+        s += 1
+        return row
+      }
       val x = ids(i)
       val y = ids(j)
       j += 1
@@ -208,7 +229,9 @@ object CappedIds {
     toColumn(CappedIdsAgg(toExpression(e), cap).toAggregateExpression())
 
   /** generator column of the (a_id, b_id) BIGINT pairs of a posting
-    * list, a < b (see [[PostingPairs]])
+    * list, a < b, after the (x, x) rows when `withSelf` (see
+    * [[PostingPairs]])
     */
-  def postingPairs(ids: Column): Column = toColumn(PostingPairs(toExpression(ids)))
+  def postingPairs(ids: Column, withSelf: Boolean = false): Column =
+    toColumn(PostingPairs(toExpression(ids), withSelf))
 }

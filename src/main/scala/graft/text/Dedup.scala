@@ -604,11 +604,10 @@ object Dedup {
     // EVERY occurrence of a hot shingle into one task before the filter
     // discards them — re-concentrating exactly the key the cap exists
     // to bound.)
-    // Both consumers below read the ONE groupBy(sh) exchange (reused,
-    // never re-running the kernel), and neither joins on `sh`: the
-    // pairs come straight from each posting list (PostingPairs, Σdf²
-    // rows from Σdf list entries, aggregated map-side in the same
-    // generated loop), and the set sizes from exploding the same lists.
+    // The one consumer below never joins on `sh`: the pairs come
+    // straight from each posting list (PostingPairs, Σdf² rows from
+    // Σdf list entries, aggregated map-side in the same generated
+    // loop), and the set sizes from the same lists' entries.
     // (The explode + self-join form is kept in the test sources as the
     // reference PostingPairsSpec checks against.) The pairs run as wide
     // as AQE coalesces that shuffle's read (2 tasks at sf0.1 on 4
@@ -620,15 +619,28 @@ object Dedup {
     val index = all.groupBy("sh")
       .agg(CappedIds.cappedIds(col("id").cast("long"), maxDf).as("ids"))
     // set sizes AFTER the cap: dropped shingles leave the universe
-    // entirely (index AND set sizes), the standard df-capped trade
-    val sizes = graft.util.Staged.explodeOnce(index, Seq.empty, col("ids"), "id")
-      .groupBy("id").agg(count(lit(1)).as("n"))
-    index.select(CappedIds.postingPairs(col("ids")))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("common"))
-      .join(sizes.select(col("id").as("a_id"), col("n").as("na")), "a_id")
-      .join(sizes.select(col("id").as("b_id"), col("n").as("nb")), "b_id")
+    // entirely (index AND set sizes), the standard df-capped trade.
+    // Sizes and pair counts are one aggregate: each list also emits a
+    // row (x, x) per entry, whose count is x's set size. `self` (1 on
+    // those rows; a BIGINT, so the buffer stays all-long and shares
+    // its generated classes) is computed BY the aggregate, so the
+    // optimizer cannot push the sizes/pairs split below it, and both
+    // branches read its one exchange (a filter on the keys would be
+    // pushed into each branch's generator stage and run the
+    // expansion twice).
+    val counts = index.select(CappedIds.postingPairs(col("ids"), withSelf = true))
+      .groupBy("a_id", "b_id")
+      .agg(count(lit(1)).as("common"),
+        max((col("a_id") === col("b_id")).cast("long")).as("self"))
+    // both joins read `sizes` unrenamed: one broadcast, built once
+    val sizes = counts.filter(col("self") === 1L)
+      .select(col("a_id").as("id"), col("common").as("n"))
+    val (sa, sb) = (sizes.as("sa"), sizes.as("sb"))
+    counts.filter(col("self") === 0L)
+      .join(sa, col("a_id") === col("sa.id"))
+      .join(sb, col("b_id") === col("sb.id"))
       .withColumn("jaccard",
-        col("common") / (col("na") + col("nb") - col("common")).cast("double"))
+        col("common") / (col("sa.n") + col("sb.n") - col("common")).cast("double"))
       .filter(col("jaccard") >= threshold)
       // the index holds BIGINT ids; the output keeps the caller's type
       .select(col("a_id").cast(idType).as("a_id"), col("b_id").cast(idType).as("b_id"),

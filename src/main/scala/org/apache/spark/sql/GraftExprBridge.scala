@@ -16,6 +16,17 @@ object GraftExprBridge {
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Run `f`, which starts jobs straight on the SparkContext, under
+    * the session's job artifact state, as the jobs of a Dataset action
+    * run. An executor keys its task class loader by that state, and
+    * Spark's codegen cache keys each generated class by the loader of
+    * the thread that compiles it: a task of a job started outside it
+    * runs under the default state's loader and recompiles every class
+    * the session's own tasks already hold.
+    */
+  def withSessionArtifacts[T](spark: SparkSession)(f: => T): T =
+    spark.asInstanceOf[classic.SparkSession].artifactManager.withResources(f)
+
   /** The exact RDD backing a `localCheckpoint()`ed Dataset (its plan is
     * a LogicalRDD over the checkpointed, persisted RDD). Lets callers
     * unpersist precisely their own checkpoint blocks — a global

@@ -173,6 +173,22 @@ class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally conf.set("spark.sql.adaptive.enabled", saved)
   }
 
+  test("listDocuments plans two object hash aggregates and no sort") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    withAqe(on = false) {
+      val chunks = docsScan.select((col("doc_id") % 3).cast("string").as("document"),
+        col("text").as("type"), col("text").as("source"))
+      val listed = graft.store.StoreOps.listDocuments(chunks)
+      val p = listed.queryExecution.executedPlan
+      assert(p.collect { case a: ObjectHashAggregateExec => a }.size == 2, p)
+      assert(p.collect { case s: SortExec => s; case s: SortAggregateExec => s }.isEmpty, p)
+      val want = chunks.groupBy("document")
+        .agg(min("type").as("type"), min("source").as("source"), count(lit(1)).as("chunk_count"))
+      assert(listed.collect().toSet == want.collect().toSet)
+    }
+  }
+
   test("Bm25.search runs one job when called with AQE on too") {
     // the stats partials are one job under AQE as well; a global
     // agg(...).head() there is 2 (the partial-aggregate stage is a job)
