@@ -81,11 +81,13 @@ object Bm25 {
     require(unmatchable.isEmpty,
       s"query terms must be [A-Za-z0-9]+ words, got ${unmatchable.mkString(", ")}")
     val corpus = Snapshot.resident(docs)
-    // the stats job scans the same (id, text) columns as the scoring
-    // plan, so over a resident copy both share one generated column
-    // accessor and batch filter instead of compiling a pair each
-    val idText = corpus.select(col(idCol), col(textCol))
-    val collationId = idText.schema(1).dataType match {
+    // Over a resident copy the stats job scans the scoring's (id, text)
+    // column set, so both share one generated column accessor and batch
+    // filter instead of compiling a pair each; over files it decodes the
+    // text alone.
+    val statsCols = if (corpus eq docs) Seq(col(textCol)) else Seq(col(idCol), col(textCol))
+    val statsRows = corpus.select(statsCols: _*)
+    val collationId = statsRows.schema.last.dataType match {
       case s: StringType => s.collationId
       case dt => throw new IllegalArgumentException(
         s"text column '$textCol' must be a STRING, got ${dt.catalogString}")
@@ -97,7 +99,7 @@ object Bm25 {
     // summed on the driver
     val stats = new Array[Long](2 + q.size)
     withSessionArtifacts(docs.sparkSession) {
-      docs.sparkSession.sparkContext.runJob(idText.queryExecution.toRdd,
+      docs.sparkSession.sparkContext.runJob(statsRows.queryExecution.toRdd,
         Bm25Terms.statsTask(kernel),
         (_: Int, st: Array[Long]) => st.indices.foreach(i => stats(i) += st(i)))
     }
@@ -116,12 +118,16 @@ object Bm25 {
     // predicate is pushed below the projection (FilterExec has no
     // subexpression elimination — the Staged.explodeOnce problem), and
     // every matching row would be read and scored twice.
+    // The top-k sorts rows of (doc_id, n_matched, score), the layout of
+    // the TPC-H top orders' (key, date, revenue) rows, so both compile
+    // one ordering class; the filter's span restores the column order.
     corpus.select(col(idCol).cast("long").as("doc_id"), scored.as("m"))
-      .select(col("doc_id"), col("m.score").as("score"),
-        col("m.n_matched").as("n_matched"))
+      .select(col("doc_id"), col("m.n_matched").as("n_matched"),
+        col("m.score").as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(topK)
       .filter(col("score").isNotNull)
+      .select("doc_id", "score", "n_matched")
   }
 
   /** the idf values and constants as a DuckDB-replayable SQL snippet
@@ -215,10 +221,11 @@ final class Bm25Terms(terms: Seq[String], collationId: Int, useICU: Boolean)
 
 object Bm25Terms {
 
-  /** the stats job's task over (id, text) rows: (N, Σdl, df per term)
-    * of one partition; a null text is a document of no words. Defined
-    * in this small class because Spark's ClosureCleaner reads the bytes
-    * of the class that defines a closure on every job.
+  /** the stats job's task over rows whose last column is the text:
+    * (N, Σdl, df per term) of one partition; a null text is a document
+    * of no words. Defined in this small class because Spark's
+    * ClosureCleaner reads the bytes of the class that defines a closure
+    * on every job.
     */
   def statsTask(kernel: Bm25Terms): (TaskContext, Iterator[InternalRow]) => Array[Long] =
     (_, rows) => {
@@ -227,8 +234,9 @@ object Bm25Terms {
       val tf = new Array[Int](nq)
       rows.foreach { r =>
         st(0) += 1
-        if (!r.isNullAt(1)) {
-          st(1) += kernel.count(r.getUTF8String(1), tf)
+        val text = r.numFields - 1
+        if (!r.isNullAt(text)) {
+          st(1) += kernel.count(r.getUTF8String(text), tf)
           var j = 0
           while (j < nq) { if (tf(j) > 0) st(2 + j) += 1; j += 1 }
         }

@@ -129,15 +129,15 @@ case class CappedIdsAgg(
       c: IndexedSeq[Expression]): Expression = copy(child = c.head)
 }
 
-/** The candidate pairs of one capped posting list: a row (a_id, b_id)
-  * for every two list ENTRIES whose ids satisfy a < b strictly. Entries
-  * pair by position, so an id listed twice pairs twice with each other
-  * id and never with itself: the multiset that an explode of the list
-  * plus a self-join on the shingle with `a < b` gives, without the
-  * exploded rows or the join. A null or empty list yields no row.
-  * With `withSelf`, the pairs are preceded by a row (x, x) for every
-  * entry x: counted per (a_id, b_id), those rows give each id's list
-  * count (its set size) in the same aggregate as the pair counts.
+/** The rows of one capped posting list: first a row (x, x) for every
+  * list ENTRY x, then a row (a_id, b_id) for every two entries whose
+  * ids satisfy a < b strictly. Entries pair by position, so an id
+  * listed twice pairs twice with each other id and never with itself:
+  * the multiset that an explode of the list plus a self-join on the
+  * shingle with `a < b` gives, plus the join's diagonal, without the
+  * exploded rows or the join. Counted per (a_id, b_id), the (x, x)
+  * rows give each id's list count (its set size) in the same aggregate
+  * as the pair counts. A null or empty list yields no row.
   *
   * Cost is O(1) per emitted pair: the list is read once into a long
   * array and the pairs stream from two cursors through one reused row.
@@ -146,8 +146,7 @@ case class CappedIdsAgg(
   * asking for the next; the interpreted path projects each row before
   * the next `next()`, so the reused row is never observed twice.
   */
-case class PostingPairs(child: Expression, withSelf: Boolean = false)
-    extends UnaryExpression with Generator {
+case class PostingPairs(child: Expression) extends UnaryExpression with Generator {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
@@ -160,14 +159,14 @@ case class PostingPairs(child: Expression, withSelf: Boolean = false)
     StructField("b_id", LongType, nullable = false)))
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] =
-    PostingPairs.pairs(child.eval(input).asInstanceOf[ArrayData], withSelf)
+    PostingPairs.pairs(child.eval(input).asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ids = child.genCode(ctx)
     ev.copy(code = code"""
       |${ids.code}
       |scala.collection.Iterator<InternalRow> ${ev.value} =
-      |  graft.text.PostingPairs$$.MODULE$$.pairs(${ids.isNull} ? null : ${ids.value}, $withSelf);
+      |  graft.text.PostingPairs$$.MODULE$$.pairs(${ids.isNull} ? null : ${ids.value});
       """.stripMargin, isNull = FalseLiteral,
       value = JavaCode.variable(ev.value.toString, classOf[Iterator[_]]))
   }
@@ -177,18 +176,16 @@ case class PostingPairs(child: Expression, withSelf: Boolean = false)
 
 object PostingPairs {
 
-  /** the pairs of `ids` (see [[PostingPairs]]); null → none. With
-    * `withSelf`, first a row (x, x) for every entry x.
-    */
-  def pairs(ids: ArrayData, withSelf: Boolean = false): Iterator[InternalRow] =
-    if (ids == null || ids.numElements() < (if (withSelf) 1 else 2)) Iterator.empty
-    else new Pairs(ids.toLongArray(), withSelf)
+  /** the rows of `ids` (see [[PostingPairs]]); null → none */
+  def pairs(ids: ArrayData): Iterator[InternalRow] =
+    if (ids == null || ids.numElements() == 0) Iterator.empty
+    else new Pairs(ids.toLongArray())
 
-  private final class Pairs(ids: Array[Long], withSelf: Boolean) extends Iterator[InternalRow] {
+  private final class Pairs(ids: Array[Long]) extends Iterator[InternalRow] {
     private[this] val row = new SpecificInternalRow(Seq(LongType, LongType))
     private[this] val n = ids.length
     // self rows still to emit: entries [s, n)
-    private[this] var s = if (withSelf) 0 else n
+    private[this] var s = 0
     // the next candidate entry pair is (i, j), i < j
     private[this] var i = 0
     private[this] var j = 1
@@ -228,10 +225,8 @@ object CappedIds {
   def cappedIds(e: Column, cap: Int): Column =
     toColumn(CappedIdsAgg(toExpression(e), cap).toAggregateExpression())
 
-  /** generator column of the (a_id, b_id) BIGINT pairs of a posting
-    * list, a < b, after the (x, x) rows when `withSelf` (see
-    * [[PostingPairs]])
+  /** generator column of the (a_id, b_id) BIGINT rows of a posting
+    * list: (x, x) per entry, then the pairs a < b (see [[PostingPairs]])
     */
-  def postingPairs(ids: Column, withSelf: Boolean = false): Column =
-    toColumn(PostingPairs(toExpression(ids), withSelf))
+  def postingPairs(ids: Column): Column = toColumn(PostingPairs(toExpression(ids)))
 }

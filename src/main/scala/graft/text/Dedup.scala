@@ -622,13 +622,12 @@ object Dedup {
     // entirely (index AND set sizes), the standard df-capped trade.
     // Sizes and pair counts are one aggregate: each list also emits a
     // row (x, x) per entry, whose count is x's set size. `self` (1 on
-    // those rows; a BIGINT, so the buffer stays all-long and shares
-    // its generated classes) is computed BY the aggregate, so the
-    // optimizer cannot push the sizes/pairs split below it, and both
+    // those rows) is computed BY the aggregate, so the optimizer
+    // cannot push the sizes/pairs split below it, and both
     // branches read its one exchange (a filter on the keys would be
     // pushed into each branch's generator stage and run the
     // expansion twice).
-    val counts = index.select(CappedIds.postingPairs(col("ids"), withSelf = true))
+    val counts = index.select(CappedIds.postingPairs(col("ids")))
       .groupBy("a_id", "b_id")
       .agg(count(lit(1)).as("common"),
         max((col("a_id") === col("b_id")).cast("long")).as("self"))

@@ -125,25 +125,47 @@ class EventOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("sessionize equals a per-key sequential fold on random event sets") {
     import spark.implicits._
     val rnd = new scala.util.Random(17)
-    for (round <- 1 to 3) {
+    // about 1 row in 12 has a null user_id, and 1 in 12 a null ts
+    def maybe[A](a: A): Option[A] = if (rnd.nextInt(12) == 0) None else Some(a)
+    val conf = spark.conf
+    for (round <- 1 to 3; interpreted <- Seq(false, true)) {
       val rows = (0L until 300L).map { i =>
-        (i, rnd.nextInt(8).toLong, new Timestamp(rnd.nextInt(172800) * 1000L))
+        (i, maybe(rnd.nextInt(8).toLong), maybe(new Timestamp(rnd.nextInt(172800) * 1000L)))
       }
-      val got = EventOps.sessionize(rows.toDF("event_id", "user_id", "ts"),
-        gapSeconds = 900L)
-        .select("event_id", "session_idx").as[(Long, Int)].collect().toMap
-      // reference: sort each user's events by (ts, id), fold the gap rule
+      // SessionIndex's generated code, or its interpreted evalInternal
+      val modes = Seq("spark.sql.codegen.wholeStage" -> (!interpreted).toString,
+        "spark.sql.codegen.factoryMode" -> (if (interpreted) "NO_CODEGEN" else "FALLBACK"))
+      val saved = modes.map { case (k, _) => k -> conf.getOption(k) }
+      val got = try {
+        modes.foreach { case (k, v) => conf.set(k, v) }
+        val out = EventOps.sessionize(rows.toDF("event_id", "user_id", "ts"),
+          gapSeconds = 900L).select("event_id", "session_idx")
+        val ds = out.as[(Long, Int)]
+        val result = ds.collect().toMap
+        val executed = ds.queryExecution.executedPlan.toString
+        // "*(n)" marks an operator inside a whole-stage-codegen span
+        assert(executed.contains("*(") != interpreted, executed)
+        result
+      } finally saved.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None) => conf.unset(k)
+      }
+      // reference: sort each user's events (null users one group) by
+      // (ts, id), nulls first as the sort orders them, and fold the gap
+      // rule; a null ts, or a null predecessor, opens no session
       val expected = rows.groupBy(_._2).flatMap { case (_, evs) =>
-        val sorted = evs.sortBy(e => (e._3.getTime, e._1))
+        val sorted = evs.sortBy(e => (e._3.map(_.getTime), e._1))
         var idx = 0
-        var prev = Long.MinValue
+        var prev: Option[Long] = None
         sorted.map { e =>
-          if (prev != Long.MinValue && e._3.getTime - prev > 900000L) idx += 1
-          prev = e._3.getTime
+          val t = e._3.map(_.getTime)
+          if (prev.isDefined && t.isDefined && t.get - prev.get > 900000L) idx += 1
+          prev = t
           e._1 -> idx
         }
       }
-      assert(got == expected, s"round $round")
+      assert(rows.exists(_._2.isEmpty) && rows.exists(_._3.isEmpty))
+      assert(got == expected, s"round $round interpreted=$interpreted")
     }
   }
 

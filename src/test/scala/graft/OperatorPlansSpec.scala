@@ -177,15 +177,24 @@ class OperatorPlansSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
     withAqe(on = false) {
-      val chunks = docsScan.select((col("doc_id") % 3).cast("string").as("document"),
-        col("text").as("type"), col("text").as("source"))
+      // null and empty values, and one document whose types are all
+      // null: MinString's null buffer must survive the exchange as null
+      val d = col("doc_id")
+      val none = lit(null).cast("string")
+      val chunks = docsScan.select(
+        when(d % 11 === 0, lit("all-null")).otherwise((d % 3).cast("string")).as("document"),
+        when(d % 11 === 0 || d % 5 === 0, none).otherwise(col("text")).as("type"),
+        when(d % 7 === 1, lit("")).when(d % 7 === 2, none).otherwise(col("text")).as("source"))
       val listed = graft.store.StoreOps.listDocuments(chunks)
       val p = listed.queryExecution.executedPlan
       assert(p.collect { case a: ObjectHashAggregateExec => a }.size == 2, p)
       assert(p.collect { case s: SortExec => s; case s: SortAggregateExec => s }.isEmpty, p)
       val want = chunks.groupBy("document")
         .agg(min("type").as("type"), min("source").as("source"), count(lit(1)).as("chunk_count"))
-      assert(listed.collect().toSet == want.collect().toSet)
+        .collect().toSet
+      assert(want.exists(r => r.getString(0) == "all-null" && r.isNullAt(1)), want)
+      assert(want.exists(r => r.getString(2) == ""), want)
+      assert(listed.collect().toSet == want)
     }
   }
 

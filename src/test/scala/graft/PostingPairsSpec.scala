@@ -13,8 +13,8 @@ import graft.text.{CappedIds, Dedup, PostingPairs, TextKernels}
   *
   * The generator must emit exactly the multiset of (a, b), a < b, that
   * a self-join of the list with itself gives — duplicate ids included —
-  * on both the codegen and the interpreted path, and nothing for a null
-  * or empty list. `ngramJaccard` must return the rows of its former
+  * plus one (x, x) per entry (the join's diagonal), on both the codegen
+  * and the interpreted path, and nothing for a null or empty list. `ngramJaccard` must return the rows of its former
   * explode + self-join form (`ReferenceForms.ngramJaccardSelfJoin`)
   * with bit-equal `jaccard`, over seeded and adversarial corpora, Int
   * and Long ids, several caps and thresholds, AQE on and off, and 1 and
@@ -39,12 +39,12 @@ class PostingPairsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** the self-join multiset: every ordered pair of positions i != j
-    * whose ids satisfy a < b
+    * whose ids satisfy a < b, and the diagonal i == j
     */
   private def bruteForce(ids: Seq[Long]): Seq[(Long, Long)] =
     (for {
       i <- ids.indices; j <- ids.indices
-      if i != j && ids(i) < ids(j)
+      if i == j || ids(i) < ids(j)
     } yield (ids(i), ids(j))).sorted
 
   private def drain(ids: ArrayData): Seq[(Long, Long)] =
@@ -63,7 +63,7 @@ class PostingPairsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (ids <- lists ++ random)
       assert(drain(ArrayData.toArrayData(ids.toArray)) == bruteForce(ids), ids)
     val it = PostingPairs.pairs(ArrayData.toArrayData(Array(1L, 2L)))
-    assert(it.next().getLong(1) == 2L && !it.hasNext)
+    assert(Seq.fill(3)(it.next().getLong(1)) == Seq(1L, 2L, 2L) && !it.hasNext)
     intercept[NoSuchElementException](it.next())
   }
 
@@ -183,8 +183,9 @@ class PostingPairsSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- linear cost ----
 
   test("the generator's cost is linear in the pairs it emits (n vs 4n pairs)") {
-    // k ids emit k(k-1)/2 pairs: doubling k is 4x the pairs; every
-    // third id repeats its predecessor, so the equal-id skip is timed too
+    // k ids emit k self rows and k(k-1)/2 pairs: doubling k is ~4x the
+    // rows; every third id repeats its predecessor, so the equal-id skip
+    // is timed too
     def drainAll(k: Int) = {
       val ids = ArrayData.toArrayData(Array.tabulate(k)(i => (i - i % 3 / 2).toLong))
       () => {
